@@ -22,10 +22,10 @@ ships; nothing here adds a shuffle beyond the members' own:
          │              store side never shuffles (dedup_against_store)
     line dedup          boilerplate cut against corpus-wide line
          │              counts (line_dedup_against_store)
-    accept + fold       corpus append; fingerprint/line/Bloom/MG/
-         │              quantile stores each take the wave as one
-         │              bounded delta (hot terms + length drift
-         │              tracked without re-scanning prior waves)
+    accept + fold       corpus append; line/Bloom/MG/quantile and,
+         │              last, fingerprint stores each take the wave
+         │              as one bounded delta (hot terms + length
+         │              drift tracked without re-scanning prior waves)
     compaction          every N waves: delta histories fold back to
                         O(1) dirs (operators/maintenance)
 
@@ -33,6 +33,23 @@ Per-wave cost is proportional to the WAVE: the corpus is never
 re-read (the stores carry its dedup state), the store sides of the
 probes never shuffle (bucketed layouts), and the Bloom gate removes
 most already-seen rows before the exact join even runs.
+
+Each wave relation is computed once. The wave's documents, its
+quality-passing rows and its dedup survivors are persisted, so the
+count after each fills the cache, and every later count, probe and
+store fold reads those cached rows instead of re-running the WET
+parse, quality gate, Bloom probe and fingerprint anti-join. The
+survivors keep their Bloom route as a column, so the survivor and
+Bloom-skip counts come from one aggregate. Every persisted relation
+is released before compaction (persist keeps lineage, so nothing is
+truncated).
+
+The fingerprint store is folded last. The survivors are an anti-join
+against the fingerprint table, and appending to that table refreshes
+its file index: a re-evaluation of the survivors after the append
+(an evicted cache block is recomputed from lineage) would drop every
+survivor the Bloom gate sent to the exact probe. With that fold last,
+no store's contents depend on the cache surviving.
 
 Run directly (three demo waves with overlapping content, then a
 re-run of wave 3 to show exactly-once, then compaction):
@@ -130,88 +147,115 @@ def run_wave(
     records = spark.read.schema(INGEST_SCHEMA).parquet(
         posixpath.join(p["ingest"], "records", f"batch={stats['batch']}")
     ).where(~F.col("parse_error").eqNullSafe(True))
-    docs = wet_text(records).select(
-        F.col("uri").alias("doc_id"), "text"
-    )
-    out["wave_docs"] = docs.count()
 
-    # quality gate — zero-shuffle projection
-    q = gopher_filters(docs, id_col="doc_id", min_words=min_words)
-    clean = docs.join(q.where("passes").select("doc_id"), "doc_id", "semi")
-    out["quality_pass"] = clean.count()
+    # each wave relation is evaluated ONCE (module docstring): persisted
+    # before the action that first reads it, released before compaction
+    # or when the wave fails
+    held: list[DataFrame] = []
 
-    first_wave = not spark.catalog.tableExists(fingerprint_table)
-    if first_wave:
-        # bootstrap: this wave IS the corpus seed; self-dedup via the
-        # batch operators, then build every store from the survivors
-        from syzgydb_spark.operators.dedup import dedup_exact, line_dedup
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
 
-        unique = dedup_exact(clean)
-        accepted = (
-            line_dedup(unique, min_line_chars=min_line_chars)
+    try:
+        docs = hold(wet_text(records).select(
+            F.col("uri").alias("doc_id"), "text"))
+        out["wave_docs"] = docs.count()
+
+        # quality gate — zero-shuffle projection
+        q = gopher_filters(docs, id_col="doc_id", min_words=min_words)
+        clean = hold(
+            docs.join(q.where("passes").select("doc_id"), "doc_id", "semi"))
+        out["quality_pass"] = clean.count()
+
+        if not spark.catalog.tableExists(fingerprint_table):
+            # bootstrap: this wave IS the corpus seed; self-dedup via the
+            # batch operators, then build every store from the survivors
+            from syzgydb_spark.operators.dedup import dedup_exact, line_dedup
+
+            # stores are built from the PRE-line-cut unique docs: future
+            # waves probe with their RAW text, so dedup keys must hash the
+            # same (post-cut fingerprints would never match a raw repeat)
+            unique = hold(dedup_exact(clean))
+            accepted = (
+                line_dedup(unique, min_line_chars=min_line_chars)
+                .where(F.length("clean_text") > 0)
+                .select("doc_id", F.col("clean_text").alias("text"))
+            )
+            accepted.write.mode("overwrite").parquet(p["corpus"])
+            build_fingerprint_store(unique, fingerprint_table)
+            build_line_store(unique, line_table, min_line_chars=min_line_chars)
+            build_bloom_store(unique, F.col("text"), p["bloom"],
+                              n_bits=bloom_bits)
+            build_mg_store(
+                unique.select(F.explode(word_tokens("text")).alias("term")),
+                "term", p["mg"], capacity=mg_capacity)
+            build_quantile_store(
+                unique.select(F.length("text").alias("n_chars")),
+                "n_chars", p["qs"], capacity=4096)
+            out.update(accepted=spark.read.parquet(p["corpus"]).count(),
+                       bloom_skipped=0, noop=False)
+            return out
+
+        # Bloom gate: definite-new rows (no false negatives) skip the
+        # exact store join entirely; only the "maybe seen" remainder pays
+        # it. Each survivor keeps its route in `bloom_hit`, so one
+        # aggregate gives both counts: every bloom-negative row survives,
+        # so the skipped rows are exactly the bloom-negative survivors
+        hits = probe_bloom_store(clean, p["bloom"], F.col("text"),
+                                 id_col="doc_id")
+
+        def routed(hit: bool) -> DataFrame:
+            return clean.join(
+                hits.where(F.col("bloom_hit") == hit).select("doc_id"),
+                "doc_id", "semi").withColumn("bloom_hit", F.lit(hit))
+
+        survivors = hold(routed(False).unionByName(
+            dedup_against_store(spark, routed(True), fingerprint_table)))
+        n = survivors.agg(
+            F.count("*").alias("surv"),
+            F.count(F.when(~F.col("bloom_hit"), 1)).alias("skipped"),
+        ).collect()[0]
+        out["bloom_skipped"] = n["skipped"]
+
+        # corpus-wide boilerplate cut, then accept. `accepted` counts the
+        # POST-cut rows actually appended — a survivor whose clean_text
+        # empties under the cut is filtered before the append, so the
+        # pre-cut survivor count (reported as dedup_survivors) can exceed
+        # it
+        accepted = hold(
+            line_dedup_against_store(
+                spark, survivors, line_table, min_line_chars=min_line_chars)
             .where(F.length("clean_text") > 0)
             .select("doc_id", F.col("clean_text").alias("text"))
         )
-        accepted.write.mode("overwrite").parquet(p["corpus"])
-        # stores are built from the PRE-line-cut unique docs: future
-        # waves probe with their RAW text, so dedup keys must hash the
-        # same (post-cut fingerprints would never match a raw repeat)
-        unique = unique.cache()
-        build_fingerprint_store(unique, fingerprint_table)
-        build_line_store(unique, line_table, min_line_chars=min_line_chars)
-        build_bloom_store(unique, F.col("text"), p["bloom"], n_bits=bloom_bits)
-        build_mg_store(
-            unique.select(F.explode(word_tokens("text")).alias("term")),
-            "term", p["mg"], capacity=mg_capacity)
-        build_quantile_store(
-            unique.select(F.length("text").alias("n_chars")),
-            "n_chars", p["qs"], capacity=4096)
-        out.update(accepted=spark.read.parquet(p["corpus"]).count(),
-                   bloom_skipped=0, noop=False)
-        return out
-
-    # Bloom gate: definite-new rows (no false negatives) skip the
-    # exact store join entirely; only the "maybe seen" remainder pays it
-    hits = probe_bloom_store(clean, p["bloom"], F.col("text"), id_col="doc_id")
-    definite_new = clean.join(
-        hits.where(~F.col("bloom_hit")).select("doc_id"), "doc_id", "semi")
-    maybe = clean.join(
-        hits.where(F.col("bloom_hit")).select("doc_id"), "doc_id", "semi")
-
-    survivors = definite_new.unionByName(
-        dedup_against_store(spark, maybe, fingerprint_table))
-    n_surv = survivors.count()
-    out["bloom_skipped"] = out["quality_pass"] - maybe.count()
-
-    # corpus-wide boilerplate cut, then accept. `accepted` counts the
-    # POST-cut rows actually appended — a survivor whose clean_text
-    # empties under the cut is filtered before the append, so the
-    # pre-cut survivor count (reported as dedup_survivors) can exceed it
-    accepted = (
-        line_dedup_against_store(
-            spark, survivors, line_table, min_line_chars=min_line_chars)
-        .where(F.length("clean_text") > 0)
-        .select("doc_id", F.col("clean_text").alias("text"))
-    )
-    accepted = accepted.cache()
-    n_accepted = accepted.count()
-    accepted.write.mode("append").parquet(p["corpus"])
-    accepted.unpersist()
-    # fold the wave forward as ONE bounded delta per store. Fold the
-    # PRE-line-cut survivors' fingerprints/lines: dedup keys must match
-    # what a future wave's raw text will hash to, and line counts keep
-    # accumulating boilerplate evidence (build_line_store's policy)
-    update_fingerprint_store(spark, survivors, fingerprint_table)
-    update_line_store(spark, survivors, line_table,
-                      min_line_chars=min_line_chars)
-    update_bloom_store(survivors, F.col("text"), p["bloom"])
-    update_mg_store(
-        survivors.select(F.explode(word_tokens("text")).alias("term")),
-        "term", p["mg"])
-    update_quantile_store(
-        survivors.select(F.length("text").alias("n_chars")),
-        "n_chars", p["qs"])
-    out.update(accepted=n_accepted, dedup_survivors=n_surv, noop=False)
+        n_accepted = accepted.count()
+        accepted.write.mode("append").parquet(p["corpus"])
+        # fold the wave forward as ONE bounded delta per store. Fold the
+        # PRE-line-cut survivors' fingerprints/lines: dedup keys must
+        # match what a future wave's raw text will hash to, and line
+        # counts keep accumulating boilerplate evidence
+        # (build_line_store's policy)
+        update_line_store(spark, survivors, line_table,
+                          min_line_chars=min_line_chars)
+        update_bloom_store(survivors, F.col("text"), p["bloom"])
+        update_mg_store(
+            survivors.select(F.explode(word_tokens("text")).alias("term")),
+            "term", p["mg"])
+        update_quantile_store(
+            survivors.select(F.length("text").alias("n_chars")),
+            "n_chars", p["qs"])
+        # the fingerprint store goes LAST: `survivors` anti-joins that
+        # table, and the append refreshes its file index, so any
+        # re-evaluation of `survivors` after it (an evicted cache block
+        # is recomputed from lineage) would drop every bloom-hit
+        # survivor. Folded last, no later reader depends on the cache.
+        update_fingerprint_store(spark, survivors, fingerprint_table)
+        out.update(accepted=n_accepted, dedup_survivors=n["surv"],
+                   noop=False)
+    finally:
+        for df in held:
+            df.unpersist()
 
     if compact:
         out["compacted"] = {

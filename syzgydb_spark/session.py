@@ -13,6 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MEMINFO = "/proc/meminfo"
+
+
+def _default_driver_memory() -> str:
+    """Half of this host's RAM (``MemTotal`` in /proc/meminfo), capped at
+    16g. A heap as large as RAM lets the driver JVM grow until the kernel
+    kills it on a host without swap; the cap is the old fixed default.
+    16g when /proc/meminfo is unreadable (non-Linux hosts)."""
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(16 << 10, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "syzgydb-spark",
     master: str | None = None,
@@ -58,7 +76,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -656,15 +656,18 @@ def ingest_warc_segments(spark, segments_path: str, store_path: str,
         .withColumn("n_records", F.coalesce("n_records", F.lit(0)))
         .select("path", "modification_time", "length", "n_records", "error")
     )
-    tot = ledger_rows.agg(
-        F.sum("n_records").alias("n"),
-        F.count(F.when(F.col("error").isNotNull(), 1)).alias("f"),
-    ).collect()[0]
+    # evaluated once: one row per NEW segment (bounded like `new`), so
+    # the rows are collected, totalled here, and written from the driver
+    # instead of re-running the batch scan, group-by and join for the
+    # write
+    rows = ledger_rows.collect()
     # COMMIT POINT: the batch becomes visible to readers here
-    ledger_rows.coalesce(1).write.mode("overwrite").parquet(
-        posixpath.join(ledger_dir, f"batch={token}"))
-    return {"new_segments": len(new), "n_records": int(tot["n"] or 0),
-            "n_failed": int(tot["f"]), "batch": token}
+    spark.createDataFrame(rows, ledger_rows.schema).coalesce(1).write.mode(
+        "overwrite").parquet(posixpath.join(ledger_dir, f"batch={token}"))
+    return {"new_segments": len(new),
+            "n_records": sum(r["n_records"] for r in rows),
+            "n_failed": sum(r["error"] is not None for r in rows),
+            "batch": token}
 
 
 def read_ingested_records(spark, store_path: str) -> DataFrame:

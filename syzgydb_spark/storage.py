@@ -94,11 +94,14 @@ def is_stale_scan_error(e: Exception) -> bool:
     Matched narrowly (a read failure naming a bucket data path) so
     real errors still propagate: Spark 4 surfaces the vanished file as
     FAILED_READ_FILE on the Python side (the FileNotFoundException
-    cause stays in the JVM stack), and the retry loop is bounded, so a
-    genuinely corrupt file still errors out after the retry budget."""
+    cause stays in the JVM stack) when a running scan loses it, and as
+    PATH_NOT_FOUND when ``read.parquet`` loses it while building the
+    scan; the retry loop is bounded, so a genuinely corrupt file still
+    errors out after the retry budget."""
     s = str(e)
-    return (
-        "FileNotFoundException" in s or "FAILED_READ_FILE" in s
+    return any(
+        m in s for m in
+        ("FileNotFoundException", "FAILED_READ_FILE", "PATH_NOT_FOUND")
     ) and "/data/bucket=" in s
 
 

@@ -260,9 +260,9 @@ def test_raw_construction_stale_scan_converts(spark, tmp_path, monkeypatch):
 
 
 def test_stale_scan_error_predicate():
-    """The cross-process conflict detector matches exactly the two
-    shapes Spark raises for a mid-scan-vanished data file and nothing
-    else."""
+    """The cross-process conflict detector matches exactly the shapes
+    Spark raises for a data file that vanished mid-scan or while the
+    scan was being built, and nothing else."""
     from syzgydb_spark.collection import _is_stale_scan_error
 
     assert _is_stale_scan_error(Exception(
@@ -272,6 +272,14 @@ def test_stale_scan_error_predicate():
     assert _is_stale_scan_error(Exception(
         "java.io.FileNotFoundException: File file:/tmp/x/c/data/bucket=1/"
         "v5-part-0.parquet does not exist"
+    ))
+    # read.parquet losing the file while it builds the scan
+    assert _is_stale_scan_error(Exception(
+        "[PATH_NOT_FOUND] Path does not exist: file:/tmp/x/vs/data/bucket=5/"
+        "v2-part-00001-7a48.c000.snappy.parquet. SQLSTATE: 42K03"
+    ))
+    assert not _is_stale_scan_error(Exception(
+        "[PATH_NOT_FOUND] Path does not exist: file:/tmp/x/other/part-0.parquet"
     ))
     # unrelated read failures and non-collection paths must propagate
     assert not _is_stale_scan_error(Exception(

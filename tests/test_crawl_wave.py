@@ -115,3 +115,68 @@ def test_wave_after_compaction_answers_identically(spark, tmp_path):
     assert sum(r["weight"] for r in
                read_quantile_store(spark, _store_paths(work)["qs"]).collect()) == 6
     _drop(spark, kw)
+
+
+def test_bloom_hit_survivors_reach_every_store(spark, tmp_path):
+    """A fresh doc the Bloom gate flags (a false positive) passes the
+    exact fingerprint probe and must be folded into EVERY store, not
+    just the fingerprint store. ``bloom_bits=1`` makes every probe a
+    hit, so every survivor takes the exact-probe route."""
+    from pyspark.sql import functions as F
+
+    from syzgydb_spark.operators.quantiles import read_quantile_store
+    from syzgydb_spark.operators.sketch import read_mg_store
+
+    work = str(tmp_path / "work")
+    p = _store_paths(work)
+    os.makedirs(p["segments"])
+    kw = _kw()
+
+    _demo_segment(os.path.join(p["segments"], "w1.warc"),
+                  [(f"http://a/{i}", _doc(f"page {i}")) for i in range(4)])
+    run_wave(spark, work, bloom_bits=1, **kw)
+    _demo_segment(os.path.join(p["segments"], "w2.warc"),
+                  [("http://b/x", _doc("zanzibarquokka"))])
+    r2 = run_wave(spark, work, bloom_bits=1, **kw)
+    assert (r2["accepted"], r2["dedup_survivors"], r2["bloom_skipped"]) == (1, 1, 0)
+
+    assert spark.read.parquet(p["corpus"]).count() == 5
+    assert sum(r["weight"] for r in
+               read_quantile_store(spark, p["qs"]).collect()) == 5
+    terms = {r["term"] for r in read_mg_store(spark, p["mg"]).collect()}
+    assert "zanzibarquokka" in terms
+    # two eligible lines per doc (body line + boilerplate line), 5 docs
+    assert spark.table(kw["line_table"]).agg(F.sum("n")).first()[0] == 10
+    _drop(spark, kw)
+
+
+def _cached_plans(spark) -> int:
+    """How many plans the session's CacheManager holds (its private
+    ``cachedData`` sequence, read by reflection)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_waves_release_every_cached_relation(spark, tmp_path):
+    """Neither the bootstrap wave nor an incremental wave leaves a
+    relation cached. Compared before/after, since the test session is
+    shared with other tests."""
+    work = str(tmp_path / "work")
+    p = _store_paths(work)
+    os.makedirs(p["segments"])
+    kw = _kw()
+
+    _demo_segment(os.path.join(p["segments"], "w1.warc"),
+                  [(f"http://a/{i}", _doc(f"page {i}")) for i in range(4)])
+    before = _cached_plans(spark)
+    run_wave(spark, work, **kw)
+    assert _cached_plans(spark) == before
+
+    _demo_segment(os.path.join(p["segments"], "w2.warc"),
+                  [("http://b/0", _doc("page 0")), ("http://b/x", _doc("new"))])
+    r2 = run_wave(spark, work, **kw)
+    assert r2["accepted"] == 1
+    assert _cached_plans(spark) == before
+    _drop(spark, kw)
