@@ -31,6 +31,29 @@ spanfile gets from shadow-writes + sequence numbers
 A crash between staging and the manifest flip strands orphan files
 that no reader ever sees; ``vacuum()`` removes them.
 
+Mutation protocol (reference: one per-collection RWMutex serializes
+all mutation, collection.go:199, 569-570). Every mutation —
+``add_documents``, ``update_metadata``, ``remove``, ``compact``,
+``enable_pq``, ``enable_ivf``, ``promote_paths`` — is a ``step(man)``
+function run by ``Collection._mutate``, which
+
+  1. holds an in-process per-path re-entrant lock, so same-process
+     writers wait instead of retrying (one server process with a
+     ThreadingHTTPServer is the reference's deployment shape);
+  2. hands each attempt ONE fresh manifest snapshot; the step reads,
+     merges and commits against that snapshot, so the version CAS on
+     the manifest flip (under a POSIX flock) guards the whole
+     read-merge-write span against writers in other processes;
+  3. retries on a lost CAS (``ManifestConflictError``) or a stale scan
+     (a data file reclaimed by another process's commit), with
+     jittered backoff, up to ``_MAX_COMMIT_RETRIES`` attempts, and then
+     raises ``ManifestConflictError``. Any other exception propagates.
+
+The lock is the fast path; the CAS is the correctness backstop. On a
+production cluster the whole protocol is one Delta optimistic commit
+with the same no-lost-update semantics. Readers never take the lock:
+``_raw`` re-snapshots on its own when a live scan loses a file.
+
 Schema: ``id BIGINT, vector ARRAY<...>, metadata STRING(JSON)`` with the
 vector element type set by the quantization tier (SURVEY.md §1.2):
 64→DOUBLE, 32→FLOAT, 16/8/4→INT codes in [0, 2^b-1] over a clamped
@@ -48,6 +71,7 @@ import logging
 import os
 import shutil
 import threading
+import uuid
 from dataclasses import dataclass, field, asdict
 
 logger = logging.getLogger(__name__)
@@ -61,25 +85,16 @@ from syzgydb_spark.operators import knn
 from syzgydb_spark.operators.lsh import LshIndex
 from syzgydb_spark.query.compiler import compile_filter
 from syzgydb_spark.storage import (
+    FaultInjectingBackend,
     ManifestBackend,
     ManifestConflictError,
+    SqliteCatalogBackend,
     is_stale_scan_error as _is_stale_scan_error,
 )
 
 
-# ---- write serialization (reference: per-collection RWMutex,
-#      collection.go:199, 569-570 — all mutation is serialized) ----
-#
-# Two layers:
-#   1. an in-process per-path re-entrant lock (one server process with a
-#      ThreadingHTTPServer is the reference's deployment shape), and
-#   2. an optimistic version CAS on the manifest flip, held under a
-#      POSIX flock so a *different process* racing the same collection
-#      loses cleanly (ManifestConflictError) and the caller re-merges
-#      against the new manifest and retries.
-# Layer 1 makes same-process writers wait instead of retry; layer 2 is
-# the correctness backstop. On a production cluster this whole protocol
-# is one Delta optimistic-commit; the semantics (no lost updates) match.
+# ---- write serialization: see "Mutation protocol" in the module
+#      docstring and Collection._mutate ----
 
 _LOCK_REGISTRY: dict[str, threading.RLock] = {}
 _LOCK_REGISTRY_GUARD = threading.Lock()
@@ -120,6 +135,26 @@ def _conflict_backoff(attempt: int) -> None:
 # valid search tiers; validated up front so a typo ('ifv') errors
 # instead of silently falling through to the exact full scan
 _PRECISIONS = ("exact", "medium", "pq", "ivf", "ivfpq")
+
+#: CollectionOptions.storage_backend → backend class (the storage seam,
+#: syzgydb_spark/storage.py).
+_STORAGE_BACKENDS = {
+    "manifest": ManifestBackend,
+    "sqlite": SqliteCatalogBackend,
+    "delta-sim": FaultInjectingBackend,
+}
+
+
+def _observe_full_scan(df: DataFrame, observation) -> DataFrame:
+    """Attach ``observation`` to a relation every row of which is
+    searched: points_total == points_searched, the honest 100% of the
+    exact and ADC tiers (a caller-created Observation must end up on
+    SOME plan, or its ``.get`` blocks forever)."""
+    return df.observe(
+        observation,
+        F.count(F.lit(1)).alias("points_total"),
+        F.count(F.lit(1)).alias("points_searched"),
+    )
 
 
 @dataclass
@@ -178,15 +213,13 @@ class CollectionOptions:
     #: + JSON-manifest CAS — the single-box default every test runs)
     #: "sqlite" (same data layout, manifest in a SQLite catalog with a
     #: transactional CAS — the metastore-commit-protocol stand-in),
-    #: "delta" (the Delta Lake adapter for a real cluster;
-    #: import-gated on delta-spark, contract mapping in docs/DELTA.md),
     #: or "delta-sim" (the fault-injecting Delta-semantics simulator:
     #: partition-level conflicts, losers-leave-orphans, VACUUM RETAIN —
-    #: runs everywhere, used to prove the adapter's behaviors).
+    #: the behaviors a Delta Lake adapter relies on; docs/DELTA.md).
     storage_backend: str = "manifest"
 
     def __post_init__(self):
-        if self.storage_backend not in ("manifest", "sqlite", "delta", "delta-sim"):
+        if self.storage_backend not in _STORAGE_BACKENDS:
             raise ValueError(f"unknown storage_backend {self.storage_backend!r}")
         if self.quantization not in (4, 8, 16, 32, 64):
             raise ValueError(f"invalid quantization {self.quantization}")
@@ -245,28 +278,9 @@ class Collection:
         # below goes through this object; swapping the table format
         # means swapping this one attribute (see syzgydb_spark/storage.py
         # and docs/DELTA.md)
-        if options.storage_backend == "delta":
-            from syzgydb_spark.storage import DeltaBackend
-
-            self.storage = DeltaBackend(
-                spark, path, retain_history=options.retain_history
-            )
-        elif options.storage_backend == "sqlite":
-            from syzgydb_spark.storage import SqliteCatalogBackend
-
-            self.storage = SqliteCatalogBackend(
-                path, retain_history=options.retain_history
-            )
-        elif options.storage_backend == "delta-sim":
-            from syzgydb_spark.storage import FaultInjectingBackend
-
-            self.storage = FaultInjectingBackend(
-                path, retain_history=options.retain_history
-            )
-        else:
-            self.storage = ManifestBackend(
-                path, retain_history=options.retain_history
-            )
+        self.storage = _STORAGE_BACKENDS[options.storage_backend](
+            path, retain_history=options.retain_history
+        )
         self.metadata_type = (
             _parse_metadata_schema(options.metadata_schema)
             if options.metadata_schema
@@ -325,9 +339,8 @@ class Collection:
                 raise FileExistsError(f"collection exists at {path}")
             shutil.rmtree(path)
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "options.json"), "w") as f:
-            json.dump(asdict(options), f, indent=2)
         coll = cls(spark, path, options)
+        coll._save_options()
         coll.storage.initialize()
         return coll
 
@@ -337,13 +350,28 @@ class Collection:
             opts = CollectionOptions(**json.load(f))
         return cls(spark, path, opts)
 
+    def _save_options(self) -> None:
+        """Persist ``self.options`` to options.json atomically: write a
+        temp file, then ``os.replace`` it over the live one (the
+        manifest flip's pattern), so a failed write leaves the previous
+        options intact instead of a truncated document."""
+        dst = os.path.join(self.path, "options.json")
+        tmp = f"{dst}.tmp.{uuid.uuid4().hex[:8]}"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(asdict(self.options), f, indent=2)
+            os.replace(tmp, dst)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+
     def _empty_df(self) -> DataFrame:
         df = self.spark.createDataFrame([], self.SCHEMA_BASE)
         return self._encode(df)
 
     # ---- storage (thin delegations through the backend seam; the
-    #      names and contracts are the ones every mutation loop and
-    #      test pins — see syzgydb_spark/storage.py for the contract
+    #      names and contracts are the ones the commit loop and the
+    #      tests pin — see syzgydb_spark/storage.py for the contract
     #      table and docs/DELTA.md for the cluster mapping) ----
     def _manifest(self) -> dict:
         return self.storage.read_manifest()
@@ -379,7 +407,8 @@ class Collection:
         caller can re-merge against the winner's manifest and retry.
 
         ``base_manifest`` MUST be the same manifest snapshot the caller
-        used to READ the rows it merged (every mutation loop passes it):
+        used to READ the rows it merged (every ``_mutate`` step passes
+        the snapshot it was handed):
         the CAS then guards the full read-merge-write span. If this
         method re-read the manifest itself, a cross-process commit
         landing between the caller's read and this commit would pass
@@ -402,6 +431,65 @@ class Collection:
             flip_fn=self._flip_manifest,
         )
 
+    def _mutate(self, what: str, step):
+        """The one commit loop (module docstring, "Mutation protocol"):
+        under the mutation lock, call ``step(manifest)`` with a fresh
+        manifest snapshot per attempt and return its result. A lost CAS
+        or a stale scan (another process reclaimed a file the step
+        read) retries after a jittered backoff; any other exception
+        propagates. ``step`` must read and commit against the snapshot
+        it is handed (``base_manifest=man``), so every retry re-merges
+        against the winner's state."""
+        with self._lock:
+            for attempt in range(_MAX_COMMIT_RETRIES):
+                if attempt:
+                    _conflict_backoff(attempt)
+                try:
+                    return step(self._manifest())
+                except ManifestConflictError:
+                    continue
+                except Exception as e:
+                    if not _is_stale_scan_error(e):
+                        raise
+            raise ManifestConflictError(
+                f"{what} lost the commit race {_MAX_COMMIT_RETRIES} times"
+            )
+
+    def _reindex(self, what: str, options: dict, indexes: dict) -> None:
+        """Install new index state and rewrite every live bucket through
+        ``_encode`` (enable_pq / enable_ivf / promote_paths). ``options``
+        maps CollectionOptions fields and ``indexes`` instance attributes
+        to their new values. The pre-index files are read index-free
+        (``_decoded_plain``: they lack the new columns). On any failure
+        the in-memory state rolls back, so it never claims an index the
+        files and options.json don't have; on success options.json is
+        saved."""
+
+        def step(man):
+            touched = [int(b) for b in man["buckets"]]
+            if touched:
+                self._commit_buckets(
+                    self._encode(self._decoded_plain(man)), touched,
+                    base_manifest=man,
+                )
+
+        with self._lock:
+            prev_opts = {k: getattr(self.options, k) for k in options}
+            prev_idx = {k: getattr(self, k) for k in indexes}
+            for k, v in options.items():
+                setattr(self.options, k, v)
+            for k, v in indexes.items():
+                setattr(self, k, v)
+            try:
+                self._mutate(what, step)
+                self._save_options()
+            except BaseException:
+                for k, v in prev_opts.items():
+                    setattr(self.options, k, v)
+                for k, v in prev_idx.items():
+                    setattr(self, k, v)
+                raise
+
     def vacuum(self, *, grace_seconds: float = 300.0) -> int:
         """Delete data files not referenced by the live manifest — or,
         with history retained, by ANY retained version's manifest
@@ -421,10 +509,7 @@ class Collection:
         ``grace_seconds=0`` when no other writer can be active to
         reclaim a known-dead commit immediately."""
         with self._lock:
-            return self._vacuum_locked(grace_seconds=grace_seconds)
-
-    def _vacuum_locked(self, grace_seconds: float = 300.0) -> int:
-        return self.storage.vacuum(grace_seconds=grace_seconds)
+            return self.storage.vacuum(grace_seconds=grace_seconds)
 
     # ---- history / time travel (extension; the reference reclaims
     #      replaced spans eagerly and keeps no versions) ----
@@ -436,9 +521,6 @@ class Collection:
         the live version is readable."""
         return self.storage.history()
 
-    def _manifest_at(self, version: int) -> dict:
-        return self.storage.manifest_at(version)
-
     def _referenced_files(self) -> set[tuple[str, str]]:
         return self.storage.referenced_files()
 
@@ -447,7 +529,7 @@ class Collection:
         travel). Columns added by later index enables (pq_code,
         ivf_cell, lsh signatures) are projected only if the snapshot's
         files actually carry them."""
-        raw = self._raw(manifest=self._manifest_at(version))
+        raw = self._raw(manifest=self.storage.manifest_at(version))
         have = set(raw.columns)
         cols = [
             F.col("id"),
@@ -540,39 +622,25 @@ class Collection:
         is n_buckets-tunable. Readers are never blocked (old files stay
         until the flip; with ``retain_history`` they stay readable via
         ``snapshot()``)."""
-        with self._lock:
-            for _attempt in range(_MAX_COMMIT_RETRIES):
-                if _attempt:
-                    _conflict_backoff(_attempt)
-                # bucket selection, read, and commit all run against ONE
-                # manifest snapshot taken under the lock — a concurrent
-                # commit forces a retry that re-selects (so buckets
-                # fragmented meanwhile are picked up, and the returned
-                # stats describe what was actually compacted)
-                man = self._manifest()
-                todo = sorted(
-                    int(b) for b, files in man["buckets"].items()
-                    if len(files) > 1 and (buckets is None or int(b) in buckets)
-                )
-                if not todo:
-                    return {
-                        "buckets_compacted": 0,
-                        "files_before": 0,
-                        "files_after": 0,
-                    }
-                before = sum(len(man["buckets"][str(b)]) for b in todo)
-                try:
-                    enc = self._raw(
-                        buckets=todo, manifest=man
-                    ).repartition("bucket")
-                    self._commit_buckets(enc, todo, base_manifest=man)
-                    break
-                except ManifestConflictError:
-                    continue
-            else:
-                raise ManifestConflictError(
-                    f"compaction lost the commit race {_MAX_COMMIT_RETRIES} times"
-                )
+
+        def step(man):
+            # bucket selection, read, and commit all run against the
+            # attempt's snapshot — a concurrent commit forces a retry
+            # that re-selects (so buckets fragmented meanwhile are
+            # picked up, and the returned stats describe what was
+            # actually compacted)
+            todo = sorted(
+                int(b) for b, files in man["buckets"].items()
+                if len(files) > 1 and (buckets is None or int(b) in buckets)
+            )
+            if todo:
+                enc = self._raw(buckets=todo, manifest=man).repartition("bucket")
+                self._commit_buckets(enc, todo, base_manifest=man)
+            return todo, sum(len(man["buckets"][str(b)]) for b in todo)
+
+        todo, before = self._mutate("compaction", step)
+        if not todo:
+            return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
         after = sum(
             len(self._manifest()["buckets"].get(str(b), [])) for b in todo
         )
@@ -825,28 +893,14 @@ class Collection:
                 touched = [
                     r["bucket"] for r in new_enc.select("bucket").distinct().collect()
                 ]
-            with self._lock:
-                for _attempt in range(_MAX_COMMIT_RETRIES):
-                    if _attempt:
-                        _conflict_backoff(_attempt)
-                    # ONE manifest snapshot spans read AND commit: the
-                    # CAS guards the whole read-merge-write, so a
-                    # cross-process commit landing in between forces a
-                    # retry instead of being silently reverted
-                    man = self._manifest()
-                    try:
-                        cur = self._raw(buckets=touched, manifest=man)
-                        kept = cur.join(
-                            new_enc.select("id"), on="id", how="left_anti"
-                        )
-                        merged = kept.unionByName(new_enc.select(kept.columns))
-                        self._commit_buckets(merged, touched, base_manifest=man)
-                        return
-                    except ManifestConflictError:
-                        continue
-                raise ManifestConflictError(
-                    f"upsert lost the commit race {_MAX_COMMIT_RETRIES} times"
-                )
+
+            def step(man):
+                cur = self._raw(buckets=touched, manifest=man)
+                kept = cur.join(new_enc.select("id"), on="id", how="left_anti")
+                merged = kept.unionByName(new_enc.select(kept.columns))
+                self._commit_buckets(merged, touched, base_manifest=man)
+
+            self._mutate("upsert", step)
         finally:
             new_enc.unpersist()
 
@@ -856,53 +910,35 @@ class Collection:
         closed-form from the id — only that bucket's files are ever
         opened or rewritten."""
         [b] = self._buckets_for_ids([doc_id])
-        with self._lock:
-            for _attempt in range(_MAX_COMMIT_RETRIES):
-                if _attempt:
-                    _conflict_backoff(_attempt)
-                man = self._manifest()
-                try:
-                    cur = self._raw(buckets=[b], manifest=man)
-                    exists = cur.where(F.col("id") == doc_id).limit(1).count()
-                except ManifestConflictError:
-                    continue  # reclaimed at scan construction
-                except Exception as e:
-                    if _is_stale_scan_error(e):
-                        continue  # cross-process reclaim; fresh manifest
-                    raise
-                if not exists:
-                    raise KeyError(f"document {doc_id} not found")
-                new_meta = (
-                    F.from_json(F.lit(metadata), self.metadata_type)
-                    if self.metadata_type is not None
-                    else F.lit(metadata)
-                )
-                updated = cur.withColumn(
-                    "metadata",
-                    F.when(F.col("id") == doc_id, new_meta).otherwise(
-                        F.col("metadata")
-                    ),
-                )
-                if self.options.promoted and self.metadata_type is None:
-                    # promoted columns derive from metadata — recompute
-                    # for the rewritten bucket or the hint goes stale
-                    # (a stale value would wrongly exclude the updated
-                    # row from promoted-conjunct searches)
-                    from syzgydb_spark.query.promoted import promoted_col
+        new_meta = (
+            F.from_json(F.lit(metadata), self.metadata_type)
+            if self.metadata_type is not None
+            else F.lit(metadata)
+        )
 
-                    for path, spec in self.options.promoted.items():
-                        updated = updated.withColumn(
-                            spec["col"],
-                            promoted_col(F.col("metadata"), path, spec["type"]),
-                        )
-                try:
-                    self._commit_buckets(updated, [b], base_manifest=man)
-                    return
-                except ManifestConflictError:
-                    continue
-            raise ManifestConflictError(
-                f"update lost the commit race {_MAX_COMMIT_RETRIES} times"
+        def step(man):
+            cur = self._raw(buckets=[b], manifest=man)
+            if not cur.where(F.col("id") == doc_id).limit(1).count():
+                raise KeyError(f"document {doc_id} not found")
+            updated = cur.withColumn(
+                "metadata",
+                F.when(F.col("id") == doc_id, new_meta).otherwise(F.col("metadata")),
             )
+            if self.options.promoted and self.metadata_type is None:
+                # promoted columns derive from metadata — recompute
+                # for the rewritten bucket or the hint goes stale
+                # (a stale value would wrongly exclude the updated
+                # row from promoted-conjunct searches)
+                from syzgydb_spark.query.promoted import promoted_col
+
+                for path, spec in self.options.promoted.items():
+                    updated = updated.withColumn(
+                        spec["col"],
+                        promoted_col(F.col("metadata"), path, spec["type"]),
+                    )
+            self._commit_buckets(updated, [b], base_manifest=man)
+
+        self._mutate("update", step)
 
     def remove(self, ids) -> None:
         """Delete by id, rewriting only the buckets that contain the ids
@@ -914,49 +950,30 @@ class Collection:
         if not ids:
             return
         candidates = self._buckets_for_ids(ids)
-        with self._lock:
-            for _attempt in range(_MAX_COMMIT_RETRIES):
-                if _attempt:
-                    _conflict_backoff(_attempt)
-                man = self._manifest()
-                live = set(man["buckets"])
-                probe = [b for b in candidates if str(b) in live]
-                if not probe:
-                    return
-                try:
-                    cur = self._raw(buckets=probe, manifest=man)
-                    touched = [
-                        r["bucket"]
-                        for r in cur.where(F.col("id").isin(ids))
-                        .select("bucket")
-                        .distinct()
-                        .collect()
-                    ]
-                except ManifestConflictError:
-                    continue  # reclaimed at scan construction
-                except Exception as e:
-                    if _is_stale_scan_error(e):
-                        # a cross-process commit reclaimed one of this
-                        # snapshot's files mid-probe — same conflict the
-                        # commit path converts; retry on fresh manifest
-                        continue
-                    raise
-                if not touched:
-                    return
-                kept = cur.where(F.col("bucket").isin(touched)).where(
-                    # NULL-safe: ~isin is NULL (not true) for a NULL
-                    # id, which would silently delete null-id rows
-                    # that were never named
-                    F.coalesce(~F.col("id").isin(ids), F.lit(True))
-                )
-                try:
-                    self._commit_buckets(kept, touched, base_manifest=man)
-                    return
-                except ManifestConflictError:
-                    continue
-            raise ManifestConflictError(
-                f"delete lost the commit race {_MAX_COMMIT_RETRIES} times"
+
+        def step(man):
+            probe = [b for b in candidates if str(b) in man["buckets"]]
+            if not probe:
+                return
+            cur = self._raw(buckets=probe, manifest=man)
+            touched = [
+                r["bucket"]
+                for r in cur.where(F.col("id").isin(ids))
+                .select("bucket")
+                .distinct()
+                .collect()
+            ]
+            if not touched:
+                return
+            kept = cur.where(F.col("bucket").isin(touched)).where(
+                # NULL-safe: ~isin is NULL (not true) for a NULL
+                # id, which would silently delete null-id rows
+                # that were never named
+                F.coalesce(~F.col("id").isin(ids), F.lit(True))
             )
+            self._commit_buckets(kept, touched, base_manifest=man)
+
+        self._mutate("delete", step)
 
     # ---- reads ----
     def get(self, doc_id: int) -> Row | None:
@@ -1056,42 +1073,7 @@ class Collection:
             max_sample=max_sample,
             seed=seed,
         )
-        with self._lock:  # serialize vs concurrent writers (same CAS backstop)
-            prev_opt, prev_idx = self.options.pq, self.pq_index
-            self.options.pq = idx.to_dict()
-            self.pq_index = idx
-            try:
-                # reindex: rewrite every live bucket with the code
-                # column; CAS-retry like every other mutation, with the
-                # decoded view rebuilt INDEX-FREE per attempt (the old
-                # files don't carry pq_code yet, so df()'s projection
-                # can't be used while the index is installed)
-                for _attempt in range(_MAX_COMMIT_RETRIES):
-                    if _attempt:
-                        _conflict_backoff(_attempt)
-                    man = self._manifest()
-                    decoded = self._decoded_plain(man)
-                    touched = [int(b) for b in man["buckets"]]
-                    if not touched:
-                        break
-                    try:
-                        self._commit_buckets(
-                            self._encode(decoded), touched, base_manifest=man
-                        )
-                        break
-                    except ManifestConflictError:
-                        continue
-                else:
-                    raise ManifestConflictError(
-                        f"reindex lost the commit race {_MAX_COMMIT_RETRIES} times"
-                    )
-            except BaseException:
-                # memory state must not claim an index the files and
-                # options.json don't have
-                self.options.pq, self.pq_index = prev_opt, prev_idx
-                raise
-            with open(os.path.join(self.path, "options.json"), "w") as f:
-                json.dump(asdict(self.options), f, indent=2)
+        self._reindex("reindex", {"pq": idx.to_dict()}, {"pq_index": idx})
 
     def enable_ivf(
         self,
@@ -1123,36 +1105,7 @@ class Collection:
             max_sample=max_sample,
             seed=seed,
         )
-        with self._lock:  # serialize vs concurrent writers (same CAS backstop)
-            prev_opt, prev_idx = self.options.ivf, self.ivf_index
-            self.options.ivf = idx.to_dict()
-            self.ivf_index = idx
-            try:
-                # same retry/rollback protocol as enable_pq (see there)
-                for _attempt in range(_MAX_COMMIT_RETRIES):
-                    if _attempt:
-                        _conflict_backoff(_attempt)
-                    man = self._manifest()
-                    decoded = self._decoded_plain(man)
-                    touched = [int(b) for b in man["buckets"]]
-                    if not touched:
-                        break
-                    try:
-                        self._commit_buckets(
-                            self._encode(decoded), touched, base_manifest=man
-                        )
-                        break
-                    except ManifestConflictError:
-                        continue
-                else:
-                    raise ManifestConflictError(
-                        f"reindex lost the commit race {_MAX_COMMIT_RETRIES} times"
-                    )
-            except BaseException:
-                self.options.ivf, self.ivf_index = prev_opt, prev_idx
-                raise
-            with open(os.path.join(self.path, "options.json"), "w") as f:
-                json.dump(asdict(self.options), f, indent=2)
+        self._reindex("reindex", {"ivf": idx.to_dict()}, {"ivf_index": idx})
 
     def promote_paths(self, paths: dict[str, str]) -> None:
         """Materialize hot metadata paths as plain typed columns on a
@@ -1185,8 +1138,7 @@ class Collection:
                     f"{PROMOTABLE_TYPES}"
                 )
         with self._lock:
-            prev = self.options.promoted
-            merged = dict(prev or {})
+            merged = dict(self.options.promoted or {})
             taken = {s["col"] for s in merged.values()}
             for p, t in paths.items():
                 if p in merged and merged[p]["type"] != t:
@@ -1199,33 +1151,7 @@ class Collection:
                         i += 1
                     merged[p] = {"col": f"_pv{i}", "type": t}
                     taken.add(f"_pv{i}")
-            self.options.promoted = merged
-            try:
-                # same retry/rollback protocol as enable_pq (see there)
-                for _attempt in range(_MAX_COMMIT_RETRIES):
-                    if _attempt:
-                        _conflict_backoff(_attempt)
-                    man = self._manifest()
-                    decoded = self._decoded_plain(man)
-                    touched = [int(b) for b in man["buckets"]]
-                    if not touched:
-                        break
-                    try:
-                        self._commit_buckets(
-                            self._encode(decoded), touched, base_manifest=man
-                        )
-                        break
-                    except ManifestConflictError:
-                        continue
-                else:
-                    raise ManifestConflictError(
-                        f"promote lost the commit race {_MAX_COMMIT_RETRIES} times"
-                    )
-            except BaseException:
-                self.options.promoted = prev
-                raise
-            with open(os.path.join(self.path, "options.json"), "w") as f:
-                json.dump(asdict(self.options), f, indent=2)
+            self._reindex("promote", {"promoted": merged}, {})
 
     def calibrate_recall(
         self,
@@ -1343,9 +1269,11 @@ class Collection:
         finally:
             data.unpersist()
             queries.unpersist()
-        self.options.recall_curve = curves
-        with open(os.path.join(self.path, "options.json"), "w") as f:
-            json.dump(asdict(self.options), f, indent=2)
+        # under the mutation lock: an in-process reindex must not save
+        # (or roll back) its index options in the middle of this write
+        with self._lock:
+            self.options.recall_curve = curves
+            self._save_options()
         return curves
 
     def _probes_for_target(self, precision: str, target_recall: float):
@@ -1470,78 +1398,55 @@ class Collection:
             hint = self._promoted_hint(filter)
             if hint is not None:
                 df = df.where(hint)
-        if precision == "pq" and vector is not None and k > 0:
-            if self.pq_index is None:
+        if precision in ("pq", "ivfpq", "ivf") and vector is not None and k > 0:
+            if precision == "pq" and self.pq_index is None:
                 raise ValueError("precision='pq' requires enable_pq() first")
-            # reference pre-filter semantics: the filter runs before
-            # ranking (collection.go:592) — here before the ADC scan
-            if filter:
-                df = df.where(self._filter_pred(filter))
-            base = df
-            if observation is not None:
-                # ADC scans every (filtered) row's code: honest
-                # percent_searched is 100 — attaching the metrics keeps
-                # the caller contract uniform across ANN tiers (a
-                # server that created an Observation must be able to
-                # read it back)
-                df = df.observe(
-                    observation,
-                    F.count(F.lit(1)).alias("points_total"),
-                    F.count(F.lit(1)).alias("points_searched"),
-                )
-            res = self.pq_index.search(
-                df, vector, k, rerank=max(4 * k, 50), vec_col="vector", id_col="id"
-            ).join(base.select("id", "metadata"), "id")
-            if radius > 0:
-                res = res.where(F.col("distance") <= radius)
-            return res.select("id", "metadata", "distance").orderBy("distance", "id")
-        if precision == "ivfpq" and vector is not None and k > 0:
-            # FAISS-IVFADC shape on a single query: coarse-quantizer
-            # probe prunes to n_probes cells (the ivf_cell column is
-            # what parquet row-group stats prune on at scale), then the
-            # ADC lookup-table scan + exact re-rank runs over only the
-            # probed candidates — compressed AND cell-pruned, the
-            # product of the two index tiers.
-            if self.pq_index is None or self.ivf_index is None:
+            if precision == "ivfpq" and (self.pq_index is None or self.ivf_index is None):
                 raise ValueError(
                     "precision='ivfpq' requires enable_pq() and enable_ivf()"
                 )
-            if filter:
-                df = df.where(self._filter_pred(filter))
-            cells = self.ivf_index.probe_cells(vector, n_probes or 4)
-            pred = F.col("ivf_cell").isin(cells)
-            base = df
-            if observation is not None:
-                # an Observation may appear in a plan only once: attach
-                # it on the candidate path; the metadata join reads the
-                # plain relation
-                df = df.observe(
-                    observation,
-                    F.count(F.lit(1)).alias("points_total"),
-                    F.coalesce(F.sum(pred.cast("long")), F.lit(0)).alias(
-                        "points_searched"
-                    ),
-                )
-            cand = df.where(pred)
-            res = self.pq_index.search(
-                cand, vector, k, rerank=max(4 * k, 50), vec_col="vector", id_col="id"
-            ).join(base.select("id", "metadata"), "id")
-            if radius > 0:
-                res = res.where(F.col("distance") <= radius)
-            return res.select("id", "metadata", "distance").orderBy("distance", "id")
-        if precision == "ivf" and vector is not None and k > 0:
-            if self.ivf_index is None:
+            if precision == "ivf" and self.ivf_index is None:
                 raise ValueError("precision='ivf' requires enable_ivf() first")
-            # pre-filter before ranking, like the other ANN tiers
-            # (collection.go:592)
+            # reference pre-filter semantics: the filter runs before
+            # ranking (collection.go:592)
             if filter:
                 df = df.where(self._filter_pred(filter))
-            res = self.ivf_index.search(
-                df, vector, k,
-                n_probes=n_probes or 4,
-                vec_col="vector", id_col="id",
-                observation=observation,
-            )
+            if precision == "ivf":
+                res = self.ivf_index.search(
+                    df, vector, k,
+                    n_probes=n_probes or 4,
+                    vec_col="vector", id_col="id",
+                    observation=observation,
+                )
+            else:
+                base = df
+                if precision == "ivfpq":
+                    # FAISS-IVFADC shape on a single query: the coarse-
+                    # quantizer probe prunes to n_probes cells (the
+                    # ivf_cell column is what parquet row-group stats
+                    # prune on at scale), then the ADC lookup-table
+                    # scan + exact re-rank runs over only the probed
+                    # candidates — compressed AND cell-pruned.
+                    cells = self.ivf_index.probe_cells(vector, n_probes or 4)
+                    pred = F.col("ivf_cell").isin(cells)
+                    if observation is not None:
+                        # an Observation may appear in a plan only once:
+                        # attach it on the candidate path; the metadata
+                        # join reads the plain relation
+                        df = df.observe(
+                            observation,
+                            F.count(F.lit(1)).alias("points_total"),
+                            F.coalesce(F.sum(pred.cast("long")), F.lit(0)).alias(
+                                "points_searched"
+                            ),
+                        )
+                    df = df.where(pred)
+                elif observation is not None:
+                    # ADC scans every (filtered) row's code
+                    df = _observe_full_scan(df, observation)
+                res = self.pq_index.search(
+                    df, vector, k, rerank=max(4 * k, 50), vec_col="vector", id_col="id"
+                ).join(base.select("id", "metadata"), "id")
             if radius > 0:
                 res = res.where(F.col("distance") <= radius)
             return res.select("id", "metadata", "distance").orderBy("distance", "id")
@@ -1557,15 +1462,9 @@ class Collection:
         else:
             if observation is not None:
                 # exact scan (explicit, or the documented fallback when
-                # no LSH index is configured): every point is visited,
-                # so the metrics are total == searched — attached here
-                # because knn.search has no observation hook, and a
-                # caller-created Observation must never block on .get
-                df = df.observe(
-                    observation,
-                    F.count(F.lit(1)).alias("points_total"),
-                    F.count(F.lit(1)).alias("points_searched"),
-                )
+                # no LSH index is configured); attached here because
+                # knn.search has no observation hook
+                df = _observe_full_scan(df, observation)
             res = knn.search(
                 df,
                 vector,
@@ -1650,14 +1549,7 @@ class Collection:
             precision == "medium" and self.index is None
         )
         if full_scan and observation is not None:
-            # full-scan tiers: attach the metrics on the scanned
-            # relation so a caller-created Observation can always be
-            # read back (the single-query pq path's contract)
-            df = df.observe(
-                observation,
-                F.count(F.lit(1)).alias("points_total"),
-                F.count(F.lit(1)).alias("points_searched"),
-            )
+            df = _observe_full_scan(df, observation)
         if precision == "ivfpq":
             if self.pq_index is None or self.ivf_index is None:
                 raise ValueError(

@@ -2,7 +2,7 @@
 logic and the physical table format.
 
 ``Collection`` (collection.py) owns WHAT a mutation means (merge
-semantics, encode layout, retry loops, locks); a backend owns HOW a
+semantics, encode layout, the commit loop and its lock); a backend owns HOW a
 version of the table is stored, listed, committed, and reclaimed. The
 contract is small and exact — every method below, with the semantics
 the conformance suite (tests/test_storage_backend.py) pins:
@@ -53,12 +53,10 @@ Three implementations:
   a second RUNNABLE backend with genuinely different atomicity
   machinery, proving the seam (the conformance suite and the
   cross-process storm run against it unchanged).
-* :class:`DeltaBackend` — the production-cluster adapter skeleton
-  mapping each contract method onto Delta Lake (delta-spark). It
-  import-gates on the ``delta`` package: where that package is
-  installed the conformance suite picks it up automatically; here it
-  documents, method by method, exactly which Delta call replaces which
-  manifest operation (docs/DELTA.md holds the full mapping).
+* :class:`FaultInjectingBackend` — the Delta-semantics simulator on
+  top of the SQLite catalog: the behaviors a Delta Lake adapter relies
+  on, as executed code. docs/DELTA.md maps each contract method onto
+  the Delta call an adapter would make where delta-spark is installed.
 
 Reference lineage: this layer replaces the reference's span file —
 shadow-writes + monotonic sequence numbers + free-span reuse
@@ -213,7 +211,7 @@ class ManifestBackend:
         caller can re-merge against the winner's manifest and retry.
 
         ``base_manifest`` MUST be the same manifest snapshot the caller
-        used to READ the rows it merged (every mutation loop passes it):
+        used to READ the rows it merged (Collection's commit loop passes it):
         the CAS then guards the full read-merge-write span. If this
         method re-read the manifest itself, a cross-process commit
         landing between the caller's read and this commit would pass
@@ -451,9 +449,8 @@ class SqliteCatalogBackend(ManifestBackend):
     the object store has no atomic rename, e.g. S3 + a catalog).
 
     Purpose: PROVE the storage seam with a second backend whose
-    atomicity machinery is genuinely different and that runs in this
-    environment (the Delta adapter import-gates on a package this
-    container cannot install). The full conformance suite
+    atomicity machinery is genuinely different and that runs without
+    delta-spark. The full conformance suite
     (tests/test_storage_backend.py) and the Collection-level
     storage/concurrency tests run against it unchanged — including
     the cross-process commit storm, which exercises the transaction
@@ -611,8 +608,8 @@ class SimulatedConcurrentModificationException(RuntimeError):
     """Stand-in for Delta's ``ConcurrentModificationException`` family
     (``ConcurrentAppendException`` / ``ConcurrentDeleteReadException``
     / ``MetadataChangedException``): the exception the TRANSACTION LOG
-    raises when an optimistic commit's read snapshot advanced. The
-    DeltaBackend adapter must map it to :class:`ManifestConflictError`
+    raises when an optimistic commit's read snapshot advanced. A Delta
+    adapter must map it to :class:`ManifestConflictError`
     (docs/DELTA.md §3 row 3); FaultInjectingBackend exercises exactly
     that mapping so the translation layer is executed code, not prose."""
 
@@ -627,18 +624,17 @@ class SimulatedCommitAbort(RuntimeError):
 
 class FaultInjectingBackend(SqliteCatalogBackend):
     """Delta-semantics simulator — closes the executable gap between
-    the two runnable backends and the env-gated :class:`DeltaBackend`
-    (delta-spark is not installable in this container; verified by the
-    r5 judge). It wraps the transactional-catalog backend and replays
+    the two runnable backends and a Delta Lake adapter (which needs
+    delta-spark). It wraps the transactional-catalog backend and replays
     the *Delta-specific* behaviors from docs/DELTA.md §3 so every
-    contract clause the Delta adapter will rely on is exercised by
+    contract clause a Delta adapter would rely on is exercised by
     real code under the real conformance + storm suites:
 
     1. **Conflict surface** — the CAS failure is raised by the inner
        "transaction log" as
        :class:`SimulatedConcurrentModificationException` and mapped to
        :class:`ManifestConflictError` at the adapter boundary, the
-       exact translation ``DeltaBackend.commit_buckets`` must perform
+       exact translation a Delta adapter's ``commit_buckets`` performs
        for ``ConcurrentAppendException`` et al.
     2. **Losers leave orphans** — Delta does not eagerly delete a CAS
        loser's data files or a commit's replaced files; they stay for
@@ -715,8 +711,8 @@ class FaultInjectingBackend(SqliteCatalogBackend):
 
     def flip_manifest(self, manifest: dict, *, expected_version=None) -> None:
         """Adapter boundary: the Delta-family exception becomes the
-        seam's ManifestConflictError — the mapping DeltaBackend must
-        implement, here as executed code."""
+        seam's ManifestConflictError — the mapping a Delta adapter
+        implements, here as executed code."""
         try:
             self._log_commit(manifest, expected_version=expected_version)
         except SimulatedConcurrentModificationException as e:
@@ -825,111 +821,3 @@ class FaultInjectingBackend(SqliteCatalogBackend):
                     continue
                 removed += 1
         return removed
-
-
-class DeltaBackend:
-    """Delta Lake adapter — the production-cluster face of the same
-    contract. Requires the ``delta-spark`` package and a Spark session
-    with the Delta extensions configured; neither ships in this
-    environment, so construction import-gates and the conformance
-    suite (tests/test_storage_backend.py) picks this backend up only
-    where ``import delta`` succeeds.
-
-    Injected-equivalence evidence (r5-verdict task 1): every behavior
-    this adapter will depend on — the ConcurrentModificationException→
-    ManifestConflictError mapping, losers-leave-orphans, replaceWhere's
-    partial-visibility window, VACUUM RETAIN's mtime-only retention,
-    partition-level conflict detection — is executed and storm-tested
-    TODAY by :class:`FaultInjectingBackend` (tests/test_delta_sim.py,
-    tests/test_storage_backend.py, and the 3-process commit storm in
-    tests/test_concurrency.py run against it). What remains untested
-    here is only delta-spark's own implementation of those semantics.
-
-    Contract mapping (full narrative in docs/DELTA.md):
-
-    ===========================  =====================================
-    manifest operation           Delta equivalent
-    ===========================  =====================================
-    initialize()                 CREATE TABLE ... USING delta
-                                 PARTITIONED BY (bucket)
-    read_manifest()              snapshot version + per-partition file
-                                 list from the transaction log
-                                 (DeltaLog snapshot; never ls)
-    flip_manifest CAS            optimistic transaction commit — Delta
-                                 raises ConcurrentModificationException
-                                 where we raise ManifestConflictError
-    commit_buckets(df, touched)  one transaction:
-                                 df.write.format("delta")
-                                   .mode("overwrite")
-                                   .option("replaceWhere",
-                                           "bucket IN (<touched>)")
-                                 — same replace-exactly-these-
-                                 partitions semantics, same invisible
-                                 staging (files land before the log
-                                 entry), same conflict-then-retry
-    vacuum(grace)                VACUUM <table> RETAIN <grace> —
-                                 identical retention contract
-                                 (uncommitted/staged files under the
-                                 window are spared)
-    history()/manifest_at(v)     DESCRIBE HISTORY / time travel
-                                 (versionAsOf=v)
-    drop_history_except(keep)    logRetentionDuration +
-                                 delta.deletedFileRetentionDuration
-                                 then VACUUM
-    data_paths(m, buckets)       not needed — the reader is
-                                 spark.read.format("delta") with a
-                                 bucket predicate; partition pruning
-                                 replaces explicit path lists
-    ===========================  =====================================
-    """
-
-    def __init__(self, spark, path: str, *, retain_history: bool = False):
-        try:
-            import delta  # noqa: F401
-        except ImportError as e:  # pragma: no cover - env-dependent
-            raise ImportError(
-                "DeltaBackend requires the delta-spark package and a "
-                "SparkSession built with configure_spark_with_delta_pip; "
-                "install delta-spark to run the storage suite against "
-                "Delta (tests/test_storage_backend.py auto-detects it)."
-            ) from e
-        self.spark = spark
-        self.path = path
-        self.retain_history = retain_history
-
-    # The method bodies intentionally raise until run in a Delta-enabled
-    # environment: shipping untestable code as if proven would be worse
-    # than the explicit seam + mapping. Each message names the exact
-    # Delta call from the table above.
-    def initialize(self) -> None:  # pragma: no cover - needs delta
-        raise NotImplementedError(
-            "CREATE TABLE ... USING delta PARTITIONED BY (bucket); see "
-            "docs/DELTA.md §initialize"
-        )
-
-    def read_manifest(self) -> dict:  # pragma: no cover - needs delta
-        raise NotImplementedError(
-            "DeltaLog snapshot -> {'version': snapshot.version, "
-            "'buckets': files grouped by partition}; docs/DELTA.md §read"
-        )
-
-    def commit_buckets(self, encoded, touched, base_manifest, *, bloom_on_id=True, flip_fn=None):
-        # pragma: no cover - needs delta
-        raise NotImplementedError(
-            "df.write.format('delta').mode('overwrite').option("
-            "'replaceWhere', 'bucket IN (...)') inside one transaction; "
-            "ConcurrentModificationException -> ManifestConflictError; "
-            "docs/DELTA.md §commit"
-        )
-
-    def vacuum(self, grace_seconds: float = 300.0) -> int:  # pragma: no cover
-        raise NotImplementedError("VACUUM RETAIN; docs/DELTA.md §vacuum")
-
-    def history(self):  # pragma: no cover - needs delta
-        raise NotImplementedError("DESCRIBE HISTORY; docs/DELTA.md §history")
-
-    def manifest_at(self, version: int):  # pragma: no cover - needs delta
-        raise NotImplementedError("versionAsOf time travel; docs/DELTA.md")
-
-    def drop_history_except(self, keep):  # pragma: no cover - needs delta
-        raise NotImplementedError("retention configs + VACUUM; docs/DELTA.md")

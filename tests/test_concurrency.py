@@ -8,12 +8,16 @@ merge-retry — these tests pin both layers, the closed-form bucket
 discovery for point mutations, and the crash-orphan vacuum protocol.
 """
 
+import contextlib
 import json
 import os
 import threading
+from dataclasses import asdict
 
 import pytest
+from pyspark.sql import functions as F
 
+from syzgydb_spark import collection as collection_mod
 from syzgydb_spark.collection import (
     Collection,
     CollectionOptions,
@@ -74,10 +78,12 @@ def test_cas_rejects_stale_version(coll):
     assert coll.count() == 100
 
 
-def test_merge_retries_after_losing_cas(spark, coll):
-    """A writer whose CAS loses to a real interleaved commit must
-    re-merge against the winner's manifest and succeed — and the
-    winner's rows must survive the retry."""
+@contextlib.contextmanager
+def _first_cas_loses(spark, coll):
+    """Make ``coll``'s first CAS flip lose to a real interleaved commit:
+    a second writer (no shared lock, like another process) upserts id
+    5000 between ``coll``'s manifest read and its flip. Yields the
+    flip-call counter."""
     c2 = Collection.open(spark, coll.path)
     c2._lock = threading.RLock()  # simulate a second process: no shared lock
     orig_flip = Collection._flip_manifest
@@ -87,22 +93,180 @@ def test_merge_retries_after_losing_cas(spark, coll):
         if expected_version is not None:
             calls["n"] += 1
             if calls["n"] == 1:
-                # interleave a full commit from the "other process"
-                # between this writer's manifest read and its flip
-                c2.add_documents([(5000, [5.0, 5.0, 5.0], '{"w": "other"}')])
+                c2.add_documents([(5000, [5.0, 5.0, 5.0], '{"i": 5000}')])
         return orig_flip(self, manifest, expected_version=expected_version)
 
     coll._flip_manifest = racing_flip.__get__(coll)
     try:
-        coll.add_documents([(6000, [6.0, 6.0, 6.0], '{"w": "me"}')])
+        yield calls
     finally:
         del coll._flip_manifest
+
+
+def test_merge_retries_after_losing_cas(spark, coll):
+    """A writer whose CAS loses to a real interleaved commit must
+    re-merge against the winner's manifest and succeed — and the
+    winner's rows must survive the retry."""
+    with _first_cas_loses(spark, coll) as calls:
+        coll.add_documents([(6000, [6.0, 6.0, 6.0], '{"w": "me"}')])
     assert calls["n"] >= 2, "losing writer did not retry its commit"
     ids = set(coll.get_all_ids())
     assert 5000 in ids and 6000 in ids
     assert coll.count() == 102
     # no orphan files were left behind by the losing attempt
     assert coll.vacuum() == 0
+
+
+def _fragment(coll):
+    """Upsert a few rows so some bucket holds more than one file."""
+    coll.add_documents([(300 + i, [1.0, 1.0, 1.0], "{}") for i in range(16)])
+    files = coll._manifest()["buckets"].values()
+    assert any(len(f) > 1 for f in files), "setup left no fragmented bucket"
+
+
+def _promoted_value(coll, doc_id):
+    return coll._raw().where(F.col("id") == doc_id).select("_pv0").first()[0]
+
+
+# op -> (setup, mutation, check of the mutation's own effect)
+_LOST_CAS_OPS = {
+    "update_metadata": (
+        None,
+        lambda c: c.update_metadata(7, '{"i": 700}'),
+        lambda c: json.loads(c.get(7)["metadata"]) == {"i": 700},
+    ),
+    "remove": (
+        None,
+        lambda c: c.remove([8, 9]),
+        lambda c: c.get(8) is None and c.get(9) is None,
+    ),
+    "compact": (
+        _fragment,
+        lambda c: c.compact(),
+        lambda c: all(len(f) == 1 for f in c._manifest()["buckets"].values()),
+    ),
+    "enable_ivf": (
+        None,
+        lambda c: c.enable_ivf(n_clusters=4),
+        lambda c: c._raw().where(F.col("ivf_cell").isNull()).count() == 0
+        and Collection.open(c.spark, c.path).options.ivf is not None,
+    ),
+    "promote_paths": (
+        None,
+        lambda c: c.promote_paths({"i": "double"}),
+        # the winner's row was re-encoded by the retry
+        lambda c: _promoted_value(c, 5000) == 5000.0 and _promoted_value(c, 7) == 7.0,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_LOST_CAS_OPS))
+def test_mutation_retries_after_losing_cas(spark, coll, op):
+    """Every mutation entry point, not just the upsert, re-runs against
+    the winner's manifest after losing the CAS: both writers' effects
+    survive and the losing attempt leaves no orphan files."""
+    setup, mutate, applied = _LOST_CAS_OPS[op]
+    if setup is not None:
+        setup(coll)
+    n_before = coll.count()
+    with _first_cas_loses(spark, coll) as calls:
+        mutate(coll)
+    assert calls["n"] >= 2, "losing writer did not retry its commit"
+    assert coll.get(5000) is not None, "the winner's commit was reverted"
+    assert applied(coll), f"{op} had no effect after its retry"
+    assert coll.count() == n_before + 1 - (2 if op == "remove" else 0)
+    assert coll.vacuum() == 0
+
+
+# every mutation entry point; setups run before the flip is wedged
+_WEDGED_OPS = {
+    "add_documents": (None, lambda c: c.add_documents([(7000, [7.0, 0.0, 0.0], "{}")])),
+    "update_metadata": (None, lambda c: c.update_metadata(7, '{"i": 700}')),
+    "remove": (None, lambda c: c.remove([8, 9])),
+    "compact": (_fragment, lambda c: c.compact()),
+    "enable_pq": (None, lambda c: c.enable_pq(m=1, k=8)),
+    "enable_ivf": (None, lambda c: c.enable_ivf(n_clusters=4)),
+    "promote_paths": (None, lambda c: c.promote_paths({"i": "double"})),
+}
+
+
+@pytest.fixture()
+def small_coll(spark, tmp_path):
+    """A two-bucket collection: each of the wedged loop's many commit
+    attempts rewrites every bucket on the reindex paths."""
+    opts = CollectionOptions(name="s", dimension_count=3, n_buckets=2)
+    c = Collection.create(spark, str(tmp_path / "s"), opts)
+    c.add_documents(
+        [(i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(20)]
+    )
+    return c
+
+
+@pytest.mark.parametrize("op", list(_WEDGED_OPS))
+def test_wedged_cas_gives_up_after_retry_budget(small_coll, monkeypatch, op):
+    """A CAS that never succeeds must end in ManifestConflictError after
+    exactly _MAX_COMMIT_RETRIES flip attempts — no unbounded spin —
+    leaving the data, the in-memory options and options.json as they
+    were (the reindex paths roll their index state back)."""
+    c = small_coll
+    setup, mutate = _WEDGED_OPS[op]
+    if setup is not None:
+        setup(c)
+    monkeypatch.setattr(collection_mod, "_conflict_backoff", lambda attempt: None)
+    opts_path = os.path.join(c.path, "options.json")
+    with open(opts_path) as f:
+        opts_file = f.read()
+    opts_mem = asdict(c.options)
+    ids = c.get_all_ids()
+    flips = {"n": 0}
+
+    def wedged_flip(self, manifest, *, expected_version=None):
+        flips["n"] += 1
+        raise ManifestConflictError("injected: the CAS never succeeds")
+
+    c._flip_manifest = wedged_flip.__get__(c)
+    try:
+        with pytest.raises(ManifestConflictError, match="lost the commit race"):
+            mutate(c)
+    finally:
+        del c._flip_manifest
+    assert flips["n"] == collection_mod._MAX_COMMIT_RETRIES
+    assert asdict(c.options) == opts_mem
+    assert c.pq_index is None and c.ivf_index is None
+    with open(opts_path) as f:
+        assert f.read() == opts_file
+    assert c.get_all_ids() == ids
+    assert c.vacuum() == 0
+
+
+def test_failed_options_write_keeps_prior_options(coll, monkeypatch):
+    """options.json is replaced atomically: a write that dies halfway
+    (here json.dump writes half a document, then raises) leaves the
+    previous options readable, the collection openable, the in-memory
+    options rolled back, and no temp file behind."""
+    opts_path = os.path.join(coll.path, "options.json")
+    with open(opts_path) as f:
+        prior = json.load(f)
+    real_dump = json.dump
+
+    def half_dump(obj, fp, **kw):
+        if "options.json" not in getattr(fp, "name", ""):
+            return real_dump(obj, fp, **kw)
+        text = json.dumps(obj, **kw)
+        fp.write(text[: len(text) // 2])
+        raise OSError("injected: disk full mid-write")
+
+    monkeypatch.setattr(collection_mod.json, "dump", half_dump)
+    with pytest.raises(OSError, match="disk full"):
+        coll.enable_ivf(n_clusters=4)
+    monkeypatch.undo()
+    with open(opts_path) as f:
+        assert json.load(f) == prior
+    assert coll.options.ivf is None and coll.ivf_index is None
+    reopened = Collection.open(coll.spark, coll.path)
+    assert reopened.options.ivf is None
+    assert reopened.count() == 100
+    assert [n for n in os.listdir(coll.path) if n.startswith("options.json.")] == []
 
 
 def test_point_mutations_use_closed_form_buckets(coll):

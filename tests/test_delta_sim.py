@@ -1,13 +1,13 @@
 """Delta-specific failure semantics, executed (r5-verdict task 1).
 
-delta-spark cannot be installed in this container, so the adapter in
-storage.py is env-gated. These tests close the proof gap with
+A Delta Lake adapter needs delta-spark, which is not a dependency of
+this package. These tests close the proof gap with
 :class:`FaultInjectingBackend`: each scenario below replays a behavior
 docs/DELTA.md §3 attributes to Delta — the commit-conflict exception
 mapping, the replaceWhere partial-visibility window, losers leaving
 orphans for VACUUM, VACUUM RETAIN's mtime-only retention (the
 reader-pin-vs-vacuum race), and partition-level conflict detection —
-through the same storage seam the real DeltaBackend will use. The
+through the same storage seam a Delta adapter would use. The
 shared contract clauses run in tests/test_storage_backend.py (this
 backend is in its matrix); the 3-process commit storm runs against it
 in tests/test_concurrency.py.

@@ -5,9 +5,8 @@ must pass THIS suite — it pins the format-independent semantics the
 mutation loops rely on: atomic visibility, the version CAS over the
 whole read-merge-write span, staged-file invisibility on conflict,
 vacuum's grace contract, and history/time-travel. The suite is
-parameterized over every backend importable in the environment:
-ManifestBackend always; DeltaBackend automatically joins wherever
-``import delta`` succeeds (docs/DELTA.md maps each operation).
+parameterized over every backend: the manifest, sqlite and delta-sim
+backends (docs/DELTA.md maps each operation onto Delta Lake).
 
 These tests talk to the backend INTERFACE directly (not through
 Collection) — Collection-level behavior is covered by test_storage /
@@ -30,32 +29,18 @@ from syzgydb_spark.storage import (
 # "delta-sim" is the Delta-semantics simulator (losers leave orphans,
 # VACUUM RETAIN keyed on mtime alone, partition-level conflicts, the
 # ConcurrentModificationException mapping) — the executable stand-in
-# for the env-gated DeltaBackend; see tests/test_delta_sim.py for the
+# for a Delta Lake adapter; see tests/test_delta_sim.py for the
 # Delta-specific fault scenarios beyond this shared contract.
-BACKENDS = ["manifest", "sqlite", "delta-sim"]
-try:  # pragma: no cover - env-dependent
-    import delta  # noqa: F401
-
-    BACKENDS.append("delta")
-except ImportError:
-    pass
+BACKENDS = {
+    "manifest": ManifestBackend,
+    "sqlite": SqliteCatalogBackend,
+    "delta-sim": FaultInjectingBackend,
+}
 
 
-def _make(kind, path, spark, **kw):
-    if kind == "manifest":
-        return ManifestBackend(path, **kw)
-    if kind == "sqlite":
-        return SqliteCatalogBackend(path, **kw)
-    if kind == "delta-sim":
-        return FaultInjectingBackend(path, **kw)
-    from syzgydb_spark.storage import DeltaBackend  # pragma: no cover
-
-    return DeltaBackend(spark, path, **kw)  # pragma: no cover
-
-
-@pytest.fixture(params=BACKENDS)
+@pytest.fixture(params=list(BACKENDS))
 def backend(request, tmp_path, spark):
-    b = _make(request.param, str(tmp_path / "tbl"), spark)
+    b = BACKENDS[request.param](str(tmp_path / "tbl"))
     os.makedirs(b.path, exist_ok=True)
     b.initialize()
     return b
@@ -163,9 +148,9 @@ def test_vacuum_grace_protects_inflight_commits(backend, spark, tmp_path):
     assert _read_ids(spark, backend) == [1]
 
 
-@pytest.mark.parametrize("kind", [k for k in BACKENDS if k != "delta"])
+@pytest.mark.parametrize("kind", list(BACKENDS))
 def test_history_and_time_travel(tmp_path, spark, kind):
-    b = _make(kind, str(tmp_path / "hist"), spark, retain_history=True)
+    b = BACKENDS[kind](str(tmp_path / "hist"), retain_history=True)
     os.makedirs(b.path, exist_ok=True)
     b.initialize()
     m1 = b.read_manifest()
@@ -214,6 +199,16 @@ def test_collection_runs_on_sqlite_backend(tmp_path, spark):
     assert os.path.exists(os.path.join(path, "catalog.db"))
     assert not os.path.exists(os.path.join(path, "manifest.json"))
     assert c2.storage.vacuum(grace_seconds=0) == 0               # nothing leaks
+
+
+def test_unknown_storage_backend_rejected():
+    """Only the runnable backends are valid; "delta" has no backend in
+    this package (docs/DELTA.md specifies the adapter to write)."""
+    from syzgydb_spark.collection import CollectionOptions
+
+    for name in ("delta", "manifst"):
+        with pytest.raises(ValueError, match="unknown storage_backend"):
+            CollectionOptions(name="x", dimension_count=2, storage_backend=name)
 
 
 def test_flip_fn_interception_guards_real_commit_path(backend, spark):
