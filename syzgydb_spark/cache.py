@@ -22,6 +22,14 @@ Model relations that are THEMSELVES the returned, persisted DataFrame
 ``release_cached(model)`` and ``model.unpersist()`` are equivalent.
 ``release_cached`` is always safe to call: a DataFrame with no
 attached handles is a no-op, and releasing twice is idempotent.
+
+Release aliasing: Spark's CacheManager keys entries by plan
+(``sameResult``), not by DataFrame object. Two fits of one plan (the
+same reference corpus and parameters) return distinct DataFrames that
+share ONE cache entry, so releasing either drops it for both. The
+other result stays valid (it recomputes from lineage), but its reads
+are no longer cached and the next eager fit of that plan runs the fill
+job again. Release a shared model once, after its last consumer.
 """
 
 from __future__ import annotations
@@ -42,18 +50,23 @@ def own_cached(result: DataFrame, *rels: DataFrame) -> DataFrame:
 
 
 def plan_already_cached(df: DataFrame) -> bool:
-    """True when the CacheManager already holds a ``sameResult`` entry
-    for ``df``'s plan — i.e. a ``persist()`` on it would attach to an
-    existing cached relation instead of registering a new one. Used by
-    eager model fits to skip the fill-forcing action when an identical
-    model is already session-cached (fit once, score many): the count
-    job over the cached blocks is pure per-call overhead there.
-    Conservative ``False`` on any reflection failure."""
+    """True when the CacheManager holds a ``sameResult`` entry for
+    ``df``'s plan AND every partition of that entry is materialized —
+    i.e. a ``persist()`` on it would attach to an existing, filled
+    cached relation. Used by eager model fits to skip the fill-forcing
+    action when an identical model is already session-cached (fit
+    once, score many): the count job over the cached blocks is pure
+    per-call overhead there. A registered but unfilled entry (an
+    ``eager=False`` fit nobody has scored yet, or blocks evicted since)
+    is False, so an eager fit still fills it. Conservative ``False`` on
+    any reflection failure."""
     try:
         jss = df.sparkSession._jsparkSession
-        return bool(
-            jss.sharedState().cacheManager().lookupCachedData(df._jdf).isDefined()
-        )
+        entry = jss.sharedState().cacheManager().lookupCachedData(df._jdf)
+        if not entry.isDefined():
+            return False
+        builder = entry.get().cachedRepresentation().cacheBuilder()
+        return bool(builder.isCachedColumnBuffersLoaded())
     except Exception:
         return False
 

@@ -17,12 +17,16 @@ per-bucket file manifest —
     <path>/data/bucket=<b>/v{N}-*.parquet data, hash-partitioned by
                                          pmod(xxhash64(id), n_buckets)
 
-A mutation stages ONLY the touched buckets to a scratch directory,
-renames the new files into ``data/bucket=<b>/`` (invisible to readers:
-the manifest still lists the old files), atomically flips the manifest,
-then deletes the replaced files. Untouched buckets are never read,
-never written, and their files are byte-identical across the commit
-(asserted by tests/test_collection.py::test_upsert_rewrites_only_touched_buckets).
+A mutation stages ONLY the touched buckets to a scratch directory, as
+exactly one file per touched bucket (each bucket's rows are written by
+one task), renames the new files into ``data/bucket=<b>/`` (invisible
+to readers: the manifest still lists the old files), atomically flips
+the manifest, then deletes the replaced files. So a bucket is one file
+after any commit, like the reference's single span file, and the
+number of files a scan opens never grows with the number of commits.
+Untouched buckets are never read, never written, and their files are
+byte-identical across the commit (asserted by
+tests/test_collection.py::test_upsert_rewrites_only_touched_buckets).
 This is a miniature Delta transaction log — on a production cluster
 this layer is one ``DeltaTable.merge`` call; the semantics (last write
 per id wins, readers never see partial writes) are the same ones
@@ -58,7 +62,10 @@ Schema: ``id BIGINT, vector ARRAY<...>, metadata STRING(JSON)`` with the
 vector element type set by the quantization tier (SURVEY.md §1.2):
 64→DOUBLE, 32→FLOAT, 16/8/4→INT codes in [0, 2^b-1] over a clamped
 [-1,1] domain (quantization.go:5-36). ``df()`` always exposes the
-dequantized ARRAY<DOUBLE> view.
+dequantized ARRAY<DOUBLE> view. Live scans declare the stored schema
+(``_stored_schema``) instead of inferring it from a parquet footer, and
+point ops compute an id's bucket in Python (``bucket_of``), so a
+``get`` runs one Spark job: the scan of the id's one file.
 
 LSH signature columns are materialized at write time when the
 collection has an ANN index configured — no rebuild on open ever.
@@ -66,6 +73,7 @@ collection has an ANN index configured — no rebuild on open ever.
 
 from __future__ import annotations
 
+import copy
 import json
 import logging
 import os
@@ -131,6 +139,41 @@ def _conflict_backoff(attempt: int) -> None:
     import time
 
     time.sleep(random.uniform(0.0, min(0.1 * (2 ** attempt), 2.0)))
+
+
+# Spark's XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64)
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_U64 = (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxhash64_long(value: int, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` of one BIGINT (``XXH64.hashLong``; 42 is the
+    seed ``F.xxhash64`` uses), as a signed int64."""
+    h = (seed + _XXH_P5 + 8) & _U64
+    h ^= _rotl64((value * _XXH_P2) & _U64, 31) * _XXH_P1 & _U64
+    h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+    h ^= h >> 33
+    h = h * _XXH_P2 & _U64
+    h ^= h >> 29
+    h = h * _XXH_P3 & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def bucket_of(doc_id: int, n_buckets: int) -> int:
+    """The bucket ``_encode`` stores ``doc_id`` in:
+    ``pmod(xxhash64(id), n_buckets)``, evaluated in Python (Python's
+    ``%`` by a positive modulus is ``pmod``)."""
+    return _xxhash64_long(int(doc_id)) % n_buckets
+
 
 # valid search tiers; validated up front so a typo ('ifv') errors
 # instead of silently falling through to the exact full scan
@@ -274,6 +317,7 @@ class Collection:
         self.path = path
         self.options = options
         self._lock = _mutation_lock(path)
+        self._schema = None  # stored-layout read schema; see _stored_schema
         # the storage seam: every manifest/commit/vacuum/history call
         # below goes through this object; swapping the table format
         # means swapping this one attribute (see syzgydb_spark/storage.py
@@ -369,6 +413,20 @@ class Collection:
         df = self.spark.createDataFrame([], self.SCHEMA_BASE)
         return self._encode(df)
 
+    def _stored_schema(self) -> T.StructType:
+        """The data-file schema ``_encode`` writes for the current index
+        state, minus the ``bucket`` partition column (the scan derives
+        it from the path, as an int, exactly as inference does).
+        Declaring it means building a scan opens no parquet footer: no
+        schema-inference job per read. Derived once per index state
+        (``_set_index_state`` resets it): deriving it plans an encode of
+        an empty frame, about as long as a whole point ``get``."""
+        if self._schema is None:
+            self._schema = T.StructType(
+                [f for f in self._empty_df().schema.fields if f.name != "bucket"]
+            )
+        return self._schema
+
     # ---- storage (thin delegations through the backend seam; the
     #      names and contracts are the ones the commit loop and the
     #      tests pin — see syzgydb_spark/storage.py for the contract
@@ -393,9 +451,12 @@ class Collection:
         touched: list[int],
         *,
         base_manifest: dict | None = None,
+        small_write: bool = False,
     ) -> None:
         """Replace the live files of exactly ``touched`` buckets with the
-        rows of ``encoded`` (which must contain only those buckets).
+        rows of ``encoded`` (which must contain only those buckets),
+        one file per bucket (``small_write``: see
+        ``ManifestBackend.commit_buckets``).
 
         stage → rename-in (invisible: manifest still lists old files) →
         atomic CAS manifest flip → delete replaced files. Buckets not in
@@ -429,6 +490,7 @@ class Collection:
             manifest,
             bloom_on_id=self.options.id_bloom_filter,
             flip_fn=self._flip_manifest,
+            small_write=small_write,
         )
 
     def _mutate(self, what: str, step):
@@ -456,39 +518,47 @@ class Collection:
             )
 
     def _reindex(self, what: str, options: dict, indexes: dict) -> None:
-        """Install new index state and rewrite every live bucket through
-        ``_encode`` (enable_pq / enable_ivf / promote_paths). ``options``
-        maps CollectionOptions fields and ``indexes`` instance attributes
-        to their new values. The pre-index files are read index-free
-        (``_decoded_plain``: they lack the new columns). On any failure
-        the in-memory state rolls back, so it never claims an index the
-        files and options.json don't have; on success options.json is
-        saved."""
+        """Rewrite every live bucket through ``_encode`` of new index
+        state, then install that state (enable_pq / enable_ivf /
+        promote_paths). ``options`` maps CollectionOptions fields and
+        ``indexes`` instance attributes to their new values. The commit
+        encodes through a staged copy of this Collection, so lock-free
+        readers keep the old state, and the old read schema, until the
+        new files are live; the pre-index files are read index-free
+        (``_decoded_plain``). On any failure the in-memory state is the
+        old one, so it never claims an index the files and options.json
+        don't have; on success options.json is saved."""
+        staged = copy.copy(self)
+        staged.options = copy.copy(self.options)
+        staged._set_index_state(options, indexes)
 
         def step(man):
             touched = [int(b) for b in man["buckets"]]
             if touched:
                 self._commit_buckets(
-                    self._encode(self._decoded_plain(man)), touched,
+                    staged._encode(self._decoded_plain(man)), touched,
                     base_manifest=man,
                 )
 
         with self._lock:
+            self._mutate(what, step)
             prev_opts = {k: getattr(self.options, k) for k in options}
             prev_idx = {k: getattr(self, k) for k in indexes}
-            for k, v in options.items():
-                setattr(self.options, k, v)
-            for k, v in indexes.items():
-                setattr(self, k, v)
+            self._set_index_state(options, indexes)
             try:
-                self._mutate(what, step)
                 self._save_options()
             except BaseException:
-                for k, v in prev_opts.items():
-                    setattr(self.options, k, v)
-                for k, v in prev_idx.items():
-                    setattr(self, k, v)
+                self._set_index_state(prev_opts, prev_idx)
                 raise
+
+    def _set_index_state(self, options: dict, indexes: dict) -> None:
+        """Set CollectionOptions fields and index attributes, and drop
+        the read schema derived from the old ones (``_stored_schema``)."""
+        for k, v in options.items():
+            setattr(self.options, k, v)
+        for k, v in indexes.items():
+            setattr(self, k, v)
+        self._schema = None
 
     def vacuum(self, *, grace_seconds: float = 300.0) -> int:
         """Delete data files not referenced by the live manifest — or,
@@ -528,8 +598,9 @@ class Collection:
         """Decoded view of the collection as of ``version`` (time
         travel). Columns added by later index enables (pq_code,
         ivf_cell, lsh signatures) are projected only if the snapshot's
-        files actually carry them."""
-        raw = self._raw(manifest=self.storage.manifest_at(version))
+        files actually carry them: the scan infers its schema from the
+        files, which may predate an index."""
+        raw = self._raw(manifest=self.storage.manifest_at(version), declared=False)
         have = set(raw.columns)
         cols = [
             F.col("id"),
@@ -610,14 +681,14 @@ class Collection:
 
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Rewrite buckets whose live file count exceeds one into a
-        single file each (small-file compaction — the upsert path adds
-        a file per touched bucket per commit, and parquet scan/footer
-        overhead grows with file count). One ``repartition("bucket")``
-        shuffle of just the touched buckets; each bucket lands wholly
-        in one task, so the writer emits exactly one file per bucket.
-        Runs under the same lock + CAS-retry protocol as any mutation —
-        concurrent upserts either serialize before or retry after. At
-        100 TB you'd bound output file size instead with
+        single file each. Every commit already writes one file per
+        touched bucket (``ManifestBackend.commit_buckets``), so a
+        collection written by this code never needs it: compaction
+        folds layouts written before that rule, where each commit
+        added a file per input partition per bucket. Runs under the
+        same lock + CAS-retry protocol as any mutation — concurrent
+        upserts either serialize before or retry after. At 100 TB you'd
+        bound output file size instead with
         ``spark.sql.files.maxRecordsPerFile``; bucket granularity here
         is n_buckets-tunable. Readers are never blocked (old files stay
         until the flip; with ``retain_history`` they stay readable via
@@ -634,8 +705,9 @@ class Collection:
                 if len(files) > 1 and (buckets is None or int(b) in buckets)
             )
             if todo:
-                enc = self._raw(buckets=todo, manifest=man).repartition("bucket")
-                self._commit_buckets(enc, todo, base_manifest=man)
+                self._commit_buckets(
+                    self._raw(buckets=todo, manifest=man), todo, base_manifest=man
+                )
             return todo, sum(len(man["buckets"][str(b)]) for b in todo)
 
         todo, before = self._mutate("compaction", step)
@@ -693,22 +765,27 @@ class Collection:
         buckets: list[int] | None = None,
         *,
         manifest: dict | None = None,
+        declared: bool = True,
     ) -> DataFrame:
         """Live-file scan. With ``buckets``, list ONLY those buckets'
         files — at 100 TB a point mutation must not even open the other
         buckets' parquet footers (VERDICT r2 #2). With ``manifest``, scan
-        that (historical) file list instead of the live one.
+        that (historical) file list instead of the live one. The scan
+        declares ``_stored_schema()``; ``declared=False`` infers it from
+        the files instead (``snapshot``: old files may lack columns a
+        later index added, which a declared read would return as null).
 
-        The ``read.parquet`` CALL is itself a file access (schema
-        inference reads a parquet footer eagerly), so a cross-process
-        reclaim landing between the manifest snapshot and this line
-        throws here, before any guarded action — the 3-process storm
-        test caught exactly that escape under load. Construction-time
-        stale scans therefore convert like action-time ones: with a
-        caller-pinned ``manifest`` they raise ``ManifestConflictError``
-        (the caller's CAS loop re-merges on a fresh snapshot); a live
-        read simply re-snapshots and retries here, which for a reader
-        is just "see the newest committed state"."""
+        The ``read.parquet`` CALL is itself a file access (it checks
+        that every path exists; schema inference also reads a parquet
+        footer eagerly), so a cross-process reclaim landing between the
+        manifest snapshot and this line throws here, before any guarded
+        action — the 3-process storm test caught exactly that escape
+        under load. Construction-time stale scans therefore convert
+        like action-time ones: with a caller-pinned ``manifest`` they
+        raise ``ManifestConflictError`` (the caller's CAS loop
+        re-merges on a fresh snapshot); a live read simply re-snapshots
+        and retries here, which for a reader is just "see the newest
+        committed state"."""
         for _attempt in range(_MAX_COMMIT_RETRIES):
             if _attempt:
                 _conflict_backoff(_attempt)
@@ -720,10 +797,11 @@ class Collection:
                 return self._empty_df()
             # basePath keeps `bucket` as a partition column → partition
             # pruning on bucket-equality predicates is free
+            reader = self.spark.read.option("basePath", self._data_dir())
+            if declared:
+                reader = reader.schema(self._stored_schema())
             try:
-                return self.spark.read.option(
-                    "basePath", self._data_dir()
-                ).parquet(*paths)
+                return reader.parquet(*paths)
             except Exception as e:
                 if not _is_stale_scan_error(e):
                     raise
@@ -738,17 +816,9 @@ class Collection:
 
     def _buckets_for_ids(self, ids) -> list[int]:
         """``bucket = pmod(xxhash64(id), n_buckets)`` is a closed-form
-        function of the id — evaluate the same expression ``_encode``
-        uses on a literal local relation (no table access)."""
-        df = self.spark.createDataFrame([(int(i),) for i in ids], "id BIGINT")
-        rows = (
-            df.select(
-                F.pmod(F.xxhash64("id"), F.lit(self.options.n_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(r["b"] for r in rows)
+        function of the id — computed in Python (``bucket_of``), so
+        routing a point op runs no Spark job and opens no file."""
+        return sorted({bucket_of(i, self.options.n_buckets) for i in ids})
 
     def df(
         self,
@@ -779,9 +849,8 @@ class Collection:
     def _decoded_plain(self, manifest: dict) -> DataFrame:
         """(id, vector, metadata) decoded view of a manifest snapshot
         WITHOUT index-column projection — the reindex paths read the
-        pre-index files through this while the new index is already
-        installed on the instance (df() would project the not-yet-
-        existing index columns)."""
+        pre-index files through this and encode them with the new
+        index state."""
         raw = self._raw(manifest=manifest)
         return raw.select(
             F.col("id"),
@@ -880,13 +949,24 @@ class Collection:
         if "_seq" in docs.columns:
             docs = docs.drop("_seq")
         new_enc = self._encode(docs)
-        self._merge(new_enc, touched=sorted(r["bucket"] for r in stats))
+        self._merge(
+            new_enc,
+            touched=sorted(r["bucket"] for r in stats),
+            n_rows=sum(r["n"] for r in stats),
+        )
 
-    def _merge(self, new_enc: DataFrame, touched: list[int] | None = None) -> None:
+    def _merge(
+        self,
+        new_enc: DataFrame,
+        touched: list[int] | None = None,
+        n_rows: int | None = None,
+    ) -> None:
         """Bucket-pruned upsert: read ONLY the buckets containing new
         ids, drop their overwritten rows, and commit those buckets —
         everything else stays on disk untouched. Serialized against
-        concurrent writers (in-process lock + CAS retry)."""
+        concurrent writers (in-process lock + CAS retry). ``n_rows``,
+        the batch's row count if known, lets the id anti-join broadcast
+        (``_batch_ids``)."""
         new_enc = new_enc.cache()
         try:
             if touched is None:
@@ -896,13 +976,29 @@ class Collection:
 
             def step(man):
                 cur = self._raw(buckets=touched, manifest=man)
-                kept = cur.join(new_enc.select("id"), on="id", how="left_anti")
+                kept = cur.join(
+                    self._batch_ids(new_enc, n_rows), on="id", how="left_anti"
+                )
                 merged = kept.unionByName(new_enc.select(kept.columns))
                 self._commit_buckets(merged, touched, base_manifest=man)
 
             self._mutate("upsert", step)
         finally:
             new_enc.unpersist()
+
+    def _batch_ids(self, new_enc: DataFrame, n_rows: int | None) -> DataFrame:
+        """The batch's ids for the merge's anti-join, hinted broadcast
+        when ``n_rows`` 8-byte ids fit the session's
+        ``spark.sql.autoBroadcastJoinThreshold``. The cached batch has
+        no size stats before its first action, so without the hint the
+        planner shuffles the whole touched table (sort-merge); past the
+        threshold (or with it disabled, -1) the planner chooses."""
+        ids = new_enc.select("id")
+        conf = self.spark._jsparkSession.sessionState().conf()
+        limit = conf.autoBroadcastJoinThreshold()
+        if n_rows is not None and 8 * n_rows <= limit:
+            return F.broadcast(ids)
+        return ids
 
     def update_metadata(self, doc_id: int, metadata: str) -> None:
         """Metadata-only update keeping the stored (quantized) vector
@@ -936,7 +1032,7 @@ class Collection:
                         spec["col"],
                         promoted_col(F.col("metadata"), path, spec["type"]),
                     )
-            self._commit_buckets(updated, [b], base_manifest=man)
+            self._commit_buckets(updated, [b], base_manifest=man, small_write=True)
 
         self._mutate("update", step)
 
@@ -956,13 +1052,12 @@ class Collection:
             if not probe:
                 return
             cur = self._raw(buckets=probe, manifest=man)
-            touched = [
+            # at most one row per named id: dedup on the driver, so the
+            # probe is one job with no shuffle
+            touched = sorted({
                 r["bucket"]
-                for r in cur.where(F.col("id").isin(ids))
-                .select("bucket")
-                .distinct()
-                .collect()
-            ]
+                for r in cur.where(F.col("id").isin(ids)).select("bucket").collect()
+            })
             if not touched:
                 return
             kept = cur.where(F.col("bucket").isin(touched)).where(
@@ -971,7 +1066,7 @@ class Collection:
                 # that were never named
                 F.coalesce(~F.col("id").isin(ids), F.lit(True))
             )
-            self._commit_buckets(kept, touched, base_manifest=man)
+            self._commit_buckets(kept, touched, base_manifest=man, small_write=True)
 
         self._mutate("delete", step)
 

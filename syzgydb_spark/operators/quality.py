@@ -653,11 +653,12 @@ def unigram_lm(
 
     model_plan = vocab.unionByName(oov)
     # "fit once, score many": when an identical model is already
-    # session-cached (same ref lineage + params ⇒ sameResult), the
-    # persist below attaches to the existing cached relation and the
-    # eager count would be a whole job spent re-counting cached blocks
-    # — per-call overhead, skipped. A released/evicted model misses
-    # the lookup and refits as before.
+    # session-cached and filled (same ref lineage + params ⇒
+    # sameResult), the persist below attaches to the existing cached
+    # relation and the eager count would be a whole job spent
+    # re-counting cached blocks — per-call overhead, skipped. A
+    # released, evicted or never-filled (eager=False) model fails the
+    # check and the eager fit fills it.
     refit = not plan_already_cached(model_plan)
     model = model_plan.persist(StorageLevel.MEMORY_AND_DISK)
     if eager and refit:

@@ -229,7 +229,16 @@ def cluster_balanced_sample(
 
     Returns the input rows plus ``ivf_cell`` and ``sample_rank``
     (1..k within the cell). Deterministic given the fitted centers and
-    seed; engine-portable, so a SQL oracle reproduces the exact rows."""
+    seed; engine-portable, so a SQL oracle reproduces the exact rows.
+
+    ``df`` must be deterministic: re-evaluating it must yield the same
+    rows (Spark's own contract for recomputed stages). The cell
+    assignment is persisted, not checkpointed, so an evicted or lost
+    block is recomputed from ``df``; an input built on ``rand()`` or a
+    fresh ``sample()`` could then feed the per-cell counts and the
+    candidate join different rows and break the exactly-k guarantee.
+    Snapshot such an input (write it out, or ``localCheckpoint()``)
+    before calling."""
     from pyspark.storagelevel import StorageLevel
 
     from syzgydb_spark.cache import own_cached

@@ -23,7 +23,8 @@ expected_version=V)``   ``expected_version``, a compare-and-swap that
                         across processes (flock here; the transaction
                         log protocol in Delta).
 ``commit_buckets(df,    replace exactly ``touched`` buckets' rows with
-touched, base, ...)``   ``df``'s, invisibly stage → publish via the CAS
+touched, base, ...)``   ``df``'s, one file per non-empty bucket,
+                        invisibly stage → publish via the CAS
                         against ``base["version"]`` → reclaim replaced
                         files (unless history is retained). On conflict
                         the staged files must never have been visible
@@ -197,9 +198,15 @@ class ManifestBackend:
         *,
         bloom_on_id: bool = True,
         flip_fn=None,
+        small_write: bool = False,
     ) -> None:
         """Replace the live files of exactly ``touched`` buckets with the
-        rows of ``encoded`` (which must contain only those buckets).
+        rows of ``encoded`` (which must contain only those buckets),
+        written as ONE file per bucket that still has rows.
+
+        ``small_write`` says the rows are one bucket's file plus a few
+        changed rows (a point update or delete), so a one-bucket write
+        may run its whole plan in one task instead of shuffling into it.
 
         stage → rename-in (invisible: manifest still lists old files) →
         atomic CAS manifest flip → delete replaced files. Buckets not in
@@ -229,15 +236,29 @@ class ManifestBackend:
         version = base_version + 1
         staging = os.path.join(self.path, f"_staging_v{version}_{uuid.uuid4().hex[:8]}")
         shutil.rmtree(staging, ignore_errors=True)
+        # One file per touched bucket: every bucket's rows land in ONE
+        # write task, so the writer emits exactly one file per bucket
+        # and a commit never multiplies the files later scans open (the
+        # reference's single span file, spanfile.go:282-357). Several
+        # buckets are hash-partitioned by bucket. One bucket of a small
+        # write coalesces: no shuffle, but coalesce also pulls the scan,
+        # merge and index encoding into that one task, so any other
+        # one-bucket write (a bulk upsert or reindex into n_buckets=1)
+        # shuffles into one partition and keeps that work parallel.
+        if len(touched) > 1:
+            encoded = encoded.repartition("bucket")
+        elif small_write:
+            encoded = encoded.coalesce(1)
+        else:
+            encoded = encoded.repartition(1)
         # Zone-map clustering: sort each task's rows by (bucket,
         # ivf_cell, id) so every emitted file's parquet row groups have
         # tight min/max stats on the columns queries prune on —
         # `ivf_cell IN (probed cells)` for precision='ivf'/'ivfpq'
-        # scans and `id = ?` for point lookups. A task-local sort (no
-        # shuffle); after `compact()` (one task per bucket) the whole
-        # bucket is perfectly clustered. At 100 TB this is the
-        # difference between a probe reading ~n_probes/n_clusters of
-        # each file and reading all of it.
+        # scans and `id = ?` for point lookups. A task-local sort; with
+        # one task per bucket the whole bucket is perfectly clustered.
+        # At 100 TB this is the difference between a probe reading
+        # ~n_probes/n_clusters of each file and reading all of it.
         cluster_keys = ["bucket"]
         if "ivf_cell" in encoded.columns:
             cluster_keys.append("ivf_cell")
@@ -353,8 +374,13 @@ class ManifestBackend:
         import re
         import time
 
-        live = self.referenced_files()
+        # version BEFORE the reference set: a commit landing between
+        # the two reads then has files that are either referenced or
+        # ahead of ``live_version`` (grace-protected). Read the other
+        # way round, its files are unreferenced AND not ahead, and the
+        # pass deletes a live commit's data.
         live_version = self.read_manifest()["version"]
+        live = self.referenced_files()
         now = time.time()
         removed = 0
         data = self.data_dir()
@@ -720,7 +746,8 @@ class FaultInjectingBackend(SqliteCatalogBackend):
 
     # ---- commit with partition-level conflict detection ----
     def commit_buckets(self, encoded, touched, base_manifest, *,
-                       bloom_on_id: bool = True, flip_fn=None) -> None:
+                       bloom_on_id: bool = True, flip_fn=None,
+                       small_write: bool = False) -> None:
         owner_flip = self.flip_manifest if flip_fn is None else flip_fn
         if self._fire("crash_after_stage"):
             # abort INSIDE the partial-visibility window: data files
@@ -733,6 +760,7 @@ class FaultInjectingBackend(SqliteCatalogBackend):
             super().commit_buckets(
                 encoded, touched, base_manifest,
                 bloom_on_id=bloom_on_id, flip_fn=crash_flip,
+                small_write=small_write,
             )
             return  # unreachable — crash_flip always raises
 
@@ -784,6 +812,7 @@ class FaultInjectingBackend(SqliteCatalogBackend):
         super().commit_buckets(
             encoded, touched, base_manifest,
             bloom_on_id=bloom_on_id, flip_fn=delta_flip,
+            small_write=small_write,
         )
 
     # ---- VACUUM RETAIN (mtime-only retention, no version heuristic) ----

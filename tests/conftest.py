@@ -33,3 +33,46 @@ def registry_dfs(spark, sf_dir):
     import __spark_entry__ as E
 
     return {name: fn(spark, sf_dir) for name, fn in E.queries().items()}
+
+
+def _write_legacy_bucket_file(coll, rows):
+    """Add ``rows`` (id, vector, metadata; ids new to ``coll``) as ONE
+    EXTRA encoded parquet file per bucket they hash to, listed in the
+    manifest next to that bucket's live files. That is the on-disk
+    layout of a collection written before commits produced one file per
+    bucket, when every input partition added its own file — the layout
+    ``Collection.compact()`` exists to fold."""
+    import shutil
+    import uuid
+
+    from syzgydb_spark.collection import Collection
+
+    enc = coll._encode(coll.spark.createDataFrame(rows, Collection.SCHEMA_BASE))
+    staging = os.path.join(coll.path, f"_staging_legacy_{uuid.uuid4().hex[:8]}")
+    enc.coalesce(1).write.partitionBy("bucket").parquet(staging)
+    man = coll._manifest()
+    version = man["version"] + 1
+    buckets = {b: list(files) for b, files in man["buckets"].items()}
+    for entry in os.listdir(staging):
+        if not entry.startswith("bucket="):
+            continue
+        dst_dir = os.path.join(coll._data_dir(), entry)
+        os.makedirs(dst_dir, exist_ok=True)
+        for fname in os.listdir(os.path.join(staging, entry)):
+            if fname.endswith(".parquet"):
+                name = f"v{version}-legacy-{fname}"
+                os.replace(
+                    os.path.join(staging, entry, fname), os.path.join(dst_dir, name)
+                )
+                buckets.setdefault(entry.split("=", 1)[1], []).append(name)
+    shutil.rmtree(staging)
+    coll._flip_manifest(
+        {"version": version, "buckets": buckets}, expected_version=man["version"]
+    )
+
+
+@pytest.fixture(scope="session")
+def legacy_bucket_file():
+    """``f(coll, rows)``: fragment ``coll``'s buckets the way commits
+    did before one-file-per-bucket (see ``_write_legacy_bucket_file``)."""
+    return _write_legacy_bucket_file

@@ -119,6 +119,129 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert c.count() == 198
 
 
+def test_get_runs_one_spark_job(spark, tmp_path):
+    """A point ``get`` after an upsert runs exactly ONE Spark job — the
+    scan of the id's single bucket file: routing is computed in Python
+    and the scan declares its schema, so no bucket-hash job, no
+    footer-inference job and no listing job."""
+    opts = CollectionOptions(name="g", dimension_count=3, n_buckets=8)
+    c = Collection.create(spark, str(tmp_path / "g"), opts)
+    c.add_documents(
+        [(i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(100)]
+    )
+    c.add_documents([(i, [1.0, 1.0, 1.0], "{}") for i in range(90, 110)])
+    sc = spark.sparkContext
+    sc.setJobGroup("get-one-job", "point get")
+    try:
+        row = c.get(42)
+    finally:
+        sc.setJobGroup(None, None)
+    assert row["vector"] == [42.0, 0.0, 0.0]
+    assert len(sc.statusTracker().getJobIdsForGroup("get-one-job")) == 1
+
+
+def test_python_bucket_routing_matches_spark(spark):
+    """``bucket_of`` (Python) equals the ``pmod(xxhash64(id), n)`` that
+    ``_encode`` stores, at the int64 edges and on random ids."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from syzgydb_spark.collection import bucket_of
+
+    rng = random.Random(5)
+    ids = [0, 1, -1, 2**63 - 1, -(2**63)] + [
+        rng.randint(-(2**63), 2**63 - 1) for _ in range(500)
+    ]
+    ns = (1, 3, 16, 64)
+    rows = (
+        spark.createDataFrame([(i,) for i in ids], "id BIGINT")
+        .select(
+            "id",
+            *[F.pmod(F.xxhash64("id"), F.lit(n)).alias(f"b{n}") for n in ns],
+        )
+        .collect()
+    )
+    assert len(rows) == len(ids)
+    for n in ns:
+        assert [bucket_of(r["id"], n) for r in rows] == [r[f"b{n}"] for r in rows]
+
+
+def test_upsert_ids_broadcast_only_under_threshold(spark, tmp_path):
+    """The merge hints its batch-id anti-join broadcast only when the
+    batch's 8-byte ids fit ``spark.sql.autoBroadcastJoinThreshold``; a
+    batch past it, an unknown size or a disabled threshold leave the
+    join to the planner, and such an upsert still merges correctly."""
+    opts = CollectionOptions(name="bc", dimension_count=3, n_buckets=4)
+    c = Collection.create(spark, str(tmp_path / "bc"), opts)
+    c.add_documents([(i, [float(i), 0.0, 0.0], "{}") for i in range(100)])
+    batch = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0], "{}") for i in range(50, 250)],
+        Collection.SCHEMA_BASE,
+    ).repartition(4)
+    enc = c._encode(batch)
+
+    def hinted(df):
+        return "broadcast" in df._jdf.queryExecution().analyzed().toString().lower()
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1600")
+        assert hinted(c._batch_ids(enc, 200))
+        assert not hinted(c._batch_ids(enc, 201))
+        assert not hinted(c._batch_ids(enc, None))
+        spark.conf.set(key, "-1")
+        assert not hinted(c._batch_ids(enc, 0))
+        spark.conf.set(key, "800")  # 200 ids need 1600 bytes
+        c.add_documents(batch)
+    finally:
+        spark.conf.set(key, old)
+    assert c.count() == 250
+    assert c.get(10)["vector"] == [10.0, 0.0, 0.0]
+    assert c.get(60)["vector"] == [60.0, 1.0, 0.0]
+    assert c.get(249)["vector"] == [249.0, 1.0, 0.0]
+
+
+def test_readers_keep_old_index_state_until_reindex_commits(spark, tmp_path):
+    """``enable_ivf`` encodes through a staged copy and installs the
+    index only after its commit: a lock-free reader probing right
+    before the manifest flip sees no IVF index and a read schema
+    without ``ivf_cell`` (the live files lack it, so a declared read
+    would return it null), and reads every row; once ``enable_ivf``
+    returns, the schema has the column and no row has it null."""
+    opts = CollectionOptions(name="ri", dimension_count=3, n_buckets=2)
+    c = Collection.create(spark, str(tmp_path / "ri"), opts)
+    c.add_documents(
+        [(i, [float(i % 7), float(i % 3), 1.0], "{}") for i in range(40)]
+    )
+    orig_flip = Collection._flip_manifest
+    seen = []
+
+    def probing_flip(self, manifest, *, expected_version=None):
+        if expected_version is not None:
+            seen.append(
+                (
+                    self.ivf_index,
+                    "ivf_cell" in self._stored_schema().fieldNames(),
+                    self.df().count(),
+                )
+            )
+        return orig_flip(self, manifest, expected_version=expected_version)
+
+    c._flip_manifest = probing_flip.__get__(c)
+    try:
+        c.enable_ivf(n_clusters=4, seed=5)
+    finally:
+        del c._flip_manifest
+    assert seen == [(None, False, 40)]
+    assert c.ivf_index is not None
+    assert "ivf_cell" in c._stored_schema().fieldNames()
+    assert c._raw().where("ivf_cell IS NULL").count() == 0
+    got = c.search([1.0, 1.0, 1.0], k=5, precision="ivf", n_probes=4).collect()
+    assert len(got) == 5
+
+
 def test_dimension_validation(tmp_coll):
     with pytest.raises(ValueError):
         tmp_coll.add_documents([(1, [1.0, 2.0], "{}")])  # collection.go:432-434

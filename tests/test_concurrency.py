@@ -117,9 +117,10 @@ def test_merge_retries_after_losing_cas(spark, coll):
     assert coll.vacuum() == 0
 
 
-def _fragment(coll):
-    """Upsert a few rows so some bucket holds more than one file."""
-    coll.add_documents([(300 + i, [1.0, 1.0, 1.0], "{}") for i in range(16)])
+def _fragment(coll, legacy_bucket_file):
+    """Add a few rows as extra files (the multi-file layout of older commits)
+    so some bucket holds more than one file."""
+    legacy_bucket_file(coll, [(300 + i, [1.0, 1.0, 1.0], "{}") for i in range(16)])
     files = coll._manifest()["buckets"].values()
     assert any(len(f) > 1 for f in files), "setup left no fragmented bucket"
 
@@ -161,13 +162,13 @@ _LOST_CAS_OPS = {
 
 
 @pytest.mark.parametrize("op", list(_LOST_CAS_OPS))
-def test_mutation_retries_after_losing_cas(spark, coll, op):
+def test_mutation_retries_after_losing_cas(spark, coll, legacy_bucket_file, op):
     """Every mutation entry point, not just the upsert, re-runs against
     the winner's manifest after losing the CAS: both writers' effects
     survive and the losing attempt leaves no orphan files."""
     setup, mutate, applied = _LOST_CAS_OPS[op]
     if setup is not None:
-        setup(coll)
+        setup(coll, legacy_bucket_file)
     n_before = coll.count()
     with _first_cas_loses(spark, coll) as calls:
         mutate(coll)
@@ -203,7 +204,9 @@ def small_coll(spark, tmp_path):
 
 
 @pytest.mark.parametrize("op", list(_WEDGED_OPS))
-def test_wedged_cas_gives_up_after_retry_budget(small_coll, monkeypatch, op):
+def test_wedged_cas_gives_up_after_retry_budget(
+    small_coll, legacy_bucket_file, monkeypatch, op
+):
     """A CAS that never succeeds must end in ManifestConflictError after
     exactly _MAX_COMMIT_RETRIES flip attempts — no unbounded spin —
     leaving the data, the in-memory options and options.json as they
@@ -211,7 +214,7 @@ def test_wedged_cas_gives_up_after_retry_budget(small_coll, monkeypatch, op):
     c = small_coll
     setup, mutate = _WEDGED_OPS[op]
     if setup is not None:
-        setup(c)
+        setup(c, legacy_bucket_file)
     monkeypatch.setattr(collection_mod, "_conflict_backoff", lambda attempt: None)
     opts_path = os.path.join(c.path, "options.json")
     with open(opts_path) as f:

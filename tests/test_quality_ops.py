@@ -343,6 +343,34 @@ def test_unigram_lm_is_proper_distribution(spark):
     assert vocab["the"] > vocab["cat"]
 
 
+def test_unigram_lm_eager_fit_after_lazy_fit_fills(spark):
+    """"Eager" means materialized: an ``eager=False`` fit registers the
+    model's cache entry without filling it, so a later eager fit of the
+    same model must still run the fill job instead of treating the
+    registered entry as cached."""
+    from syzgydb_spark.cache import plan_already_cached, release_cached
+    from syzgydb_spark.operators.quality import unigram_lm
+
+    docs = spark.createDataFrame(
+        [(1, "u v u w"), (2, "w v v"), (3, "u u")],
+        "doc_id LONG, text STRING",
+    )
+    lazy = unigram_lm(docs, min_count=1, alpha=0.5, eager=False)
+    assert not plan_already_cached(lazy)
+    sc = spark.sparkContext
+    sc.setJobGroup("lm-lazy-then-eager", "eager fit after a lazy fit")
+    try:
+        eager = unigram_lm(docs, min_count=1, alpha=0.5)
+    finally:
+        sc.setJobGroup(None, None)
+    try:
+        assert len(sc.statusTracker().getJobIdsForGroup("lm-lazy-then-eager")) >= 1
+        assert plan_already_cached(eager)
+    finally:
+        release_cached(lazy)
+        release_cached(eager)
+
+
 def test_unigram_lm_eager_fit_runs_once(spark):
     """Fit once, score many: a second eager unigram_lm over the same
     reference attaches to the session-cached model and must NOT run

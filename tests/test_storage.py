@@ -4,8 +4,8 @@ The reference reclaims replaced spans eagerly (spanfile free-span
 reuse, /root/reference/spanfile.go:282-357) and keeps no versions;
 these are Spark-native storage-maturity extensions in the same
 Delta-like idiom the manifest protocol already follows: compaction
-bounds per-bucket file counts (the upsert path adds one file per
-touched bucket per commit), and ``retain_history`` keeps every
+folds the multi-file buckets of layouts written before every commit
+wrote one file per touched bucket, and ``retain_history`` keeps every
 version's manifest + files readable via ``snapshot(version)`` until
 ``expire_history`` prunes them.
 """
@@ -29,15 +29,19 @@ def _content(df):
     )
 
 
+def _docs(lo, hi):
+    return [(i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(lo, hi)]
+
+
 @pytest.fixture()
-def coll(spark, tmp_path):
+def coll(spark, tmp_path, legacy_bucket_file):
     opts = CollectionOptions(name="c", dimension_count=3, n_buckets=4)
     c = Collection.create(spark, str(tmp_path / "c"), opts)
-    # several commits → several files per bucket
-    for lo in range(0, 60, 20):
-        c.add_documents(
-            [(i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(lo, lo + 20)]
-        )
+    # commits write one file per bucket; two extra files per bucket in
+    # the older multi-file layout give compaction something to fold
+    c.add_documents(_docs(0, 20))
+    legacy_bucket_file(c, _docs(20, 40))
+    legacy_bucket_file(c, _docs(40, 60))
     return c
 
 
@@ -176,12 +180,14 @@ def test_changes_between_versions(hist_coll):
     assert {i for i, ch_ in rev.items() if ch_ == "insert"} == {7, 8, 9}
 
 
-def test_model_based_random_history(spark, tmp_path):
+def test_model_based_random_history(spark, tmp_path, legacy_bucket_file):
     """Model-based check of the full storage stack: a random CRUD +
     compact sequence runs against both the Collection and a plain
     Python dict model snapshotted per version; every retained
     snapshot, the live view, and every adjacent-version CDC diff must
-    match the model exactly."""
+    match the model exactly. Commits write one file per bucket, so
+    each compaction first adds rows in the older multi-file layout,
+    and the sequence ends with one that must fold buckets."""
     import random
 
     rng = random.Random(17)
@@ -194,6 +200,21 @@ def test_model_based_random_history(spark, tmp_path):
 
     def snap():
         history[c._manifest()["version"]] = dict(model)
+
+    def fragment_and_compact(step):
+        rows = [
+            (100 + 8 * step + j, [float(j), float(step)], json.dumps({"l": step}))
+            for j in range(8)
+        ]
+        legacy_bucket_file(c, rows)
+        for i, v, m in rows:
+            model[i] = (tuple(v), m)
+        snap()
+        fragmented = any(len(f) > 1 for f in c._manifest()["buckets"].values())
+        compacted = c.compact()["buckets_compacted"]  # content-neutral
+        assert (compacted > 0) == fragmented
+        snap()
+        return compacted
 
     # an offline 5-seed x 25-step x both-retain-modes sweep of this
     # model (plus reopen-from-disk) ran clean with the same op mix
@@ -223,12 +244,12 @@ def test_model_based_random_history(spark, tmp_path):
             model[i] = (model[i][0], m)
             snap()
         elif op == "compact":
-            c.compact()  # content-neutral; may or may not bump version
-            snap()
+            fragment_and_compact(step)
         elif op == "vacuum":
             c.vacuum()  # content-neutral, version-neutral
         elif op == "expire":
             c.expire_history(keep_last=rng.randint(2, 4))
+    assert fragment_and_compact(12) > 0
 
     def as_dict(df):
         return {
@@ -260,16 +281,24 @@ def test_model_based_random_history(spark, tmp_path):
         assert got == expect, f"diff {va}->{vb}"
 
 
-def test_concurrent_compact_and_upsert(spark, tmp_path):
+def test_concurrent_compact_and_upsert(spark, tmp_path, legacy_bucket_file):
     """compact() racing add_documents: both commits must survive (the
     lock + per-attempt snapshot CAS serialize them), and the final
-    content is exactly base ∪ upsert."""
+    content is exactly base ∪ upsert. Every bucket starts fragmented
+    (older multi-file layout) and the upsert touches only bucket 0, so
+    compaction folds at least the other three whichever goes first."""
     import threading
+
+    from syzgydb_spark.collection import bucket_of
 
     opts = CollectionOptions(name="cc", dimension_count=2, n_buckets=4)
     c = Collection.create(spark, str(tmp_path / "cc"), opts)
-    for lo in range(0, 40, 10):
-        c.add_documents([(i, [float(i), 0.0], None) for i in range(lo, lo + 10)])
+    c.add_documents([(i, [float(i), 0.0], None) for i in range(10)])
+    for lo in range(10, 40, 10):
+        legacy_bucket_file(c, [(i, [float(i), 0.0], None) for i in range(lo, lo + 10)])
+    assert all(len(f) > 1 for f in c._manifest()["buckets"].values())
+    up_ids = [i for i in range(100, 1000) if bucket_of(i, 4) == 0][:10]
+    compacted = []
 
     barrier = threading.Barrier(2)
     errors = []
@@ -277,14 +306,14 @@ def test_concurrent_compact_and_upsert(spark, tmp_path):
     def do_compact():
         try:
             barrier.wait(timeout=30)
-            c.compact()
+            compacted.append(c.compact()["buckets_compacted"])
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
     def do_upsert():
         try:
             barrier.wait(timeout=30)
-            c.add_documents([(i, [9.9, 9.9], None) for i in range(100, 110)])
+            c.add_documents([(i, [9.9, 9.9], None) for i in up_ids])
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
@@ -292,8 +321,10 @@ def test_concurrent_compact_and_upsert(spark, tmp_path):
     t2 = threading.Thread(target=do_upsert)
     t1.start(); t2.start(); t1.join(120); t2.join(120)
     assert not errors
+    assert compacted and compacted[0] >= 3
     ids = set(c.get_all_ids())
-    assert ids == set(range(40)) | set(range(100, 110))
+    assert ids == set(range(40)) | set(up_ids)
+    assert _files_per_bucket(c) == {str(b): 1 for b in range(4)}
 
 
 # ---- zone-map clustering (row-group stats the scans prune on) ----
@@ -407,3 +438,54 @@ def test_id_bloom_filter_written_and_optional(spark, tmp_path):
     assert reopened.options.id_bloom_filter is False
     reopened2 = Collection.open(spark, str(tmp_path / "bloom_on"))
     assert reopened2.options.id_bloom_filter is True
+
+
+def test_commits_write_one_file_per_bucket(spark, tmp_path):
+    """Every commit leaves exactly one file per touched bucket, whatever
+    the input's partitioning: a DataFrame upsert of several input
+    partitions spanning every bucket, then ``update_metadata``, then
+    ``remove`` — each bucket lists one file after each step, and the
+    content is the upsert/update/delete result."""
+    opts = CollectionOptions(name="o", dimension_count=3, n_buckets=4)
+    c = Collection.create(spark, str(tmp_path / "o"), opts)
+    c.add_documents(_docs(0, 40))
+    docs = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0], json.dumps({"i": i})) for i in range(30, 80)],
+        Collection.SCHEMA_BASE,
+    ).repartition(4)
+    assert docs.rdd.getNumPartitions() >= 4
+    c.add_documents(docs)
+    assert _files_per_bucket(c) == {str(b): 1 for b in range(4)}
+    c.update_metadata(33, json.dumps({"i": -33}))
+    assert _files_per_bucket(c) == {str(b): 1 for b in range(4)}
+    c.remove([1, 2, 50])
+    assert set(_files_per_bucket(c).values()) == {1}
+
+    model = {i: ([float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(30)}
+    model.update(
+        {i: ([float(i), 1.0, 0.0], json.dumps({"i": i})) for i in range(30, 80)}
+    )
+    model[33] = (model[33][0], json.dumps({"i": -33}))
+    for i in (1, 2, 50):
+        del model[i]
+    assert _content(c.df()) == sorted(
+        (i, tuple(v), m) for i, (v, m) in model.items()
+    )
+
+
+def test_snapshot_omits_index_columns_its_files_lack(spark, tmp_path):
+    """``snapshot(v)`` of a version written before ``enable_ivf`` infers
+    its schema from that version's files: it has no ``ivf_cell``
+    column (a declared current-schema read would invent a null one),
+    while the live version's snapshot does."""
+    opts = CollectionOptions(
+        name="s", dimension_count=3, n_buckets=2, retain_history=True
+    )
+    c = Collection.create(spark, str(tmp_path / "s"), opts)
+    c.add_documents(_docs(0, 40))
+    before_ivf = c._manifest()["version"]
+    c.enable_ivf(n_clusters=4)
+    assert c.snapshot(before_ivf).columns == ["id", "vector", "metadata"]
+    live = c.snapshot(c._manifest()["version"])
+    assert live.columns == ["id", "vector", "metadata", "ivf_cell"]
+    assert live.where("ivf_cell IS NULL").count() == 0

@@ -148,6 +148,40 @@ def test_vacuum_grace_protects_inflight_commits(backend, spark, tmp_path):
     assert _read_ids(spark, backend) == [1]
 
 
+def test_vacuum_spares_a_commit_landing_mid_pass(backend, spark):
+    """A commit from another process that lands while a vacuum pass is
+    reading the table's state must keep every file the live manifest
+    references: here the commit lands right after the pass read its
+    reference set. (Reading the version after the reference set made
+    the new files look unreferenced and not ahead of the version, so
+    the pass deleted a live commit's data and every later scan of the
+    bucket failed.)"""
+    backend.commit_buckets(_df(spark, [(1, 0)]), [0], backend.read_manifest())
+    read_refs = backend.referenced_files
+    landed = []
+
+    def refs_then_commit():
+        refs = read_refs()
+        if not landed:
+            backend.commit_buckets(
+                _df(spark, [(1, 0), (2, 0)]), [0], backend.read_manifest()
+            )
+            landed.append(True)
+        return refs
+
+    backend.referenced_files = refs_then_commit
+    try:
+        backend.vacuum(grace_seconds=3600)
+    finally:
+        del backend.referenced_files
+    assert landed
+    data = backend.data_dir()
+    for b, files in backend.read_manifest()["buckets"].items():
+        for fname in files:
+            assert os.path.exists(os.path.join(data, f"bucket={b}", fname))
+    assert _read_ids(spark, backend) == [1, 2]
+
+
 @pytest.mark.parametrize("kind", list(BACKENDS))
 def test_history_and_time_travel(tmp_path, spark, kind):
     b = BACKENDS[kind](str(tmp_path / "hist"), retain_history=True)
