@@ -271,20 +271,20 @@ def bench_queries(
     # three passes never pin three copies of a token-count-sized
     # relation for the rest of the bench. Relations that ARE the
     # deployment's long-lived serving state keep their session cache,
-    # exactly as documented: the MinHash ingest signature cache (its
+    # exactly as documented: entries flagged ``keeps_session_cache`` on
+    # their registry function (the MinHash ingest signature cache — its
     # warm number has always priced signature reuse) and the LM model
     # fits (whose handles live on the model relation, not the scoring
     # result — fit once, score many). Warm numbers for the released
     # entries are therefore HIGHER than r10's for the same code; the
     # r10-methodology numbers live in docs/bench/r14_before_sf0.1.json
     # and the delta is documented in OPTIMIZATION_r11.md.
-    KEEP_SESSION_CACHE = {"minhash_near_dups"}
 
     cold: dict[str, float] = {}
     times: dict[str, float] = {}
     shuffles: dict[str, int] = {}
     for name, fn in headline.items():
-        keep = name in KEEP_SESSION_CACHE
+        keep = getattr(fn, "keeps_session_cache", False)
         t0 = time.time()
         df = fn(spark, sf_dir)
         _force(df)

@@ -176,74 +176,43 @@ def bloom_filter_new(
 
 # ------------------------------------------------- persisted bloom store
 #
-# Delta-relation state model (same as the line/fingerprint stores in
-# dedup.py): each update writes its OWN word rows under
-# ``path/batch=<n>/``; readers OR-fold every batch's words. No
-# read-modify-write — an update never rewrites prior state, replays
-# are idempotent (OR is), and the fold is one tiny aggregation over
-# ≤ batches·n_bits/64 rows. A ``bloom.json`` sidecar pins n_bits /
-# n_hashes at build time and every probe/update reads them from there:
-# a parameter mismatch (which would silently produce garbage
-# positions) is structurally impossible, not just documented.
-#
-# All path IO goes through the Hadoop FileSystem API (like the
-# streaming state stores), so an hdfs:// or s3a:// store path behaves
-# exactly like a local one — an os.listdir probe would silently see
-# nothing on a cluster FS.
+# A delta store under the shared protocol (operators/maintenance.py
+# module docstring): each update writes its OWN word rows as a new
+# ``batch=<token>`` delta and readers OR-fold every delta. OR is
+# idempotent, so a replayed update changes no bit and compaction needs
+# no manifest. A ``bloom.json`` sidecar pins n_bits / n_hashes at build
+# time and every probe/update reads them from there: a parameter
+# mismatch (which would silently produce garbage positions) is
+# structurally impossible, not just documented.
 
 import json as _json
 import posixpath as _pp
 
+from .maintenance import (
+    _batch_dir,
+    _delta_token,
+    _exists,
+    _list_batch_tokens,
+    _read_deltas,
+    _read_text,
+    _write_text,
+    publish_parquet_atomically,
+)
 
-def _hfs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _list_bloom_batches(spark, path: str) -> list[str]:
-    """Raw partition values of every delta dir (``batch=<value>``).
-    Values are opaque tokens (``0`` from the build, ``<n>-<uuid>``
-    from updates) — ordering is irrelevant because the read side
-    OR-folds all deltas."""
-    fs, p, _ = _hfs(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            out.append(name.split("=", 1)[1])
-    return sorted(out)
+_SCHEMA = "word_idx BIGINT, word BIGINT"
 
 
-def _write_bloom_meta(spark, path: str, meta: dict) -> None:
-    fs, _, jvm = _hfs(spark, path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(_pp.join(path, "bloom.json")), True)
-    try:
-        out.write(bytearray(_json.dumps(meta).encode()))
-    finally:
-        out.close()
+def _or_fold(deltas: DataFrame) -> DataFrame:
+    return deltas.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
 
 
 def _read_bloom_meta(spark, path: str) -> dict:
-    fs, _, jvm = _hfs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(_pp.join(path, "bloom.json"))
-    if not fs.exists(p):
+    txt = _read_text(spark, _pp.join(path, "bloom.json"))
+    if txt is None:
         raise FileNotFoundError(
             f"no bloom store at {path} (build_bloom_store first)"
         )
-    stream = fs.open(p)
-    try:
-        buf = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            buf.append(b)
-        return _json.loads(bytes(buf).decode())
-    finally:
-        stream.close()
+    return _json.loads(txt)
 
 
 def build_bloom_store(
@@ -258,13 +227,13 @@ def build_bloom_store(
     under ``batch=0`` + the parameter sidecar). One bit_or aggregation
     at any corpus size; the store on disk is ≤ n_bits/64 rows."""
     spark = df.sparkSession
-    fs, _, jvm = _hfs(spark, path)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(_pp.join(path, "bloom.json"))):
+    if _exists(spark, _pp.join(path, "bloom.json")):
         raise FileExistsError(f"bloom store exists at {path}")
     bloom_build(df, key, n_bits=n_bits, n_hashes=n_hashes).write.mode(
         "overwrite"
-    ).parquet(_pp.join(path, "batch=0"))
-    _write_bloom_meta(spark, path, {"n_bits": n_bits, "n_hashes": n_hashes})
+    ).parquet(_batch_dir(path, "0"))
+    _write_text(spark, _pp.join(path, "bloom.json"),
+                _json.dumps({"n_bits": n_bits, "n_hashes": n_hashes}))
 
 
 def update_bloom_store(df: DataFrame, key: Column | str, path: str) -> None:
@@ -279,22 +248,15 @@ def update_bloom_store(df: DataFrame, key: Column | str, path: str) -> None:
     never pick the same target and clobber each other's word rows
     (the old max(n)+1 scheme could). Readers fold whatever deltas
     exist — OR is associative, so interleaving is irrelevant."""
-    import uuid
-
-    from syzgydb_spark.operators.maintenance import publish_parquet_atomically
-
     spark = df.sparkSession
     meta = _read_bloom_meta(spark, path)
-    existing = _list_bloom_batches(spark, path)
-    nxt = len(existing)
-    token = f"{nxt}-{uuid.uuid4().hex[:12]}"
     # rename-committed so a concurrent reader/compactor never folds a
     # half-written delta (for Bloom that would only UNDER-set bits,
     # but a compactor manifesting the token would then drop the rest
     # of the batch's bits permanently — same race as the sum stores)
     publish_parquet_atomically(
         bloom_build(df, key, n_bits=meta["n_bits"], n_hashes=meta["n_hashes"]),
-        _pp.join(path, f"batch={token}"))
+        _batch_dir(path, _delta_token(spark, path)))
 
 
 def read_bloom_store(spark, path: str):
@@ -302,14 +264,8 @@ def read_bloom_store(spark, path: str):
     One aggregation over all batch deltas (OR is associative and
     idempotent — fold order and replays are irrelevant)."""
     meta = _read_bloom_meta(spark, path)
-    dirs = [_pp.join(path, f"batch={b}") for b in _list_bloom_batches(spark, path)]
-    words = (
-        spark.read.option("basePath", path)
-        .parquet(*dirs)
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-    return words, meta
+    tokens = _list_batch_tokens(spark, path)
+    return _or_fold(_read_deltas(spark, path, tokens, _SCHEMA)), meta
 
 
 def probe_bloom_store(

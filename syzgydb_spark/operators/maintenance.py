@@ -1,60 +1,71 @@
-"""Delta compaction for the incremental stores — read-amplification
+"""The delta-store protocol and store compaction — read-amplification
 maintenance.
 
-Every incremental store in this engine follows the same write pattern:
-the build creates a base, each ingest wave appends a small IMMUTABLE
-delta, and readers fold all deltas at probe time (``read_bloom_store``
-OR-folds word rows; ``read_mg_store`` merges bounded summaries;
-``line_dedup_against_store`` sums per-hash delta counts). That pattern
-is what makes updates cheap, replay-safe and concurrent-writer-safe —
-but it accumulates: after 10,000 crawl waves a probe lists and folds
-10,000 delta directories. The fold itself stays small (each delta is
-bounded), yet file listing, parquet footer reads and task scheduling
-grow linearly with history — the classic LSM read-amplification
-problem, and on an object store each listing round-trip is a real
-network call.
+**The delta-store protocol.** The Bloom (``operators/bloom.py``),
+Misra-Gries (``operators/sketch.py``) and quantile
+(``operators/quantiles.py``) stores share one on-disk protocol,
+implemented once in this module; each store module keeps only its
+fold, its delta schema and its public names. A store path holds:
 
-This module folds history back to O(1) directories WITHOUT breaking
-the read-side contract, each family under the strongest crash-safety
-its fold algebra allows:
+- ``batch=<token>/`` — one IMMUTABLE parquet delta per build, update or
+  compaction. Tokens: ``0`` (build), ``<n>-<uuid12>`` (update; ``n`` is
+  the number of deltas listed at the time), a caller's stable token
+  (replayable summed-store updates), ``compact-<uuid12>`` (compaction).
+- a parameter sidecar pinning the fold's width: ``bloom.json`` (Bloom)
+  or ``_meta.json`` (MG, quantile; the legacy Spark-JSON ``_meta/``
+  directory is still read).
+- ``batch=compact-*/_sources.json`` — summed stores only: the tokens a
+  compacted delta supersedes.
+- ``_compact.lock`` — the single-compactor lock (:class:`_compaction_lock`).
+- ``_tmp_delta_*`` / ``_tmp_compact_*`` — uncommitted writes; the
+  underscore hides them from listings and from Spark.
+
+Readers fold every live delta at probe time, so updates are cheap,
+replay-safe and concurrent-writer-safe; all path IO goes through the
+Hadoop FileSystem API, so an hdfs:// or s3a:// store behaves like a
+local one. Each protocol step is one private function here:
+:func:`_list_batch_tokens` (the only ``batch=`` listing — the WARC
+ledger and the streaming state dirs use it too), :func:`_read_text` /
+:func:`_write_text` (sidecars, manifests, the lock),
+:func:`_ensure_store` / :func:`_store_meta` (the ``_meta.json``
+sidecar), :func:`_delta_token` (an update's token),
+:func:`_read_deltas` (a read under the store's declared schema — no
+inference job, and an empty store reads as 0 rows),
+:func:`_rename_commit` (tmp write, then rename; the tmp dir is removed
+if anything fails), :func:`_compact_manifested` (the MG and quantile
+compactor) and :func:`_drop_batches` (garbage collection).
+
+**Compaction** folds history back to O(1) directories: after 10,000
+crawl waves a probe would otherwise list and fold 10,000 deltas — the
+LSM read-amplification problem, where each listing is a network call
+on an object store. Each family gets the strongest crash-safety its
+fold algebra allows:
 
 - **Bloom** (:func:`compact_bloom_store`): OR is associative AND
-  idempotent, so compaction needs no coordination at all — write the
-  folded bitmap as a new delta (rename-commit), then delete the
-  folded sources best-effort. A crash at ANY point leaves a store
-  whose OR-fold is bit-identical: duplicated deltas OR to the same
-  bitmap. This is the same property that makes the store's replayed
-  updates free.
-- **Misra-Gries** (:func:`compact_mg_store`): summary addition is NOT
-  idempotent — a delta folded twice double-counts. The compacted
-  delta therefore carries a ``_sources.json`` manifest naming every
-  token it superseded (transitively: folding a previous compaction
-  inherits its manifest), and the reader excludes superseded tokens
-  before folding. Deleting superseded directories is thereby garbage
-  collection, not a correctness step — a crash between the rename
-  commit and the deletes leaves extra dirs the reader provably
-  ignores. This also upgrades REPLAY handling: a streaming batch
-  whose stable token was already compacted rewrites its delta dir,
-  and the reader correctly ignores it (its counts already live in the
-  compacted summary).
+  idempotent, so compaction needs no manifest and no commit guard —
+  rename-commit the folded bitmap, then delete the sources. A crash at
+  ANY point leaves a store whose OR-fold is bit-identical.
+- **Misra-Gries and quantile** (:func:`compact_mg_store`,
+  ``quantiles.compact_quantile_store``): summary addition is NOT
+  idempotent — a delta folded twice double-counts. The compacted delta
+  carries a ``_sources.json`` manifest naming every token it superseded
+  (transitively), and readers exclude superseded tokens
+  (:func:`live_mg_tokens`). Deleting superseded directories is then
+  garbage collection, not a correctness step, and a streaming replay of
+  an already-compacted stable token is excluded too.
 - **Bucketed fingerprint / line tables** (:func:`compact_fingerprint_store`,
-  :func:`compact_line_store`): ``update_*_store`` appends one file per
-  bucket per batch (and, for the line store, per-batch delta ROWS that
-  readers re-sum per probe). Compaction rewrites the table through the
-  same bucket spec — distinct fingerprints / summed line counts, one
-  compact file set — and swaps it in via DROP + ALTER TABLE RENAME.
-  The swap is the one protocol here with a reader-visible window, so
-  it is guarded by entry-time recovery (a crash between drop and
-  rename is healed by the next call) and documented as a maintenance
-  operation to run while no probes are active — the same
-  single-maintenance-owner contract as the stores' folding writers.
+  :func:`compact_line_store`): rewrite the table through the same
+  bucket spec and swap it in via DROP + ALTER TABLE RENAME. The swap is
+  the one protocol here with a reader-visible window, so it is guarded
+  by entry-time recovery (a crash between drop and rename is healed by
+  the next call) and documented as a maintenance operation to run while
+  no probes are active.
 
-Commit points are directory/table RENAMES (atomic on local
-filesystems and HDFS; on S3-class stores run compaction from a single
-maintenance owner, same caveat as ``compact_near_dedup_state``).
-Concurrent UPDATERS remain safe during Bloom/MG compaction: only
-directories listed before the fold are superseded/deleted, so a delta
-that lands mid-compaction is untouched and stays live.
+Commit points are directory/table RENAMES (atomic on local filesystems
+and HDFS; on S3-class stores run compaction from a single maintenance
+owner). Concurrent UPDATERS stay safe during compaction: only
+directories listed before the fold are superseded or deleted, so a
+delta that lands mid-compaction stays live.
 
 Reference scope note: the reference engine (smhanov/syzgydb) compacts
 its record spanfiles in place (spanfile.go); these functions are the
@@ -70,7 +81,7 @@ import uuid as _uuid
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------------------- fs helpers
+# ------------------------------------------------------ the store protocol
 
 
 def _hfs(spark, path: str):
@@ -79,7 +90,26 @@ def _hfs(spark, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def _list_batch_tokens(spark, path: str) -> list[str]:
+def _uid() -> str:
+    return _uuid.uuid4().hex[:12]
+
+
+def _batch_dir(path: str, token: str) -> str:
+    return _pp.join(path, f"batch={token}")
+
+
+def _exists(spark, path: str) -> bool:
+    fs, jvm = _hfs(spark, path)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+
+
+def _list_batch_tokens(spark, path: str, *,
+                       require_success: bool = False) -> list[str]:
+    """Sorted tokens of every ``batch=<token>`` child directory.
+
+    ``require_success=True`` lists only directories holding Spark's
+    ``_SUCCESS`` marker, which the output committer creates after every
+    data file is in place — the WARC ledger's commit test."""
     fs, jvm = _hfs(spark, path)
     p = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(p):
@@ -87,8 +117,12 @@ def _list_batch_tokens(spark, path: str) -> list[str]:
     out = []
     for st in fs.listStatus(p):
         name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            out.append(name.split("=", 1)[1])
+        if not (st.isDirectory() and name.startswith("batch=")):
+            continue
+        if require_success and not fs.exists(
+                jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
+            continue
+        out.append(name.split("=", 1)[1])
     return sorted(out)
 
 
@@ -135,6 +169,11 @@ def _delete(spark, path: str) -> None:
         fs.delete(p, True)
 
 
+def _drop_batches(spark, path: str, tokens) -> None:
+    for t in tokens:
+        _delete(spark, _batch_dir(path, t))
+
+
 def write_store_meta(spark, store_path: str, meta: dict) -> None:
     """Write a store's parameter sidecar as a single driver-side text
     file (``_meta.json``). The pre-r9 layout wrote it as a Spark JSON
@@ -155,11 +194,78 @@ def read_store_meta(spark, store_path: str) -> dict | None:
     if txt is not None:
         return _json.loads(txt)
     legacy = _pp.join(store_path, "_meta")
-    fs, jvm = _hfs(spark, legacy)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(legacy)):
+    if not _exists(spark, legacy):
         return None
     row = spark.read.json(legacy).collect()[0]
     return _json.loads(row["meta"])
+
+
+def _store_meta(spark, path: str) -> dict:
+    """The ``_meta.json`` sidecar of an existing MG or quantile store."""
+    meta = read_store_meta(spark, path)
+    if meta is None:
+        raise FileNotFoundError(f"no store at {path} (missing _meta.json)")
+    return meta
+
+
+def _ensure_store(spark, path: str, capacity: int, kind: str) -> None:
+    """Create the sidecar if the store doesn't exist yet; validate
+    ``capacity`` against it if it does (summaries of different widths
+    must never fold together). The lazy-init entry point for streaming
+    sinks, whose first batch IS the build."""
+    meta = read_store_meta(spark, path)
+    if meta is None:
+        write_store_meta(spark, path, {"capacity": capacity, "kind": kind})
+    elif meta["capacity"] != capacity:
+        raise ValueError(
+            f"store at {path} was built with "
+            f"capacity={meta['capacity']}, got {capacity}")
+
+
+def _delta_token(spark, path: str, token: str | None = None) -> str:
+    """The token an update writes under: a fresh ``<n>-<uuid12>``, or
+    the caller's stable token unless a compaction manifest has already
+    SUPERSEDED it — a write under it would be excluded from every
+    future fold, which is data loss, not idempotence (the stream
+    restarted with a fresh checkpoint, whose batch ids restart at 0)."""
+    if token is None:
+        return f"{len(_list_batch_tokens(spark, path))}-{_uid()}"
+    if token in superseded_mg_tokens(spark, path):
+        raise ValueError(
+            f"token {token!r} was already folded into a compacted delta of "
+            f"{path}: a write under it would be treated as a replay of the "
+            "compacted batch and excluded from every fold (silent data "
+            "loss). If this is a stream restarted with a FRESH checkpoint, "
+            "its batch ids restarted at 0 — pass a new namespace so new "
+            "micro-batches get tokens the store has never compacted."
+        )
+    return token
+
+
+def _read_deltas(spark, path: str, tokens, schema: str):
+    """The store's delta rows under its DECLARED schema: no
+    schema-inference job when the read is built, and a store with no
+    delta yet reads as 0 rows instead of failing to infer a schema."""
+    return spark.read.schema(schema).parquet(
+        *[_batch_dir(path, t) for t in tokens])
+
+
+def _rename_commit(df, dest: str, tmp_prefix: str, before_commit=None) -> None:
+    """Write ``df`` to an underscore-prefixed tmp sibling of ``dest``,
+    run ``before_commit(tmp)``, then replace ``dest`` by a rename. Any
+    failure deletes the tmp dir: it is invisible to readers, and
+    nothing else would ever collect it."""
+    spark = df.sparkSession
+    tmp = _pp.join(_pp.dirname(dest.rstrip("/")), f"{tmp_prefix}{_uid()}")
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+        if before_commit is not None:
+            before_commit(tmp)
+        _delete(spark, dest)
+        _rename(spark, tmp, dest)
+    except BaseException:
+        _delete(spark, tmp)
+        raise
 
 
 class CompactionInProgressError(RuntimeError):
@@ -276,7 +382,7 @@ class _compaction_lock:
                 "mid-stamp right now — the two are indistinguishable); "
                 "refusing to break it. If it persists, delete "
                 "_compact.lock manually.")
-        tomb = self._path + f".tomb.{_uuid.uuid4().hex[:12]}"
+        tomb = self._path + f".tomb.{_uid()}"
         tomb_p = jvm.org.apache.hadoop.fs.Path(tomb)
         try:
             _rename(self._spark, self._path, tomb)
@@ -339,18 +445,7 @@ def publish_parquet_atomically(df, dest: str) -> None:
     delete+rename pair is only non-atomic for STABLE-token replays,
     where the single-writer-per-token contract already excludes a
     concurrent writer of the same token."""
-    spark = df.sparkSession
-    parent = _pp.dirname(dest.rstrip("/"))
-    tmp = _pp.join(parent, f"_tmp_delta_{_uuid.uuid4().hex[:12]}")
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _delete(spark, dest)
-        _rename(spark, tmp, dest)
-    except BaseException:
-        # a failed write's tmp dir is invisible to readers but nothing
-        # else ever collects it — clean up on the way out
-        _delete(spark, tmp)
-        raise
+    _rename_commit(df.coalesce(1), dest, "_tmp_delta_")
 
 
 # ------------------------------------------------------------------- Bloom
@@ -371,31 +466,35 @@ def compact_bloom_store(spark, path: str) -> int:
     land mid-compaction are untouched (only pre-listed dirs are
     deleted) and simply remain as live deltas for the next run.
     """
+    from syzgydb_spark.operators.bloom import _SCHEMA, _or_fold
+
     with _compaction_lock(spark, path):
         tokens = _list_batch_tokens(spark, path)
         if len(tokens) <= 1:
             return 0
-        dirs = [_pp.join(path, f"batch={t}") for t in tokens]
-        folded = (
-            spark.read.option("basePath", path)
-            .parquet(*dirs)
-            .groupBy("word_idx")
-            .agg(F.bit_or("word").alias("word"))
-        )
-        tmp = _pp.join(path, f"_tmp_compact_{_uuid.uuid4().hex[:12]}")
-        folded.write.mode("overwrite").parquet(tmp)
-        # commit point: after this rename the compacted bitmap is live;
-        # the source deletes below are pure cleanup (OR idempotence)
-        _rename(spark, tmp,
-                _pp.join(path, f"batch=compact-{_uuid.uuid4().hex[:12]}"))
-        for d in dirs:
-            _delete(spark, d)
+        # commit point: after the rename the compacted bitmap is live;
+        # the source deletes are pure cleanup (OR idempotence)
+        _rename_commit(_or_fold(_read_deltas(spark, path, tokens, _SCHEMA)),
+                       _batch_dir(path, f"compact-{_uid()}"), "_tmp_compact_")
+        _drop_batches(spark, path, tokens)
         return len(tokens)
 
 
-# -------------------------------------------------------------- Misra-Gries
+# ------------------------------------------ Misra-Gries and quantile stores
 
 _SOURCES = "_sources.json"
+
+
+def _manifests(spark, path: str) -> tuple[list[str], dict[str, set[str]]]:
+    """The on-disk tokens, and the ``_sources.json`` manifest of each
+    compacted delta among them."""
+    on_disk = _list_batch_tokens(spark, path)
+    out = {}
+    for t in on_disk:
+        txt = _read_text(spark, _pp.join(_batch_dir(path, t), _SOURCES))
+        if txt is not None:
+            out[t] = set(_json.loads(txt))
+    return on_disk, out
 
 
 def superseded_mg_tokens(spark, path: str) -> set[str]:
@@ -404,12 +503,37 @@ def superseded_mg_tokens(spark, path: str) -> set[str]:
     Manifests are transitive (a compaction folding a previous
     compaction inherits its manifest), so a token stays excluded even
     after the intermediate compacted dir is garbage-collected."""
-    out: set[str] = set()
-    for t in _list_batch_tokens(spark, path):
-        txt = _read_text(spark, _pp.join(path, f"batch={t}", _SOURCES))
-        if txt is not None:
-            out.update(_json.loads(txt))
-    return out
+    return set().union(*_manifests(spark, path)[1].values())
+
+
+def _token_state(spark, path: str):
+    """``(live, garbage, superseded)`` from one listing — see
+    :func:`live_mg_tokens`."""
+    on_disk, manifests = _manifests(spark, path)
+    sup = set().union(*manifests.values())
+    live = [t for t in on_disk if t not in sup]
+    # Zombie-compactor healing: a compactor paused past the lock's
+    # staleness horizon whose successor re-compacted the same sources
+    # can — in the microsecond window the commit-point still_held()
+    # guard cannot close — leave TWO live compacted deltas folding the
+    # same tokens; folding both doubles every count. Among live deltas,
+    # drop any whose manifest is a SUBSET of the kept ones' union
+    # (largest manifest first, ties lexicographic): the survivor
+    # carries every dropped token's counts exactly once. The protocol
+    # only produces equal or nested manifests among simultaneously-live
+    # compacted deltas, so subset-drop heals every reachable race and
+    # never drops counts.
+    live_man = {t: manifests[t] for t in live if t in manifests}
+    if len(live_man) > 1:
+        covered: set[str] = set()
+        drop: set[str] = set()
+        for t in sorted(live_man, key=lambda t: (-len(live_man[t]), t)):
+            if live_man[t] <= covered:
+                drop.add(t)
+            else:
+                covered |= live_man[t]
+        live = [t for t in live if t not in drop]
+    return live, sorted(set(on_disk) - set(live)), sup
 
 
 def live_mg_tokens(spark, path: str,
@@ -425,61 +549,64 @@ def live_mg_tokens(spark, path: str,
     ``garbage`` is every on-disk token excluded from the fold —
     lingering superseded dirs (a compactor crashed after its rename
     commit, before cleanup) plus zombie compact deltas dropped by the
-    subset-healing below. Every read provably ignores these, so the
+    subset-healing. Every read provably ignores these, so the
     compactors delete them post-publish; without the sweep a healed
     zombie dir would persist forever and every read would pay its
     ``_sources.json`` fetch plus the healing pass."""
-    sup = superseded_mg_tokens(spark, path)
-    on_disk = _list_batch_tokens(spark, path)
-    live = [t for t in on_disk if t not in sup]
-    # Zombie-compactor healing: a compactor paused past the lock's
-    # staleness horizon whose successor re-compacted the same sources
-    # can — in the microsecond window the commit-point still_held()
-    # guard cannot close — leave TWO live compacted deltas folding the
-    # same tokens; folding both doubles every count. Among live deltas,
-    # drop any whose manifest is a SUBSET of the kept ones' union
-    # (largest manifest first, ties lexicographic): the survivor
-    # carries every dropped token's counts exactly once. The protocol
-    # only produces equal or nested manifests among simultaneously-live
-    # compacted deltas, so subset-drop heals every reachable race and
-    # never drops counts.
-    manifests = {}
-    for t in live:
-        txt = _read_text(spark, _pp.join(path, f"batch={t}", _SOURCES))
-        if txt is not None:
-            manifests[t] = set(_json.loads(txt))
-    if len(manifests) > 1:
-        covered: set[str] = set()
-        drop: set[str] = set()
-        for t in sorted(manifests, key=lambda t: (-len(manifests[t]), t)):
-            if manifests[t] <= covered:
-                drop.add(t)
-            else:
-                covered |= manifests[t]
-        if drop:
-            live = [t for t in live if t not in drop]
-    if with_garbage:
-        return live, sorted(set(on_disk) - set(live))
-    return live
+    live, garbage, _ = _token_state(spark, path)
+    return (live, garbage) if with_garbage else live
+
+
+def _compact_manifested(spark, path: str, schema: str, fold) -> int:
+    """The compactor of the summed (MG, quantile) stores: fold every
+    live delta with ``fold(deltas, capacity)`` into one compacted delta
+    whose ``_sources.json`` manifest names the folded tokens plus
+    everything they had already superseded.
+
+    - Crash after the rename commit, before the source deletes: the
+      superseded dirs linger but are provably ignored; any later
+      compaction deletes them.
+    - Crash or failure before the rename: nothing changed (the tmp dir
+      is invisible, and removed on failure).
+    - An update landing mid-compaction is not in the manifest and
+      stays live.
+
+    Returns the number of deltas folded (0 if ≤ 1 live)."""
+    with _compaction_lock(spark, path) as lk:
+        live, garbage, sup = _token_state(spark, path)
+        if len(live) <= 1:
+            # still vacuum read-ignored dirs so they don't tax every
+            # read with a _sources.json fetch forever
+            _drop_batches(spark, path, garbage)
+            return 0
+        cap = _store_meta(spark, path)["capacity"]
+        folded = fold(_read_deltas(spark, path, live, schema), cap)
+        manifest = _json.dumps(sorted(set(live) | sup))
+
+        def manifest_then_guard(tmp):
+            # the manifest goes inside the dir BEFORE the rename, which
+            # commits data and manifest together. A fold paused past
+            # the lock's staleness horizon may resume AFTER a successor
+            # broke the lock and re-compacted the same sources —
+            # publishing ours too would double every count.
+            _write_text(spark, _pp.join(tmp, _SOURCES), manifest)
+            if not lk.still_held():
+                raise CompactionInProgressError(
+                    f"lock on {path} was broken (stale) while this "
+                    "compaction was folding; a successor owns the store "
+                    "now — aborting before the commit point, nothing was "
+                    "published")
+
+        _rename_commit(folded.coalesce(1), _batch_dir(path, f"compact-{_uid()}"),
+                       "_tmp_compact_", manifest_then_guard)
+        _drop_batches(spark, path, live + garbage)
+        return len(live)
 
 
 def compact_mg_store(spark, path: str) -> int:
-    """Fold all live Misra-Gries deltas into one compacted delta.
-
-    Summary addition is not idempotent, so unlike the Bloom compactor
-    this one records WHAT it folded: the compacted directory carries a
-    ``_sources.json`` manifest (the folded tokens plus everything they
-    had already superseded), and :func:`live_mg_tokens` — which
-    ``read_mg_store`` consults — excludes manifested tokens before
-    folding. Consequences:
-
-    - Crash after the rename commit, before the source deletes: the
-      superseded dirs linger but are provably ignored. Deletion is
-      garbage collection, re-attempted by any later compaction.
-    - Crash before the rename: the ``_tmp_`` dir is invisible to
-      readers (underscore-prefixed); nothing changed.
-    - A concurrent update landing mid-compaction is not in the
-      manifest and stays live.
+    """Fold all live Misra-Gries deltas into one compacted delta under
+    the manifest protocol (:func:`_compact_manifested`);
+    ``read_mg_store`` excludes the tokens it supersedes.
 
     The compacted delta preserves the store's error accounting
     exactly: its real-term rows carry the folded estimates and its
@@ -489,57 +616,10 @@ def compact_mg_store(spark, path: str) -> int:
     deltas — compaction never silently tightens or loosens the
     guarantee. Returns the number of deltas folded (0 if ≤ 1 live).
     """
-    from syzgydb_spark.operators.sketch import _mg_fold, _read_mg_meta
+    from syzgydb_spark.operators.sketch import _SCHEMA, _mg_deltas, _mg_summary
 
-    with _compaction_lock(spark, path) as lk:
-        live, garbage = live_mg_tokens(spark, path, with_garbage=True)
-        if len(live) <= 1:
-            # still vacuum read-ignored dirs so they don't tax every
-            # read with a _sources.json fetch forever
-            for t in garbage:
-                _delete(spark, _pp.join(path, f"batch={t}"))
-            return 0
-        cap = _read_mg_meta(spark, path)["capacity"]
-        sup = superseded_mg_tokens(spark, path)
-        dirs = [_pp.join(path, f"batch={t}") for t in live]
-        deltas = spark.read.parquet(*dirs).select(
-            "term",
-            F.when(F.col("term").isNotNull(), F.col("est_count"))
-            .otherwise(F.lit(0)).alias("est"),
-            F.when(F.col("term").isNull(), F.col("err_bound"))
-            .otherwise(F.lit(0)).alias("dec"),
-        )
-        # the carrier bound comes from the fold's dec_total + cut SCALARS,
-        # which exist even when every merged estimate falls at or below the
-        # cut and the folded relation is empty — aggregating max(err_bound)
-        # over the (possibly empty) folded rows would record bound 0 there,
-        # violating est ≤ true ≤ est + err_bound after compaction
-        folded, bound = _mg_fold(deltas, cap, with_bound=True)
-        carrier = bound.select(
-            F.lit(None).cast("string").alias("term"),
-            F.lit(0).cast("long").alias("est_count"),
-            F.col("err_bound"),
-        )
-        tmp = _pp.join(path, f"_tmp_compact_{_uuid.uuid4().hex[:12]}")
-        folded.unionByName(carrier).coalesce(1).write.mode("overwrite").parquet(tmp)
-        # manifest inside the dir BEFORE the rename: the rename is the
-        # commit point for data + manifest together
-        manifest = sorted(set(live) | sup)
-        _write_text(spark, _pp.join(tmp, _SOURCES), _json.dumps(manifest))
-        # commit-point guard: a fold paused past the lock's staleness
-        # horizon may resume AFTER a successor broke the lock and
-        # re-compacted the same sources — publishing ours too would
-        # double every count. Abort unless we still own the lock.
-        if not lk.still_held():
-            _delete(spark, tmp)
-            raise CompactionInProgressError(
-                f"lock on {path} was broken (stale) while this compaction "
-                "was folding; a successor owns the store now — aborting "
-                "before the commit point, nothing was published")
-        _rename(spark, tmp, _pp.join(path, f"batch=compact-{_uuid.uuid4().hex[:12]}"))
-        for t in live + garbage:
-            _delete(spark, _pp.join(path, f"batch={t}"))
-        return len(live)
+    return _compact_manifested(
+        spark, path, _SCHEMA, lambda d, cap: _mg_summary(_mg_deltas(d), cap))
 
 
 # -------------------------------------------------- bucketed table rebuilds

@@ -38,10 +38,10 @@ per-partition summary (state ≤ capacity centroids regardless of
 partition size), the shuffle moves ≤ partitions × capacity rows, and
 the final fold runs on ONE task over that bounded relation (explicit
 ``coalesce(1)`` — bounded input, never corpus-sized). The persisted
-store appends one bounded delta per wave and compacts under the
-manifest protocol (summary addition is not idempotent — same algebra
-class as the MG store, so it reuses ``maintenance``'s superseded-token
-machinery).
+store is a delta store under the shared protocol
+(``operators/maintenance.py``): one bounded delta per wave, compacted
+under the manifest protocol like the MG store (summary addition is
+not idempotent).
 
 Reference scope note: the reference engine (smhanov/syzgydb) has no
 aggregation surface beyond collection stats; this module is part of
@@ -50,10 +50,20 @@ the 100 TB pipeline extension (BASELINE.json north stars).
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .maintenance import (
+    _batch_dir,
+    _compact_manifested,
+    _delta_token,
+    _ensure_store,
+    _read_deltas,
+    _store_meta,
+    live_mg_tokens,
+    publish_parquet_atomically,
+    write_store_meta,
+)
 
 _SCHEMA = "value double, weight long"
 
@@ -232,22 +242,11 @@ def sketch_quantiles(summary: DataFrame, qs: list[float]) -> DataFrame:
 # ---- persisted mergeable store (cross-wave distribution tracking) ----
 
 
-def _read_qs_meta(spark, path: str) -> dict:
-    from syzgydb_spark.operators.maintenance import read_store_meta
-
-    meta = read_store_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no store at {path} (missing _meta.json)")
-    return meta
-
-
 def _write_qs_batch(df, value, path, capacity, *, token):
-    from syzgydb_spark.operators.maintenance import publish_parquet_atomically
-
-    out = quantile_sketch(df, value, capacity)
     # rename-committed so a concurrent reader/compactor never folds a
     # half-written delta (Spark's plain write creates the dir early)
-    publish_parquet_atomically(out, posixpath.join(path, f"batch={token}"))
+    publish_parquet_atomically(quantile_sketch(df, value, capacity),
+                               _batch_dir(path, token))
 
 
 def build_quantile_store(
@@ -257,11 +256,8 @@ def build_quantile_store(
     capacity is an enforced sidecar parameter (the Bloom/MG stance):
     updates and reads take it from the store, so summaries of
     different widths can never fold together."""
-    from syzgydb_spark.operators.maintenance import write_store_meta
-
-    spark = df.sparkSession
     _write_qs_batch(df, value, path, capacity, token="0")
-    write_store_meta(spark, path,
+    write_store_meta(df.sparkSession, path,
                      {"capacity": capacity, "kind": "bht-histogram"})
 
 
@@ -271,20 +267,7 @@ def ensure_quantile_store(spark, path: str, capacity: int) -> None:
     different widths must never fold together). The lazy-init entry
     point for streaming sinks, whose first batch IS the build — the
     ``ensure_mg_store`` contract."""
-    from syzgydb_spark.operators.maintenance import (
-        read_store_meta,
-        write_store_meta,
-    )
-
-    meta = read_store_meta(spark, path)
-    if meta is not None:
-        if meta["capacity"] != capacity:
-            raise ValueError(
-                f"store at {path} was built with "
-                f"capacity={meta['capacity']}, got {capacity}")
-        return
-    write_store_meta(spark, path,
-                     {"capacity": capacity, "kind": "bht-histogram"})
+    _ensure_store(spark, path, capacity, "bht-histogram")
 
 
 def update_quantile_store(
@@ -299,85 +282,30 @@ def update_quantile_store(
     concurrent updaters from clobbering each other.
 
     A caller-supplied token that a compaction manifest has already
-    superseded is REJECTED (see ``sketch._reject_superseded_token``):
-    a stream restarted with a fresh checkpoint restarts batch ids at
-    0, and writing new data under a compacted token would be silently
+    superseded is REJECTED (see ``maintenance._delta_token``): a
+    stream restarted with a fresh checkpoint restarts batch ids at 0,
+    and writing new data under a compacted token would be silently
     excluded from every fold. New checkpoint → new namespace."""
-    import uuid
-
-    from syzgydb_spark.operators.maintenance import _list_batch_tokens
-    from syzgydb_spark.operators.sketch import _reject_superseded_token
-
     spark = df.sparkSession
-    cap = _read_qs_meta(spark, path)["capacity"]
-    if token is None:
-        token = f"{len(_list_batch_tokens(spark, path))}-{uuid.uuid4().hex[:12]}"
-    else:
-        _reject_superseded_token(spark, path, token)
-    _write_qs_batch(df, value, path, cap, token=token)
+    cap = _store_meta(spark, path)["capacity"]
+    _write_qs_batch(df, value, path, cap, token=_delta_token(spark, path, token))
 
 
 def read_quantile_store(spark, path: str) -> DataFrame:
     """The folded live summary: one mergeable fold over the LIVE
     deltas (superseded-token manifests honored — see
     :func:`compact_quantile_store`), each ≤ capacity rows."""
-    from syzgydb_spark.operators.maintenance import live_mg_tokens
-
-    cap = _read_qs_meta(spark, path)["capacity"]
-    dirs = [posixpath.join(path, f"batch={b}")
-            for b in live_mg_tokens(spark, path)]
-    return _qs_fold(spark.read.parquet(*dirs), cap).orderBy("value")
+    cap = _store_meta(spark, path)["capacity"]
+    deltas = _read_deltas(spark, path, live_mg_tokens(spark, path), _SCHEMA)
+    return _qs_fold(deltas, cap).orderBy("value")
 
 
 def compact_quantile_store(spark, path: str) -> int:
-    """Fold all live deltas into one manifest-carrying delta — the
-    exact MG compaction protocol (operators/maintenance): summary
-    addition is not idempotent, so the compacted dir's
+    """Fold all live deltas into one manifest-carrying delta — the MG
+    compaction protocol (``maintenance._compact_manifested``):
+    summary addition is not idempotent, so the compacted dir's
     ``_sources.json`` supersedes its inputs transitively; crashed
     deletes and replayed stable tokens are provably excluded, and a
     concurrent update landing mid-compaction stays live. Returns the
     number of deltas folded (0 if ≤ 1 live)."""
-    import json as _json
-    import uuid as _uuid
-
-    from syzgydb_spark.operators.maintenance import (
-        CompactionInProgressError,
-        _compaction_lock,
-        _delete,
-        _rename,
-        _write_text,
-        live_mg_tokens,
-        superseded_mg_tokens,
-    )
-
-    with _compaction_lock(spark, path) as lk:
-        live, garbage = live_mg_tokens(spark, path, with_garbage=True)
-        if len(live) <= 1:
-            # vacuum read-ignored dirs (lingering superseded sources,
-            # healed zombie compact deltas) even when there is nothing
-            # to fold — see live_mg_tokens
-            for t in garbage:
-                _delete(spark, posixpath.join(path, f"batch={t}"))
-            return 0
-        cap = _read_qs_meta(spark, path)["capacity"]
-        sup = superseded_mg_tokens(spark, path)
-        dirs = [posixpath.join(path, f"batch={t}") for t in live]
-        folded = _qs_fold(spark.read.parquet(*dirs), cap)
-        tmp = posixpath.join(path, f"_tmp_compact_{_uuid.uuid4().hex[:12]}")
-        folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _write_text(spark, posixpath.join(tmp, "_sources.json"),
-                    _json.dumps(sorted(set(live) | sup)))
-        # commit-point guard (see compact_mg_store): a zombie fold that
-        # outlived the lock's staleness horizon must not publish over a
-        # successor's compaction of the same sources
-        if not lk.still_held():
-            _delete(spark, tmp)
-            raise CompactionInProgressError(
-                f"lock on {path} was broken (stale) while this compaction "
-                "was folding; a successor owns the store now — aborting "
-                "before the commit point, nothing was published")
-        _rename(spark, tmp,
-                posixpath.join(path, f"batch=compact-{_uuid.uuid4().hex[:12]}"))
-        for t in live + garbage:
-            _delete(spark, posixpath.join(path, f"batch={t}"))
-        return len(live)
+    return _compact_manifested(spark, path, _SCHEMA, _qs_fold)

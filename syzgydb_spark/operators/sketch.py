@@ -24,12 +24,11 @@ count nothing ever decrements and the result is EXACT with
 ``err_bound`` 0 — the regime the DuckDB oracle checks bit-for-bit;
 the lossy regime is covered by the guarantee tests.
 
-The persisted store follows the engine's incremental-state pattern
-(fingerprint/line/Bloom stores): each batch appends its own bounded
-sketch as a ``batch=<n>-<uuid>`` delta, prior deltas are never
-rewritten, and the read side folds all deltas with the mergeable-
-summaries rule — a crawl wave's hot-item tracking never re-scans
-earlier waves.
+The persisted store is a delta store under the shared protocol
+(``operators/maintenance.py``): each batch appends its own bounded
+sketch as a delta, and the read side folds the live deltas with the
+mergeable-summaries rule — a crawl wave's hot-item tracking never
+re-scans earlier waves.
 
 Reference scope note: the reference engine (smhanov/syzgydb) has no
 aggregation beyond collection stats; this module is part of the
@@ -38,10 +37,19 @@ aggregation beyond collection stats; this module is part of the
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .maintenance import (
+    _batch_dir,
+    _delta_token,
+    _ensure_store,
+    _read_deltas,
+    _store_meta,
+    live_mg_tokens,
+    publish_parquet_atomically,
+    write_store_meta,
+)
 
 
 def _mg_partials(df: DataFrame, term: Column, capacity: int) -> DataFrame:
@@ -152,18 +160,51 @@ def frequent_terms(
 
 # ---- persisted mergeable store (incremental crawl-wave tracking) ----
 
-def _list_batches(spark, path: str) -> list[str]:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            out.append(name.split("=", 1)[1])
-    return out
+# a delta: one batch's folded summary plus a NULL-term err_bound carrier
+_SCHEMA = "term STRING, est_count BIGINT, err_bound BIGINT"
+
+
+def _mg_summary(partials: DataFrame, capacity: int) -> DataFrame:
+    """Fold ``(term, est, dec)`` summaries into one delta: the folded
+    terms plus a NULL-term carrier row holding the fold's err_bound
+    (the fold reads ``dec`` only from NULL-term rows, ``est`` only
+    from real terms). The bound comes from the fold's dec_total + cut
+    SCALARS, which exist even when every merged estimate falls at or
+    below the cut and the folded relation is empty — max(err_bound)
+    over the folded rows records 0 there (e.g. capacity=2, a batch of
+    4 singleton terms folds to nothing), and every cut term would then
+    violate est ≤ true ≤ est + err_bound on read."""
+    out, bound = _mg_fold(partials, capacity, with_bound=True)
+    carrier = bound.select(
+        F.lit(None).cast("string").alias("term"),
+        F.lit(0).cast("long").alias("est_count"),
+        F.col("err_bound"),
+    )
+    return out.unionByName(carrier)
+
+
+def _mg_deltas(deltas: DataFrame) -> DataFrame:
+    """Stored deltas as fold input ``(term, est, dec)``: per-delta
+    err_bound is carried on that delta's NULL-term row only, so the
+    fold never multiplies a delta's bound by its row count."""
+    return deltas.select(
+        "term",
+        F.when(F.col("term").isNotNull(), F.col("est_count"))
+        .otherwise(F.lit(0)).alias("est"),
+        F.when(F.col("term").isNull(), F.col("err_bound"))
+        .otherwise(F.lit(0)).alias("dec"),
+    )
+
+
+def _write_mg_batch(df, term, path, capacity, *, token):
+    if capacity < 1:
+        raise ValueError("capacity must be >= 1")
+    term = F.col(term) if isinstance(term, str) else term
+    # rename-committed so a concurrent reader/compactor never folds a
+    # half-written delta (Spark's plain write creates the dir early)
+    publish_parquet_atomically(
+        _mg_summary(_mg_partials(df, term, capacity), capacity),
+        _batch_dir(path, token))
 
 
 def build_mg_store(
@@ -173,11 +214,8 @@ def build_mg_store(
     The capacity is an enforced sidecar parameter (the Bloom-store
     stance): updates and reads take it from the store, so folds can
     never mix summaries of different widths."""
-    from syzgydb_spark.operators.maintenance import write_store_meta
-
-    spark = df.sparkSession
     _write_mg_batch(df, term, path, capacity, token="0")
-    write_store_meta(spark, path,
+    write_store_meta(df.sparkSession, path,
                      {"capacity": capacity, "kind": "misra-gries"})
 
 
@@ -186,20 +224,7 @@ def ensure_mg_store(spark, path: str, capacity: int) -> None:
     validate ``capacity`` against it if it does (summaries of
     different widths must never fold together). The lazy-init entry
     point for streaming sinks, whose first batch IS the build."""
-    from syzgydb_spark.operators.maintenance import (
-        read_store_meta,
-        write_store_meta,
-    )
-
-    meta = read_store_meta(spark, path)
-    if meta is not None:
-        if meta["capacity"] != capacity:
-            raise ValueError(
-                f"store at {path} was built with "
-                f"capacity={meta['capacity']}, got {capacity}")
-        return
-    write_store_meta(spark, path,
-                     {"capacity": capacity, "kind": "misra-gries"})
+    _ensure_store(spark, path, capacity, "misra-gries")
 
 
 def update_mg_store(
@@ -222,33 +247,9 @@ def update_mg_store(
     restarted with a fresh checkpoint restarts batch ids at 0 and
     would reuse compacted ``<namespace>-0..N`` tokens for genuinely
     new data. Use a new namespace for a new checkpoint."""
-    import uuid
-
     spark = df.sparkSession
-    cap = _read_mg_meta(spark, path)["capacity"]
-    if token is None:
-        token = f"{len(_list_batches(spark, path))}-{uuid.uuid4().hex[:12]}"
-    else:
-        _reject_superseded_token(spark, path, token)
-    _write_mg_batch(df, term, path, cap, token=token)
-
-
-def _reject_superseded_token(spark, path: str, token: str) -> None:
-    """Raise if ``token`` already lives inside a compacted delta's
-    manifest — an update under it would be silently dropped by every
-    future fold, which is data loss, not idempotence. Shared by the
-    MG and quantile stores (same manifest protocol)."""
-    from syzgydb_spark.operators.maintenance import superseded_mg_tokens
-
-    if token in superseded_mg_tokens(spark, path):
-        raise ValueError(
-            f"token {token!r} was already folded into a compacted delta of "
-            f"{path}: a write under it would be treated as a replay of the "
-            "compacted batch and excluded from every fold (silent data "
-            "loss). If this is a stream restarted with a FRESH checkpoint, "
-            "its batch ids restarted at 0 — pass a new namespace so new "
-            "micro-batches get tokens the store has never compacted."
-        )
+    cap = _store_meta(spark, path)["capacity"]
+    _write_mg_batch(df, term, path, cap, token=_delta_token(spark, path, token))
 
 
 def read_mg_store(spark, path: str) -> DataFrame:
@@ -260,56 +261,6 @@ def read_mg_store(spark, path: str) -> DataFrame:
     folds are not idempotent, so a compacted batch's counts must
     never be folded a second time, even if a streaming replay
     rewrites its directory)."""
-    from syzgydb_spark.operators.maintenance import live_mg_tokens
-
-    cap = _read_mg_meta(spark, path)["capacity"]
-    dirs = [posixpath.join(path, f"batch={b}")
-            for b in live_mg_tokens(spark, path)]
-    # per-delta err_bound is constant per batch and carried on that
-    # batch's NULL-term row — real-term rows contribute `est` only,
-    # so the fold never multiplies a batch's bound by its row count
-    deltas = spark.read.parquet(*dirs).select(
-        "term",
-        F.when(F.col("term").isNotNull(), F.col("est_count"))
-        .otherwise(F.lit(0)).alias("est"),
-        F.when(F.col("term").isNull(), F.col("err_bound"))
-        .otherwise(F.lit(0)).alias("dec"),
-    )
-    return _mg_fold(deltas, cap)
-
-
-def _write_mg_batch(df, term, path, capacity, *, token):
-    if capacity < 1:
-        raise ValueError("capacity must be >= 1")
-    term = F.col(term) if isinstance(term, str) else term
-    # carry the batch's err_bound on a NULL-term row (the fold reads
-    # `dec` only from NULL-term rows, `est` only from real terms).
-    # The bound comes from the fold's dec_total + cut SCALARS, which
-    # exist even when every merged estimate falls at or below the cut
-    # and the folded relation is empty — max(err_bound) over the
-    # folded rows records 0 there (e.g. capacity=2, a batch of 4
-    # singleton terms folds to nothing), and every cut term would then
-    # violate est ≤ true ≤ est + err_bound on read. Same construction
-    # as compact_mg_store's carrier.
-    out, bound = _mg_fold(_mg_partials(df, term, capacity), capacity,
-                          with_bound=True)
-    carrier = bound.select(
-        F.lit(None).cast("string").alias("term"),
-        F.lit(0).cast("long").alias("est_count"),
-        F.col("err_bound"),
-    )
-    from syzgydb_spark.operators.maintenance import publish_parquet_atomically
-
-    # rename-committed so a concurrent reader/compactor never folds a
-    # half-written delta (Spark's plain write creates the dir early)
-    publish_parquet_atomically(
-        out.unionByName(carrier), posixpath.join(path, f"batch={token}"))
-
-
-def _read_mg_meta(spark, path: str) -> dict:
-    from syzgydb_spark.operators.maintenance import read_store_meta
-
-    meta = read_store_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no store at {path} (missing _meta.json)")
-    return meta
+    cap = _store_meta(spark, path)["capacity"]
+    deltas = _read_deltas(spark, path, live_mg_tokens(spark, path), _SCHEMA)
+    return _mg_fold(_mg_deltas(deltas), cap)

@@ -37,6 +37,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
+from syzgydb_spark.operators.maintenance import _drop_batches, _list_batch_tokens
+
 WARC_SCHEMA = (
     "path string, record_id string, warc_type string, target_uri string, "
     "warc_date string, content_type string, content_length long, "
@@ -483,39 +485,6 @@ def _records_from_paths_with_markers(
     return src.mapInPandas(run, schema=INGEST_SCHEMA)
 
 
-def _hfs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _list_batches(spark, path: str, *,
-                  require_success: bool = False) -> list[str]:
-    """Tokens of every ``batch=<token>`` child dir (opaque
-    ``<n>-<uuid>`` values; ordering is irrelevant).
-
-    ``require_success=True`` is the ledger's commit test: Spark's
-    output committer creates ``_SUCCESS`` only after every data file
-    has been moved into place, so a driver crash mid-ledger-write
-    leaves a dir that is NOT treated as committed — without this, a
-    half-written ledger batch makes its records batch reader-visible
-    while the segment paths are missing from ``seen``, and the next
-    run re-ingests them (duplicate records)."""
-    fs, p, jvm = _hfs(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            if require_success and not fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(
-                        st.getPath(), "_SUCCESS")):
-                continue
-            out.append(name.split("=", 1)[1])
-    return out
-
-
 def ingest_warc_segments(spark, segments_path: str, store_path: str,
                          *, clean_orphans: bool = True,
                          on_error: str = "fail",
@@ -583,18 +552,21 @@ def ingest_warc_segments(spark, segments_path: str, store_path: str,
     records_dir = posixpath.join(store_path, "records")
     ledger_dir = posixpath.join(store_path, "ledger")
 
-    committed = _list_batches(spark, ledger_dir, require_success=True)
+    # the ledger's commit test: Spark's output committer creates
+    # _SUCCESS only after every data file is in place, so a driver
+    # crash mid-ledger-write leaves a batch that is NOT committed —
+    # otherwise its records would turn reader-visible while its
+    # segment paths are missing from ``seen``, and the next run would
+    # re-ingest them (duplicate records)
+    committed = _list_batch_tokens(spark, ledger_dir, require_success=True)
     if clean_orphans:
-        fs, _, jvm = _hfs(spark, records_dir)
-        for tok in set(_list_batches(spark, records_dir)) - set(committed):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                posixpath.join(records_dir, f"batch={tok}")), True)
+        _drop_batches(spark, records_dir,
+                      set(_list_batch_tokens(spark, records_dir)) - set(committed))
         # half-written ledger dirs (no _SUCCESS: driver died mid-commit)
         # are junk from dead runs too — their records dir was just
         # removed above, so remove the dangling ledger dir as well
-        for tok in set(_list_batches(spark, ledger_dir)) - set(committed):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                posixpath.join(ledger_dir, f"batch={tok}")), True)
+        _drop_batches(spark, ledger_dir,
+                      set(_list_batch_tokens(spark, ledger_dir)) - set(committed))
 
     files = (
         spark.read.format("binaryFile").load(segments_path)
@@ -682,8 +654,8 @@ def read_ingested_records(spark, store_path: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    committed = _list_batches(spark, posixpath.join(store_path, "ledger"),
-                              require_success=True)
+    committed = _list_batch_tokens(
+        spark, posixpath.join(store_path, "ledger"), require_success=True)
     if not committed:
         return spark.createDataFrame([], WARC_SCHEMA)
     return spark.read.schema(INGEST_SCHEMA).parquet(*[
@@ -699,8 +671,8 @@ def read_ingest_ledger(spark, store_path: str) -> DataFrame:
     batches written before the ``error`` column read as NULL."""
     import posixpath
 
-    committed = _list_batches(spark, posixpath.join(store_path, "ledger"),
-                              require_success=True)
+    committed = _list_batch_tokens(
+        spark, posixpath.join(store_path, "ledger"), require_success=True)
     if not committed:
         return spark.createDataFrame([], LEDGER_SCHEMA)
     return spark.read.schema(LEDGER_SCHEMA).parquet(*[

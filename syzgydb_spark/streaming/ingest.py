@@ -22,26 +22,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from syzgydb_spark.collection import Collection
+from syzgydb_spark.operators.maintenance import _list_batch_tokens
 
 
 def _list_batch_dirs(spark: SparkSession, d: str) -> list[int]:
-    """Batch ids present under ``d`` — via the Hadoop FileSystem API,
-    so hdfs:// / s3a:// state directories work the same as local paths
-    (an os.listdir probe silently sees nothing on a cluster FS and
-    would disable cross-batch dedup without any error)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(d)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
+    """Integer batch ids present under ``d`` (the store listing of
+    ``operators/maintenance.py``, Hadoop-FS based so hdfs:// / s3a://
+    state directories work like local paths)."""
     out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
+    for t in _list_batch_tokens(spark, d):
+        try:
+            out.append(int(t))
+        except ValueError:
+            continue
     return sorted(out)
 
 

@@ -40,6 +40,47 @@ def _batch_dirs(path):
     return sorted(d for d in os.listdir(path) if d.startswith("batch="))
 
 
+class _SummedStore:
+    """One API over the two manifest-compacted (summed) stores. Items
+    are one-letter terms; the quantile store holds each as the float
+    ``ord(letter)``, and ``state`` reads both back as ``{term: (count,
+    err_bound)}`` (quantile: weight and 0 — capacities here keep it in
+    the exact regime)."""
+
+    def __init__(self, spark, kind):
+        from syzgydb_spark.operators import quantiles as qs
+        from syzgydb_spark.operators import sketch as mg
+
+        self.spark, self.kind = spark, kind
+        if kind == "mg":
+            self.build, self.ensure, self.update = (
+                mg.build_mg_store, mg.ensure_mg_store, mg.update_mg_store)
+            self.read, self.compact = mg.read_mg_store, compact_mg_store
+        else:
+            self.build, self.ensure, self.update = (
+                qs.build_quantile_store, qs.ensure_quantile_store,
+                qs.update_quantile_store)
+            self.read = qs.read_quantile_store
+            self.compact = qs.compact_quantile_store
+
+    def df(self, items):
+        if self.kind == "mg":
+            return _terms(self.spark, items)
+        return self.spark.createDataFrame(
+            [(float(ord(t)),) for t in items], "term double")
+
+    def state(self, path):
+        rows = self.read(self.spark, path).collect()
+        if self.kind == "mg":
+            return {r["term"]: (r["est_count"], r["err_bound"]) for r in rows}
+        return {chr(int(r["value"])): (r["weight"], 0) for r in rows}
+
+
+@pytest.fixture(params=["mg", "quantile"])
+def summed(spark, request):
+    return _SummedStore(spark, request.param)
+
+
 # ------------------------------------------------------------------- Bloom
 
 
@@ -167,7 +208,7 @@ def test_mg_compaction_bound_survives_empty_fold(spark, tmp_path):
     assert est <= 6 <= est + err
 
 
-def test_mg_replayed_superseded_token_raises(spark, tmp_path):
+def test_mg_replayed_superseded_token_raises(summed, tmp_path):
     """Writing under an already-compacted stable token RAISES: the
     write would be silently excluded from every fold, which is correct
     for a true replay (its counts live in the compacted delta) but
@@ -176,68 +217,153 @@ def test_mg_replayed_superseded_token_raises(spark, tmp_path):
     apart, so it refuses and the error names the fix (new namespace).
     The read-side manifest exclusion itself is covered by
     test_mg_manifest_is_transitive (resurrection bypassing the API)."""
-    path = str(tmp_path / "mg")
-    build_mg_store(_terms(spark, ["x"] * 3), "term", path, capacity=32)
-    update_mg_store(_terms(spark, ["x"] * 2, ), "term", path, token="stable-1")
-    assert _mg_state(spark, path)["x"] == (5, 0)
-    compact_mg_store(spark, path)
-    assert "stable-1" in superseded_mg_tokens(spark, path)
+    st, path = summed, str(tmp_path / "st")
+    st.build(st.df(["x"] * 3), "term", path, capacity=32)
+    st.update(st.df(["x"] * 2), "term", path, token="stable-1")
+    assert st.state(path)["x"] == (5, 0)
+    st.compact(st.spark, path)
+    assert "stable-1" in superseded_mg_tokens(st.spark, path)
     with pytest.raises(ValueError, match="namespace"):
-        update_mg_store(_terms(spark, ["x"] * 2), "term", path,
-                        token="stable-1")
-    assert _mg_state(spark, path)["x"] == (5, 0)  # store unchanged
+        st.update(st.df(["x"] * 2), "term", path, token="stable-1")
+    assert st.state(path)["x"] == (5, 0)  # store unchanged
     # a NOT-yet-compacted stable token still overwrites in place (the
     # replay-idempotence contract is untouched pre-compaction)
-    update_mg_store(_terms(spark, ["y"] * 2), "term", path, token="live-1")
-    update_mg_store(_terms(spark, ["y"] * 2), "term", path, token="live-1")
-    assert _mg_state(spark, path)["y"] == (2, 0)
+    st.update(st.df(["y"] * 2), "term", path, token="live-1")
+    st.update(st.df(["y"] * 2), "term", path, token="live-1")
+    assert st.state(path)["y"] == (2, 0)
 
 
-def test_mg_manifest_is_transitive(spark, tmp_path):
+def test_mg_manifest_is_transitive(summed, tmp_path):
     """gen-2 compaction inherits gen-1's manifest, so a gen-1 source
     resurrected AFTER the gen-1 compact dir is gone stays excluded."""
-    path = str(tmp_path / "mg")
-    build_mg_store(_terms(spark, ["a"] * 4), "term", path, capacity=32)
-    update_mg_store(_terms(spark, ["b"] * 6), "term", path, token="w1")
+    st, path = summed, str(tmp_path / "st")
+    st.build(st.df(["a"] * 4), "term", path, capacity=32)
+    st.update(st.df(["b"] * 6), "term", path, token="w1")
     # keep a copy of the w1 delta to resurrect later
     saved = str(tmp_path / "saved_w1")
     shutil.copytree(os.path.join(path, "batch=w1"), saved)
-    compact_mg_store(spark, path)  # gen-1
-    update_mg_store(_terms(spark, ["c"] * 9), "term", path, token="w2")
-    compact_mg_store(spark, path)  # gen-2 folds gen-1 + w2
-    assert {"w1", "w2"} <= superseded_mg_tokens(spark, path)
+    st.compact(st.spark, path)  # gen-1
+    st.update(st.df(["c"] * 9), "term", path, token="w2")
+    st.compact(st.spark, path)  # gen-2 folds gen-1 + w2
+    assert {"w1", "w2"} <= superseded_mg_tokens(st.spark, path)
     # resurrect w1 (as a crashed delete or wayward replay would)
     shutil.copytree(saved, os.path.join(path, "batch=w1"))
-    assert _mg_state(spark, path) == {"a": (4, 0), "b": (6, 0), "c": (9, 0)}
+    assert st.state(path) == {"a": (4, 0), "b": (6, 0), "c": (9, 0)}
 
 
-def test_mg_update_during_compaction_window_stays_live(spark, tmp_path):
+def test_mg_update_during_compaction_window_stays_live(summed, tmp_path):
     """A delta written after the fold's listing is not manifested:
     simulate by adding a delta to a compacted store and reading."""
-    path = str(tmp_path / "mg")
-    build_mg_store(_terms(spark, ["a"] * 2), "term", path, capacity=32)
-    update_mg_store(_terms(spark, ["b"] * 3), "term", path)
-    compact_mg_store(spark, path)
-    update_mg_store(_terms(spark, ["d"] * 11), "term", path)  # landed "mid-run"
-    assert _mg_state(spark, path) == {"a": (2, 0), "b": (3, 0), "d": (11, 0)}
+    st, path = summed, str(tmp_path / "st")
+    st.build(st.df(["a"] * 2), "term", path, capacity=32)
+    st.update(st.df(["b"] * 3), "term", path)
+    st.compact(st.spark, path)
+    st.update(st.df(["d"] * 11), "term", path)  # landed "mid-run"
+    assert st.state(path) == {"a": (2, 0), "b": (3, 0), "d": (11, 0)}
     # and the next compaction folds compact+late delta into one again
-    assert compact_mg_store(spark, path) == 2
-    assert _mg_state(spark, path) == {"a": (2, 0), "b": (3, 0), "d": (11, 0)}
+    assert st.compact(st.spark, path) == 2
+    assert st.state(path) == {"a": (2, 0), "b": (3, 0), "d": (11, 0)}
 
 
-def test_mg_crash_before_rename_changes_nothing(spark, tmp_path):
+def test_mg_crash_before_rename_changes_nothing(summed, tmp_path):
     """A _tmp_ dir left by a crash before the rename commit is
     invisible to readers and to live-token listing."""
-    path = str(tmp_path / "mg")
-    build_mg_store(_terms(spark, ["a"] * 2), "term", path, capacity=32)
-    update_mg_store(_terms(spark, ["b"] * 3), "term", path)
-    before = _mg_state(spark, path)
+    st, path = summed, str(tmp_path / "st")
+    st.build(st.df(["a"] * 2), "term", path, capacity=32)
+    st.update(st.df(["b"] * 3), "term", path)
+    before = st.state(path)
     os.makedirs(os.path.join(path, "_tmp_compact_deadbeef"))
     with open(os.path.join(path, "_tmp_compact_deadbeef", "_sources.json"),
               "w") as f:
         json.dump(["0"], f)
-    assert _mg_state(spark, path) == before
-    assert len(live_mg_tokens(spark, path)) == 2
+    assert st.state(path) == before
+    assert len(live_mg_tokens(st.spark, path)) == 2
+
+
+# ------------------------------------------------------ the store protocol
+
+
+def test_ensured_store_reads_empty_before_first_batch(summed, tmp_path):
+    """``ensure_*_store`` writes only the sidecar; a read before the
+    first batch is an empty summary, not a schema-inference error."""
+    path = str(tmp_path / "st")
+    summed.ensure(summed.spark, path, 16)
+    assert summed.read(summed.spark, path).collect() == []
+
+
+@pytest.mark.parametrize("kind", ["bloom", "mg", "quantile"])
+def test_store_read_declares_its_delta_schema(spark, tmp_path, kind):
+    """Building a store read runs no Spark job (the delta schema is
+    declared, not inferred from a parquet footer), and the declared
+    schema is exactly what the store's writer produces."""
+    from syzgydb_spark.operators import bloom, quantiles, sketch
+
+    path = str(tmp_path / kind)
+    if kind == "bloom":
+        build_bloom_store(_terms(spark, ["a", "b"]), "term", path,
+                          n_bits=1 << 10, n_hashes=3)
+        mod, read = bloom, lambda: read_bloom_store(spark, path)[0]
+    else:
+        st = _SummedStore(spark, kind)
+        st.build(st.df(["a", "a", "b"]), "term", path, capacity=8)
+        mod = sketch if kind == "mg" else quantiles
+        read = lambda: st.read(spark, path)  # noqa: E731
+    sc = spark.sparkContext
+    group = f"read-{kind}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "build a store read")
+    try:
+        read()
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    written = spark.read.parquet(os.path.join(path, "batch=0")).schema
+    declared = spark.read.schema(mod._SCHEMA).parquet(
+        os.path.join(path, "batch=0")).schema
+    assert [(f.name, f.dataType) for f in written] == \
+        [(f.name, f.dataType) for f in declared]
+
+
+@pytest.mark.parametrize("kind", ["bloom", "mg", "quantile"])
+def test_failed_compaction_write_leaves_no_tmp_dir(
+        spark, tmp_path, monkeypatch, kind):
+    """A compaction whose write fails after its tmp dir exists removes
+    that dir, releases the lock and leaves the store as it was."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / kind)
+    if kind == "bloom":
+        build_bloom_store(_terms(spark, ["a", "b"]), "term", path,
+                          n_bits=1 << 10, n_hashes=3)
+        update_bloom_store(_terms(spark, ["c"]), "term", path)
+        compact = compact_bloom_store
+
+        def state():
+            return sorted(read_bloom_store(spark, path)[0].collect())
+    else:
+        st = _SummedStore(spark, kind)
+        st.build(st.df(["a", "a", "b"]), "term", path, capacity=8)
+        st.update(st.df(["c"]), "term", path)
+        compact = st.compact
+
+        def state():
+            return st.state(path)
+    before, dirs = state(), _batch_dirs(path)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing(self, p, *a, **kw):
+        real_parquet(self, p, *a, **kw)
+        if "_tmp_compact_" in p:
+            raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        compact(spark, path)
+    monkeypatch.undo()
+    assert not [d for d in os.listdir(path) if d.startswith("_tmp_")]
+    assert not os.path.exists(os.path.join(path, "_compact.lock"))
+    assert _batch_dirs(path) == dirs
+    assert state() == before
 
 
 # ------------------------------------------------- bucketed table rebuilds
@@ -475,16 +601,16 @@ def test_lock_vanishing_between_create_and_stat_retries(
     assert not _os.path.exists(lock)
 
 
-def test_compaction_vacuums_healed_zombie_delta(spark, tmp_path):
+def test_compaction_vacuums_healed_zombie_delta(summed, tmp_path):
     """A zombie compact delta dropped by live_mg_tokens' subset-healing
     used to be excluded from `live` and therefore never deleted — the
     orphan dir persisted forever, taxing every read with an extra
     _sources.json fetch plus the healing pass (r9 advice). Compaction
     (including the nothing-to-fold path) now vacuums it."""
-    path = str(tmp_path / "mg_vac")
-    build_mg_store(_terms(spark, ["a"] * 3), "term", path, capacity=32)
-    update_mg_store(_terms(spark, ["b"] * 2), "term", path)
-    assert compact_mg_store(spark, path) == 2
+    st, path = summed, str(tmp_path / "st_vac")
+    st.build(st.df(["a"] * 3), "term", path, capacity=32)
+    st.update(st.df(["b"] * 2), "term", path)
+    assert st.compact(st.spark, path) == 2
     real = [d for d in _batch_dirs(path) if "compact-" in d]
     assert len(real) == 1
     manifest = json.load(
@@ -498,16 +624,16 @@ def test_compaction_vacuums_healed_zombie_delta(spark, tmp_path):
         json.dump(manifest[:1], f)
 
     # reads heal: the zombie is not live, counts are not doubled
-    live, garbage = live_mg_tokens(spark, path, with_garbage=True)
+    live, garbage = live_mg_tokens(st.spark, path, with_garbage=True)
     assert live == [real[0].split("=", 1)[1]]
     assert garbage == ["compact-00zombie00"]
-    assert _mg_state(spark, path) == {"a": (3, 0), "b": (2, 0)}
+    assert st.state(path) == {"a": (3, 0), "b": (2, 0)}
 
     # nothing to fold (1 live delta) — but the vacuum still runs
-    assert compact_mg_store(spark, path) == 0
+    assert st.compact(st.spark, path) == 0
     assert not os.path.exists(zombie)
     assert _batch_dirs(path) == real
-    assert _mg_state(spark, path) == {"a": (3, 0), "b": (2, 0)}
+    assert st.state(path) == {"a": (3, 0), "b": (2, 0)}
 
 
 def test_compaction_lock_released_on_error(spark, tmp_path):

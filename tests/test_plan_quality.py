@@ -555,3 +555,12 @@ def test_shingle_expression_evaluates_once(spark, sf_dir):
         assert n_hash_evals(sig, "md5(") == 1
     finally:
         sig._persisted_src.unpersist()
+
+
+def test_only_serving_entries_keep_their_session_cache():
+    """bench.py keeps the session cache of the registry entries that
+    declare ``keeps_session_cache`` and releases every other entry's
+    owned caches after each timed run."""
+    kept = {n for n, fn in E.queries().items()
+            if getattr(fn, "keeps_session_cache", False)}
+    assert kept == {"minhash_near_dups"}
