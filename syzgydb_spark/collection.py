@@ -67,8 +67,17 @@ dequantized ARRAY<DOUBLE> view. Live scans declare the stored schema
 point ops compute an id's bucket in Python (``bucket_of``), so a
 ``get`` runs one Spark job: the scan of the id's one file.
 
-LSH signature columns are materialized at write time when the
-collection has an ANN index configured — no rebuild on open ever.
+Index columns (LSH signatures, PQ codes, IVF cells) are materialized
+at write time when the collection has an index configured — no rebuild
+on open ever. ``add_documents`` picks its path by the input's type. A
+Python list (the REST insert, ``import_json``) is validated, deduped
+and routed in Python and encoded as an Arrow ``LocalRelation``, so
+Spark evaluates ``_encode``'s expressions on the driver, and the index
+columns come from the numpy closures the index operators' UDFs wrap:
+the upsert runs only the bucket shuffle and the write, with no Python
+worker. A DataFrame (a parquet read, the streaming sink,
+``add_texts``) is validated by one Spark job and encoded on the
+executors by the index UDFs.
 """
 
 from __future__ import annotations
@@ -76,6 +85,7 @@ from __future__ import annotations
 import copy
 import json
 import logging
+import operator
 import os
 import shutil
 import threading
@@ -84,7 +94,9 @@ from dataclasses import dataclass, field, asdict
 
 logger = logging.getLogger(__name__)
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -127,6 +139,18 @@ def _mutation_lock(path: str) -> threading.RLock:
 #: only to bound genuinely wedged states (e.g. a corrupt file
 #: masquerading as a stale scan), not to ration contention.
 _MAX_COMMIT_RETRIES = 12
+
+#: Rows per numpy call when the driver computes a list batch's index
+#: columns (``Collection._index_values``), so the encoders' temporaries
+#: stay bounded whatever the batch size; Arrow's default batch size.
+_ENCODE_CHUNK = 10_000
+
+#: Most ids a list upsert drops by an ``id IN (...)`` predicate
+#: (``Collection._merge``); a larger batch anti-joins its ids instead.
+#: The IN list's analysis grows with its length (4 s at 100,000 ids)
+#: while the anti-join's broadcast costs one fixed extra job; the two
+#: took the same time at about 2,000 ids (local[4], 10,000-row table).
+_ID_PREDICATE_MAX = 2_000
 
 
 def _conflict_backoff(attempt: int) -> None:
@@ -186,6 +210,15 @@ _STORAGE_BACKENDS = {
     "sqlite": SqliteCatalogBackend,
     "delta-sim": FaultInjectingBackend,
 }
+
+
+def _id_in(ids) -> Column:
+    """``id IN (ids)``, built from one SQL string: ``Column.isin`` makes
+    a py4j call per literal. ``ids`` must be non-empty; each goes
+    through ``operator.index``, so only integers reach the SQL text,
+    as BIGINT literals (``7L``): INT literals would each get a cast
+    for the analyzer to add and the optimizer to fold."""
+    return F.expr(f"id IN ({','.join(f'{operator.index(i)}L' for i in ids)})")
 
 
 def _observe_full_scan(df: DataFrame, observation) -> DataFrame:
@@ -607,12 +640,7 @@ class Collection:
             _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
             F.col("metadata"),
         ]
-        if self.index is not None:
-            cols += [F.col(c) for c in self.index.sig_cols() if c in have]
-        if self.pq_index is not None and "pq_code" in have:
-            cols.append(F.col("pq_code"))
-        if self.ivf_index is not None and "ivf_cell" in have:
-            cols.append(F.col("ivf_cell"))
+        cols += [F.col(c) for c in self._index_cols() if c in have]
         return raw.select(*cols)
 
     def changes_between(self, v_from: int, v_to: int) -> DataFrame:
@@ -733,13 +761,19 @@ class Collection:
             return F.col("metadata")
         return F.from_json(F.col("metadata").cast("string"), self.metadata_type)
 
-    def _encode(self, df: DataFrame) -> DataFrame:
+    def _encode(self, df: DataFrame, *, indexed: bool = False) -> DataFrame:
         """id/vector/metadata → stored layout (quantized vector, bucket,
-        signature columns)."""
+        promoted columns, index columns). The index operators compute
+        the index columns from the dequantized stored vector on the
+        executors, or, with ``indexed``, ``df`` already carries them
+        (``_index_values`` computed them on the driver) and they pass
+        through."""
+        index_cols = self._index_cols() if indexed else []
         out = df.select(
             F.col("id").cast("long"),
             _quantize_expr(F.col("vector"), self.options.quantization).alias("vector_enc"),
             self._meta_expr(df).alias("metadata"),
+            *index_cols,
         ).withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(self.options.n_buckets)))
         if self.options.promoted and self.metadata_type is None:
             from syzgydb_spark.query.promoted import promoted_col
@@ -749,6 +783,8 @@ class Collection:
                     spec["col"],
                     promoted_col(F.col("metadata"), path, spec["type"]),
                 )
+        if indexed:
+            return out.select(*[c for c in out.columns if c not in index_cols], *index_cols)
         if self.index is not None:
             dec = _dequantize_expr(F.col("vector_enc"), self.options.quantization)
             out = self.index.with_signatures(out.withColumn("_vec", dec), "_vec").drop("_vec")
@@ -759,6 +795,42 @@ class Collection:
             dec = _dequantize_expr(F.col("vector_enc"), self.options.quantization)
             out = self.ivf_index.with_cells(out.withColumn("_vec", dec), "_vec").drop("_vec")
         return out
+
+    def _index_cols(self) -> list[str]:
+        """The stored index columns, in ``_encode``'s order."""
+        cols = []
+        if self.index is not None:
+            cols += self.index.sig_cols()
+        if self.pq_index is not None:
+            cols.append("pq_code")
+        if self.ivf_index is not None:
+            cols.append("ivf_cell")
+        return cols
+
+    def _index_values(self, local: DataFrame) -> dict:
+        """The index columns of a list batch, computed on the driver by
+        the numpy closures the index operators' executor UDFs run,
+        ``_ENCODE_CHUNK`` rows at a time. Their input is the dequantized
+        stored vector, read back from ``local`` through the stored
+        encoding: collected with no Spark job while ``local`` is a
+        ``LocalRelation``, and as Arrow (one job) past
+        ``spark.sql.execution.arrow.localRelationThreshold``."""
+        bits = self.options.quantization
+        vec = local.select(
+            _dequantize_expr(_quantize_expr(F.col("vector"), bits), bits)
+        )
+        if local.isLocal():
+            mat = np.array([r[0] for r in vec.collect()], dtype=np.float64)
+        else:
+            col = vec.toArrow().column(0).combine_chunks()
+            mat = col.flatten().to_numpy().reshape(len(col), -1)
+        indexes = [i for i in (self.index, self.pq_index, self.ivf_index) if i is not None]
+        parts: dict = {c: [] for c in self._index_cols()}
+        for lo in range(0, len(mat), _ENCODE_CHUNK):
+            for idx in indexes:
+                for name, values in idx.column_values(mat[lo : lo + _ENCODE_CHUNK]).items():
+                    parts[name].append(values)
+        return {name: np.concatenate(chunks) for name, chunks in parts.items()}
 
     def _raw(
         self,
@@ -801,7 +873,7 @@ class Collection:
             if declared:
                 reader = reader.schema(self._stored_schema())
             try:
-                return reader.parquet(*paths)
+                df = reader.parquet(*paths)
             except Exception as e:
                 if not _is_stale_scan_error(e):
                     raise
@@ -810,6 +882,19 @@ class Collection:
                         "data file reclaimed by a concurrent commit during "
                         "scan construction; re-merge on a fresh manifest"
                     ) from e
+                continue
+            if "bucket" in df.columns:
+                return df
+            # Spark's listing skips a path that vanished after its
+            # existence check, so a scan whose EVERY file a concurrent
+            # commit reclaimed in that window lists no file and has no
+            # `bucket` partition column: the same stale scan (a merge
+            # over it failed to resolve `bucket` in the storm test)
+            if manifest is not None:
+                raise ManifestConflictError(
+                    "every data file reclaimed by a concurrent commit during "
+                    "scan construction; re-merge on a fresh manifest"
+                )
         raise ManifestConflictError(
             f"live scan lost the reclaim race {_MAX_COMMIT_RETRIES} times"
         )
@@ -833,12 +918,7 @@ class Collection:
             _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
             F.col("metadata"),
         ]
-        if self.index is not None:
-            cols += [F.col(c) for c in self.index.sig_cols()]
-        if self.pq_index is not None:
-            cols += [F.col("pq_code")]
-        if self.ivf_index is not None:
-            cols += [F.col("ivf_cell")]
+        cols += [F.col(c) for c in self._index_cols()]
         if self.options.promoted and self.metadata_type is None:
             # promoted hot-path columns ride along so the pushdown
             # shadow of a filter can bind to them (result projections
@@ -865,36 +945,77 @@ class Collection:
     def add_documents(self, docs) -> None:
         """Upsert rows ``(id, vector, metadata)`` — last write per id
         wins, like the reference's overwrite-on-same-id
-        (collection.go:427-457). Accepts a DataFrame or a list of
-        (id, vector, metadata_json) tuples. Only buckets containing
-        touched ids are rewritten."""
-        if not isinstance(docs, DataFrame):
-            # tolerate int-valued vectors ([1, 0, 0, 0]) — createDataFrame's
-            # DoubleType verifier rejects Python ints with an opaque error —
-            # and dict/list metadata in place of a JSON string
-            rows = [
-                (
-                    seq,
-                    i,
-                    [float(x) for x in v] if v is not None else None,
-                    m if isinstance(m, (str, type(None))) else json.dumps(m),
-                )
-                for seq, (i, v, m) in enumerate(docs)
-            ]
-            docs = self.spark.createDataFrame(
-                rows, "_seq BIGINT, " + self.SCHEMA_BASE
+        (collection.go:427-457). Accepts a DataFrame or any other
+        iterable of (id, vector, metadata) tuples; metadata is a JSON
+        string, or a dict/list that is serialized. Only buckets
+        containing touched ids are rewritten. A vector whose length is
+        not the dimension, a null vector included, and a null id raise
+        ``ValueError`` (collection.go:432-434); an empty batch commits
+        nothing.
+
+        The input's type picks the path. A list is validated, deduped
+        (its last occurrence of an id wins) and routed (``bucket_of``)
+        in Python, then encoded as a driver-local relation: the stored
+        columns by ``_encode``'s expressions, the index columns by
+        ``_index_values``. Up to ``_ID_PREDICATE_MAX`` ids, its upsert
+        runs two Spark jobs (the bucket shuffle and the write) and no
+        Python worker. A DataFrame is validated and routed by one Spark
+        job, deduped by a window, and its index columns come from the
+        index operators' UDFs."""
+        if isinstance(docs, DataFrame):
+            self._add_frame(docs)
+            return
+        dim = self.options.dimension_count
+        batch: dict = {}
+        for doc_id, vec, meta in docs:
+            if doc_id is None:
+                raise ValueError("document id must not be null")
+            if vec is None or len(vec) != dim:
+                raise ValueError(f"vector dimension mismatch: expected {dim}")
+            # ints are accepted as vector components; dict/list metadata
+            # is stored as its JSON text
+            batch[operator.index(doc_id)] = (
+                [float(x) for x in vec],
+                meta if isinstance(meta, (str, type(None))) else json.dumps(meta),
             )
-        # ONE pre-encode pass computes dimension validation AND the
-        # touched-bucket set together (the bucket is closed-form on the
-        # id, same expression as _encode/_buckets_for_ids) — previously
-        # validation was its own count() action over the batch.
-        # NULL-size (null vector) is not a mismatch, as before.
+        if not batch:
+            return
+        ids = list(batch)
+        table = pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "vector": pa.array([v for v, _ in batch.values()], pa.list_(pa.float64())),
+            "metadata": pa.array([m for _, m in batch.values()], pa.string()),
+        })
+        # an Arrow table becomes a LocalRelation, which Spark evaluates
+        # on the driver; a list would become an RDD that each use
+        # converts in Python workers
+        local = self.spark.createDataFrame(table)
+        indexed = bool(self._index_cols())
+        if indexed:
+            for name, values in self._index_values(local).items():
+                # a 2-D array (PQ codes) becomes a list column
+                table = table.append_column(
+                    name, pa.array(list(values) if values.ndim > 1 else values)
+                )
+            local = self.spark.createDataFrame(table)
+        self._merge(
+            self._encode(local, indexed=indexed),
+            self._buckets_for_ids(ids),
+            len(ids),
+            ids=ids,
+        )
+
+    def _add_frame(self, docs: DataFrame) -> None:
+        """``add_documents`` of a DataFrame."""
+        # ONE pre-encode pass computes validation AND the touched-bucket
+        # set together (the bucket is closed-form on the id, same
+        # expression as _encode/_buckets_for_ids). A null vector's size
+        # is NULL (or -1), so coalescing the mismatch to true rejects it.
         # count vs count_distinct also detects batch-internal duplicate
-        # ids, which must resolve LAST-write-wins (the reference applies
-        # AddDocument sequentially, collection.go:427-457) — a plain
-        # union would store BOTH rows for the id.
+        # ids, which must resolve to ONE row per id (a plain union would
+        # store BOTH rows for the id).
         bad_flag = F.coalesce(
-            F.size("vector") != self.options.dimension_count, F.lit(False)
+            F.size("vector") != self.options.dimension_count, F.lit(True)
         )
         try:
             stats = (
@@ -904,6 +1025,7 @@ class Collection:
                 )
                 .agg(
                     F.max(bad_flag).alias("bad"),
+                    F.max(F.col("id").isNull()).alias("null_id"),
                     F.count("*").alias("n"),
                     F.count_distinct("id").alias("nd"),
                 )
@@ -922,75 +1044,77 @@ class Collection:
                     "the input DataFrame from a fresh snapshot and retry"
                 ) from e
             raise
+        if not stats:
+            return
+        if any(r["null_id"] for r in stats):
+            raise ValueError("document id must not be null")
         if any(r["bad"] for r in stats):
             raise ValueError(
                 f"vector dimension mismatch: expected {self.options.dimension_count}"
             )  # collection.go:432-434
         if any(r["n"] != r["nd"] for r in stats):
-            # duplicate ids within the batch: list inputs keep the LAST
-            # occurrence (exact reference parity — sequential
-            # overwrite); DataFrame inputs have no order, so the winner
-            # is the same arbitrary-but-deterministic tie-break the
-            # streaming sink uses (metadata, then vector hash)
-            order = (
-                [F.col("_seq").desc()]
-                if "_seq" in docs.columns
-                else [
-                    F.col("metadata").cast("string").desc_nulls_last(),
-                    F.xxhash64("vector").desc_nulls_last(),
-                ]
+            # duplicate ids within the batch: a DataFrame has no order,
+            # so the winner is the same arbitrary-but-deterministic
+            # tie-break the streaming sink uses (metadata, then vector
+            # hash)
+            w = Window.partitionBy("id").orderBy(
+                F.col("metadata").cast("string").desc_nulls_last(),
+                F.xxhash64("vector").desc_nulls_last(),
             )
-            w = Window.partitionBy("id").orderBy(*order)
             docs = (
                 docs.withColumn("_dup_rn", F.row_number().over(w))
                 .where(F.col("_dup_rn") == 1)
                 .drop("_dup_rn")
             )
-        if "_seq" in docs.columns:
-            docs = docs.drop("_seq")
-        new_enc = self._encode(docs)
         self._merge(
-            new_enc,
-            touched=sorted(r["bucket"] for r in stats),
-            n_rows=sum(r["n"] for r in stats),
+            self._encode(docs),
+            sorted(r["bucket"] for r in stats),
+            sum(r["n"] for r in stats),
         )
 
     def _merge(
         self,
         new_enc: DataFrame,
-        touched: list[int] | None = None,
-        n_rows: int | None = None,
+        touched: list[int],
+        n_rows: int | None,
+        *,
+        ids: list[int] | None = None,
     ) -> None:
-        """Bucket-pruned upsert: read ONLY the buckets containing new
-        ids, drop their overwritten rows, and commit those buckets —
+        """Bucket-pruned upsert: read ONLY the ``touched`` buckets, drop
+        the rows the batch overwrites, and commit those buckets —
         everything else stays on disk untouched. Serialized against
-        concurrent writers (in-process lock + CAS retry). ``n_rows``,
-        the batch's row count if known, lets the id anti-join broadcast
+        concurrent writers (``_mutate``). ``ids`` are a list batch's
+        ids (``new_enc`` is then driver-encoded, so it needs no cache).
+        Up to ``_ID_PREDICATE_MAX`` of them drop the overwritten rows by
+        an id-set predicate, as in ``remove``; otherwise the batch's ids
+        are anti-joined, broadcast when ``n_rows`` is known and small
         (``_batch_ids``)."""
-        new_enc = new_enc.cache()
+        local = ids is not None
+        if not local:
+            new_enc = new_enc.cache()
         try:
-            if touched is None:
-                touched = [
-                    r["bucket"] for r in new_enc.select("bucket").distinct().collect()
-                ]
 
             def step(man):
                 cur = self._raw(buckets=touched, manifest=man)
-                kept = cur.join(
-                    self._batch_ids(new_enc, n_rows), on="id", how="left_anti"
-                )
+                if local and len(ids) <= _ID_PREDICATE_MAX:
+                    kept = cur.where(F.coalesce(~_id_in(ids), F.lit(True)))
+                else:
+                    kept = cur.join(
+                        self._batch_ids(new_enc, n_rows), on="id", how="left_anti"
+                    )
                 merged = kept.unionByName(new_enc.select(kept.columns))
                 self._commit_buckets(merged, touched, base_manifest=man)
 
             self._mutate("upsert", step)
         finally:
-            new_enc.unpersist()
+            if not local:
+                new_enc.unpersist()
 
     def _batch_ids(self, new_enc: DataFrame, n_rows: int | None) -> DataFrame:
         """The batch's ids for the merge's anti-join, hinted broadcast
         when ``n_rows`` 8-byte ids fit the session's
-        ``spark.sql.autoBroadcastJoinThreshold``. The cached batch has
-        no size stats before its first action, so without the hint the
+        ``spark.sql.autoBroadcastJoinThreshold``. A cached batch has no
+        size stats before its first action, so without the hint the
         planner shuffles the whole touched table (sort-merge); past the
         threshold (or with it disabled, -1) the planner chooses."""
         ids = new_enc.select("id")
@@ -1056,15 +1180,15 @@ class Collection:
             # probe is one job with no shuffle
             touched = sorted({
                 r["bucket"]
-                for r in cur.where(F.col("id").isin(ids)).select("bucket").collect()
+                for r in cur.where(_id_in(ids)).select("bucket").collect()
             })
             if not touched:
                 return
             kept = cur.where(F.col("bucket").isin(touched)).where(
-                # NULL-safe: ~isin is NULL (not true) for a NULL
-                # id, which would silently delete null-id rows
-                # that were never named
-                F.coalesce(~F.col("id").isin(ids), F.lit(True))
+                # NULL-safe: ~IN is NULL (not true) for a NULL id,
+                # which would silently delete null-id rows that were
+                # never named
+                F.coalesce(~_id_in(ids), F.lit(True))
             )
             self._commit_buckets(kept, touched, base_manifest=man, small_write=True)
 

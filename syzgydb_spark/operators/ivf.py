@@ -31,6 +31,28 @@ from pyspark.sql import types as T
 from syzgydb_spark.functions.vector import distance as dist_fn
 
 
+def _make_nearest_fn(centers: np.ndarray, method: str):
+    """B x D vectors → each row's nearest center id. A closure so
+    cloudpickle ships it by value (as ``lsh._make_sig_fn``): the
+    ``mapInPandas`` passes of ``with_cells`` and ``with_cell_distances``
+    run it on executors, ``IvfIndex.column_values`` on the driver.
+    ``centers`` are the comparison centers (unit rows for cosine)."""
+
+    def nearest(mat):
+        if method in ("cosine", "angular"):
+            norms = np.linalg.norm(mat, axis=1, keepdims=True)
+            norms[norms == 0] = 1.0
+            return ((mat / norms) @ centers.T).argmax(axis=1)
+        d2 = (
+            (mat * mat).sum(axis=1)[:, None]
+            + (centers * centers).sum(axis=1)[None, :]
+            - 2.0 * (mat @ centers.T)
+        )
+        return d2.argmin(axis=1)
+
+    return nearest
+
+
 class IvfIndex:
     def __init__(self, centers: np.ndarray, method: str = "euclidean"):
         self.centers = np.asarray(centers, dtype=np.float64)
@@ -156,23 +178,19 @@ class IvfIndex:
             order = np.argsort(d2, axis=1)
         return order[:, :n]
 
-    def with_cells(self, df: DataFrame, vec_col: str = "vector") -> DataFrame:
-        """Add the ``ivf_cell`` INT column (vectorized pandas UDF —
-        shipped by value, executors don't need this package)."""
-        centers = self._cmp_centers
-        method = self.method
+    def column_values(self, mat: np.ndarray) -> dict[str, np.ndarray]:
+        """The ``ivf_cell`` of the rows of ``mat`` (N x D), computed on
+        the driver: the values ``with_cells`` stores."""
+        nearest = _make_nearest_fn(self._cmp_centers, self.method)
+        return {"ivf_cell": nearest(mat).astype(np.int32)}
 
-        def nearest(mat):
-            if method in ("cosine", "angular"):
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                return ((mat / norms) @ centers.T).argmax(axis=1)
-            d2 = (
-                (mat * mat).sum(axis=1)[:, None]
-                + (centers * centers).sum(axis=1)[None, :]
-                - 2.0 * (mat @ centers.T)
-            )
-            return d2.argmin(axis=1)
+    def with_cells(self, df: DataFrame, vec_col: str = "vector") -> DataFrame:
+        """Add the ``ivf_cell`` INT column, assigned on the executors by
+        ``_make_nearest_fn`` in a ``mapInPandas`` pass (shipped by
+        value, executors don't need this package). A list batch of
+        ``Collection.add_documents`` gets the same cells on the driver
+        instead (``column_values``)."""
+        nearest = _make_nearest_fn(self._cmp_centers, self.method)
 
         if "ivf_cell" in df.columns:  # withColumn used to replace it
             df = df.drop("ivf_cell")
@@ -225,18 +243,7 @@ class IvfIndex:
         functions.vector.cosine_distance."""
         centers = self._cmp_centers
         method = self.method
-
-        def nearest(mat):
-            if method in ("cosine", "angular"):
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                return ((mat / norms) @ centers.T).argmax(axis=1)
-            d2 = (
-                (mat * mat).sum(axis=1)[:, None]
-                + (centers * centers).sum(axis=1)[None, :]
-                - 2.0 * (mat @ centers.T)
-            )
-            return d2.argmin(axis=1)
+        nearest = _make_nearest_fn(centers, method)
 
         def score(mat):
             cells = nearest(mat)

@@ -28,9 +28,12 @@ pushdown / row-group pruning, and survive upserts with no index
 rebuild (the reference rebuilds its forest on every open,
 collection.go:297-311).
 
-Signature computation is an Arrow-batched pandas UDF (one BLAS matmul
-per batch) — the documented exception to the no-Python rule; everything
-downstream is Catalyst joins.
+Signatures come from one numpy closure (``_make_sig_fn``: one BLAS
+matmul per batch), run in one of two places. ``with_signatures`` wraps
+it in an Arrow-batched pandas UDF, so a DataFrame input is signed on the
+executors. ``column_values`` calls it on the driver, which is how
+``Collection.add_documents`` signs a list batch: no Spark job and no
+Python worker. Everything downstream is Catalyst joins.
 
 For Euclidean collections the signature uses quantized projections
 (p-stable / E2LSH style, floor((v·a)/w)) rather than sign bits.
@@ -169,6 +172,11 @@ class LshIndex:
 
     def sig_cols(self) -> list[str]:
         return [f"lsh_sig_{t}" for t in range(self.num_tables)]
+
+    def column_values(self, mat: np.ndarray) -> dict[str, np.ndarray]:
+        """The signature columns of the rows of ``mat`` (N x D),
+        computed on the driver: the values ``with_signatures`` stores."""
+        return dict(zip(self.sig_cols(), self._signatures(mat).T))
 
     def with_signatures(self, df: DataFrame, vec_col: str = "vector") -> DataFrame:
         """Add one BIGINT signature column per table."""

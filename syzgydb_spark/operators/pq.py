@@ -18,9 +18,11 @@ Spark-first shapes:
   pipeline expressible in SQL (the oracle-checked configuration, same
   trick as the LSH plane literals).
 * ``encode`` — one vectorized Arrow pass → ``pq_code ARRAY<INT>``
-  column; persists as a plain Parquet column (M bytes/row), no index
-  rebuild on open (cf. the reference rebuilding its LSH forest on every
-  open, collection.go:297-311 — precomputed columns are just columns).
+  column (``column_values`` computes the same codes on the driver for
+  a list upsert); persists as a plain Parquet column (M bytes/row), no
+  index rebuild on open (cf. the reference rebuilding its LSH forest on
+  every open, collection.go:297-311 — precomputed columns are just
+  columns).
 * ``adc_knn_join`` — the query side is collected (broadcast-small — a
   contract enforced by a bounded collect that dispatches to the
   distributed ANN join on overflow) and turned into per-query
@@ -61,6 +63,34 @@ def _subspaces(dim: int, m: int) -> list[tuple[int, int]]:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
     return [(i * d, (i + 1) * d) for i in range(m)]
+
+
+def _make_code_fn(codebooks: np.ndarray, method: str):
+    """N x D vectors → N x M int32 codes, the nearest codeword per
+    subspace. A closure so cloudpickle ships it by value (as
+    ``lsh._make_sig_fn``): ``PqIndex.encode``'s pandas UDF runs it on
+    executors, ``PqIndex.column_values`` on the driver."""
+    normalize = method == "cosine"
+    m, _, dsub = codebooks.shape
+
+    def fn(mat: np.ndarray) -> np.ndarray:
+        if normalize:
+            norms = np.linalg.norm(mat, axis=1, keepdims=True)
+            norms[norms == 0] = 1.0
+            mat = mat / norms
+        codes = np.empty((len(mat), m), dtype=np.int32)
+        for mi in range(m):
+            sub = mat[:, mi * dsub : (mi + 1) * dsub]
+            cb = codebooks[mi]
+            d2 = (
+                (sub * sub).sum(axis=1)[:, None]
+                + (cb * cb).sum(axis=1)[None, :]
+                - 2.0 * (sub @ cb.T)
+            )
+            codes[:, mi] = d2.argmin(axis=1)
+        return codes
+
+    return fn
 
 
 class PqIndex:
@@ -166,11 +196,12 @@ class PqIndex:
     # ----------------------------------------------------------- encode
 
     def encode(self, df: DataFrame, vec_col: str = "vector") -> DataFrame:
-        """Append ``pq_code ARRAY<INT>`` (length M). Self-contained
-        Arrow closure — executors never import this package."""
-        books = self.codebooks
-        normalize = self.method == "cosine"
-        msub = self.dsub
+        """Append ``pq_code ARRAY<INT>`` (length M), computed on the
+        executors by a pandas UDF around ``_make_code_fn``. Self-contained
+        Arrow closure — executors never import this package. A list
+        batch of ``Collection.add_documents`` gets the same codes on the
+        driver instead (``column_values``)."""
+        code_fn = _make_code_fn(self.codebooks, self.method)
 
         @F.pandas_udf("array<int>")
         def code_udf(vecs):
@@ -179,23 +210,14 @@ class PqIndex:
             if len(vecs) == 0:
                 return pd.Series([], dtype=object)
             mat = np.array([list(v) for v in vecs], dtype=np.float64)
-            if normalize:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                mat = mat / norms
-            codes = np.empty((len(mat), books.shape[0]), dtype=np.int32)
-            for mi in range(books.shape[0]):
-                sub = mat[:, mi * msub : (mi + 1) * msub]
-                cb = books[mi]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    + (cb * cb).sum(axis=1)[None, :]
-                    - 2.0 * (sub @ cb.T)
-                )
-                codes[:, mi] = d2.argmin(axis=1)
-            return pd.Series([row.tolist() for row in codes])
+            return pd.Series([row.tolist() for row in code_fn(mat)])
 
         return df.withColumn("pq_code", code_udf(F.col(vec_col)))
+
+    def column_values(self, mat: np.ndarray) -> dict[str, np.ndarray]:
+        """The ``pq_code`` of the rows of ``mat`` (N x D, an N x M int32
+        array), computed on the driver: the values ``encode`` stores."""
+        return {"pq_code": _make_code_fn(self.codebooks, self.method)(mat)}
 
     # -------------------------------------------------------------- ADC
 
