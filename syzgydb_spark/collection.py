@@ -100,10 +100,11 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from syzgydb_spark import sqltext as S
 from syzgydb_spark.functions.vector import distance as dist_fn
 from syzgydb_spark.operators import knn
 from syzgydb_spark.operators.lsh import LshIndex
-from syzgydb_spark.query.compiler import compile_filter
+from syzgydb_spark.query.compiler import filter_sql
 from syzgydb_spark.storage import (
     FaultInjectingBackend,
     ManifestBackend,
@@ -221,16 +222,18 @@ def _id_in(ids) -> Column:
     return F.expr(f"id IN ({','.join(f'{operator.index(i)}L' for i in ids)})")
 
 
+def _listed_file_count(df: DataFrame) -> int:
+    """How many files the scan ``df`` listed (two py4j calls: the
+    listing's length, not its paths)."""
+    return len(df._jdf.inputFiles())
+
+
 def _observe_full_scan(df: DataFrame, observation) -> DataFrame:
     """Attach ``observation`` to a relation every row of which is
     searched: points_total == points_searched, the honest 100% of the
     exact and ADC tiers (a caller-created Observation must end up on
     SOME plan, or its ``.get`` blocks forever)."""
-    return df.observe(
-        observation,
-        F.count(F.lit(1)).alias("points_total"),
-        F.count(F.lit(1)).alias("points_searched"),
-    )
+    return knn.observe_searched(df, observation, "true")
 
 
 @dataclass
@@ -319,27 +322,26 @@ def _parse_metadata_schema(ddl: str):
         raise ValueError(f"invalid metadata_schema {ddl!r}: {e}") from e
 
 
-def _quantize_expr(col, bits: int):
-    """Encode: clamp [-1,1] → [0, 2^bits - 1] int codes for 4/8/16;
-    raw float32/float64 for 32/64 (quantization.go:5-36,
-    collection.go:713-744)."""
+def _quantize_sql(col: str, bits: int) -> str:
+    """Encode (SQL text over the vector expression ``col``): clamp
+    [-1,1] → [0, 2^bits - 1] int codes for 4/8/16; raw float32/float64
+    for 32/64 (quantization.go:5-36, collection.go:713-744)."""
     if bits == 64:
-        return col.cast("array<double>")
+        return f"CAST({col} AS ARRAY<DOUBLE>)"
     if bits == 32:
-        return col.cast("array<float>")
-    steps = float((1 << bits) - 1)
-    return F.transform(
-        col.cast("array<double>"),
-        lambda x: F.round((F.least(F.greatest(x, F.lit(-1.0)), F.lit(1.0)) + 1.0) / 2.0 * steps)
-        .cast("int"),
+        return f"CAST({col} AS ARRAY<FLOAT>)"
+    steps = S.double((1 << bits) - 1)
+    return (
+        f"transform(CAST({col} AS ARRAY<DOUBLE>), x -> CAST(round("
+        f"(least(greatest(x, -1.0D), 1.0D) + 1.0D) / 2.0D * {steps}) AS INT))"
     )
 
 
-def _dequantize_expr(col, bits: int):
+def _dequantize_sql(col: str, bits: int) -> str:
     if bits in (32, 64):
-        return col.cast("array<double>")
-    steps = float((1 << bits) - 1)
-    return F.transform(col, lambda q: q.cast("double") / steps * 2.0 - 1.0)
+        return f"CAST({col} AS ARRAY<DOUBLE>)"
+    steps = S.double((1 << bits) - 1)
+    return f"transform({col}, q -> CAST(q AS DOUBLE) / {steps} * 2.0D - 1.0D)"
 
 
 class Collection:
@@ -635,13 +637,7 @@ class Collection:
         files, which may predate an index."""
         raw = self._raw(manifest=self.storage.manifest_at(version), declared=False)
         have = set(raw.columns)
-        cols = [
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
-            F.col("metadata"),
-        ]
-        cols += [F.col(c) for c in self._index_cols() if c in have]
-        return raw.select(*cols)
+        return raw.selectExpr(*self._decoded([c for c in self._index_cols() if c in have]))
 
     def changes_between(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level change feed between two readable versions (CDC —
@@ -771,7 +767,7 @@ class Collection:
         index_cols = self._index_cols() if indexed else []
         out = df.select(
             F.col("id").cast("long"),
-            _quantize_expr(F.col("vector"), self.options.quantization).alias("vector_enc"),
+            F.expr(_quantize_sql(S.ident("vector"), self.options.quantization)).alias("vector_enc"),
             self._meta_expr(df).alias("metadata"),
             *index_cols,
         ).withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(self.options.n_buckets)))
@@ -781,18 +777,18 @@ class Collection:
             for path, spec in self.options.promoted.items():
                 out = out.withColumn(
                     spec["col"],
-                    promoted_col(F.col("metadata"), path, spec["type"]),
+                    promoted_col("metadata", path, spec["type"]),
                 )
         if indexed:
             return out.select(*[c for c in out.columns if c not in index_cols], *index_cols)
         if self.index is not None:
-            dec = _dequantize_expr(F.col("vector_enc"), self.options.quantization)
+            dec = F.expr(_dequantize_sql(S.ident("vector_enc"), self.options.quantization))
             out = self.index.with_signatures(out.withColumn("_vec", dec), "_vec").drop("_vec")
         if self.pq_index is not None:
-            dec = _dequantize_expr(F.col("vector_enc"), self.options.quantization)
+            dec = F.expr(_dequantize_sql(S.ident("vector_enc"), self.options.quantization))
             out = self.pq_index.encode(out.withColumn("_vec", dec), "_vec").drop("_vec")
         if self.ivf_index is not None:
-            dec = _dequantize_expr(F.col("vector_enc"), self.options.quantization)
+            dec = F.expr(_dequantize_sql(S.ident("vector_enc"), self.options.quantization))
             out = self.ivf_index.with_cells(out.withColumn("_vec", dec), "_vec").drop("_vec")
         return out
 
@@ -817,7 +813,7 @@ class Collection:
         ``spark.sql.execution.arrow.localRelationThreshold``."""
         bits = self.options.quantization
         vec = local.select(
-            _dequantize_expr(_quantize_expr(F.col("vector"), bits), bits)
+            F.expr(_dequantize_sql(_quantize_sql(S.ident("vector"), bits), bits))
         )
         if local.isLocal():
             mat = np.array([r[0] for r in vec.collect()], dtype=np.float64)
@@ -883,17 +879,19 @@ class Collection:
                         "scan construction; re-merge on a fresh manifest"
                     ) from e
                 continue
-            if "bucket" in df.columns:
-                return df
             # Spark's listing skips a path that vanished after its
-            # existence check, so a scan whose EVERY file a concurrent
-            # commit reclaimed in that window lists no file and has no
-            # `bucket` partition column: the same stale scan (a merge
-            # over it failed to resolve `bucket` in the storm test)
+            # existence check, so a scan some of whose files a
+            # concurrent commit reclaimed in that window silently reads
+            # fewer rows (and one that lost EVERY file has no `bucket`
+            # partition column: a merge over it failed to resolve
+            # `bucket` in the storm test). A listing shorter than the
+            # manifest's file list is the same stale scan.
+            if _listed_file_count(df) == len(set(paths)):
+                return df
             if manifest is not None:
                 raise ManifestConflictError(
-                    "every data file reclaimed by a concurrent commit during "
-                    "scan construction; re-merge on a fresh manifest"
+                    "data file reclaimed by a concurrent commit during "
+                    "scan listing; re-merge on a fresh manifest"
                 )
         raise ManifestConflictError(
             f"live scan lost the reclaim race {_MAX_COMMIT_RETRIES} times"
@@ -912,33 +910,27 @@ class Collection:
         manifest: dict | None = None,
     ) -> DataFrame:
         """Decoded view: id, vector ARRAY<DOUBLE>, metadata (+ lsh sigs)."""
-        raw = self._raw(buckets, manifest=manifest)
-        cols = [
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
-            F.col("metadata"),
-        ]
-        cols += [F.col(c) for c in self._index_cols()]
+        extra = self._index_cols()
         if self.options.promoted and self.metadata_type is None:
             # promoted hot-path columns ride along so the pushdown
             # shadow of a filter can bind to them (result projections
             # drop them at the end of every search path)
-            cols += [F.col(s["col"]) for s in self.options.promoted.values()]
-        return raw.select(*cols)
+            extra += [s["col"] for s in self.options.promoted.values()]
+        return self._raw(buckets, manifest=manifest).selectExpr(*self._decoded(extra))
+
+    def _decoded(self, extra: list[str]) -> list[str]:
+        """The decoded projection as ``selectExpr`` strings (one py4j
+        call for the whole view): id, the dequantized vector, metadata,
+        then the ``extra`` stored columns."""
+        vector = _dequantize_sql(S.ident("vector_enc"), self.options.quantization)
+        return ["id", f"{vector} AS vector", "metadata", *map(S.column, extra)]
 
     def _decoded_plain(self, manifest: dict) -> DataFrame:
         """(id, vector, metadata) decoded view of a manifest snapshot
         WITHOUT index-column projection — the reindex paths read the
         pre-index files through this and encode them with the new
         index state."""
-        raw = self._raw(manifest=manifest)
-        return raw.select(
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias(
-                "vector"
-            ),
-            F.col("metadata"),
-        )
+        return self._raw(manifest=manifest).selectExpr(*self._decoded([]))
 
     # ---- mutation (AddDocument / UpdateDocument / removeDocument,
     #      collection.go:427-521) ----
@@ -1138,7 +1130,10 @@ class Collection:
 
         def step(man):
             cur = self._raw(buckets=[b], manifest=man)
-            if not cur.where(F.col("id") == doc_id).limit(1).count():
+            # ids are unique, so the probe collects at most one row: one
+            # job with a task per bucket file and no LIMIT (a global
+            # limit under count() plans an exchange: a second job)
+            if not cur.where(f"id = {operator.index(doc_id)}L").select("id").collect():
                 raise KeyError(f"document {doc_id} not found")
             updated = cur.withColumn(
                 "metadata",
@@ -1154,7 +1149,7 @@ class Collection:
                 for path, spec in self.options.promoted.items():
                     updated = updated.withColumn(
                         spec["col"],
-                        promoted_col(F.col("metadata"), path, spec["type"]),
+                        promoted_col("metadata", path, spec["type"]),
                     )
             self._commit_buckets(updated, [b], base_manifest=man, small_write=True)
 
@@ -1198,7 +1193,7 @@ class Collection:
     def get(self, doc_id: int) -> Row | None:
         """Point lookup — opens only the id's bucket (closed-form)."""
         [b] = self._buckets_for_ids([doc_id])
-        rows = self.df(buckets=[b]).where(F.col("id") == doc_id).collect()
+        rows = self.df(buckets=[b]).where(f"id = {operator.index(doc_id)}L").collect()
         return rows[0] if rows else None
 
     def get_all_ids(self) -> list[int]:
@@ -1511,9 +1506,10 @@ class Collection:
             return None
         return min(ok, key=lambda p: p["cand_frac"])
 
-    def _promoted_hint(self, filter: str):
+    def _promoted_hint(self, filter: str) -> str | None:
         """Pushable shadow of a filter string over the promoted
-        columns, or None when nothing in the filter is promoted."""
+        columns (SQL text), or None when nothing in the filter is
+        promoted."""
         if not (self.options.promoted and self.metadata_type is None):
             return None
         from syzgydb_spark.query.parser import parse
@@ -1611,7 +1607,7 @@ class Collection:
         if filter:
             # promoted hot-path shadow: pre-filter ONCE at the scan so
             # every tier (including the string-filter exact path, which
-            # bypasses _filter_pred) gets codegen + pushdown on the
+            # bypasses _filter_sql) gets codegen + pushdown on the
             # promoted conjuncts; the exact variant predicate still
             # runs downstream (the hint is conservative)
             hint = self._promoted_hint(filter)
@@ -1629,7 +1625,7 @@ class Collection:
             # reference pre-filter semantics: the filter runs before
             # ranking (collection.go:592)
             if filter:
-                df = df.where(self._filter_pred(filter))
+                df = df.where(self._filter_sql(filter))
             if precision == "ivf":
                 res = self.ivf_index.search(
                     df, vector, k,
@@ -1646,19 +1642,12 @@ class Collection:
                     # prune on at scale), then the ADC lookup-table
                     # scan + exact re-rank runs over only the probed
                     # candidates — compressed AND cell-pruned.
-                    cells = self.ivf_index.probe_cells(vector, n_probes or 4)
-                    pred = F.col("ivf_cell").isin(cells)
+                    pred = self.ivf_index.cell_sql(vector, n_probes or 4)
                     if observation is not None:
                         # an Observation may appear in a plan only once:
                         # attach it on the candidate path; the metadata
                         # join reads the plain relation
-                        df = df.observe(
-                            observation,
-                            F.count(F.lit(1)).alias("points_total"),
-                            F.coalesce(F.sum(pred.cast("long")), F.lit(0)).alias(
-                                "points_searched"
-                            ),
-                        )
+                        df = knn.observe_searched(df, observation, pred)
                     df = df.where(pred)
                 elif observation is not None:
                     # ADC scans every (filtered) row's code
@@ -1673,7 +1662,7 @@ class Collection:
             precision != "exact" and self.index is not None and vector is not None and k > 0
         )
         if use_ann:
-            pred = self._filter_pred(filter) if filter else None
+            pred = self._filter_sql(filter) if filter else None
             res = self.index.search(
                 df, vector, k, radius=radius, filter=pred,
                 observation=observation, n_probes=n_probes,
@@ -1684,26 +1673,26 @@ class Collection:
                 # no LSH index is configured); attached here because
                 # knn.search has no observation hook
                 df = _observe_full_scan(df, observation)
+            if filter and self.metadata_type is not None:
+                # typed collections apply the compiled codegen
+                # predicate; untyped pass the string so knn.search
+                # applies the variant path's sub-variant hoisting
+                # (where_filter)
+                df, filter = df.where(self._filter_sql(filter)), None
             res = knn.search(
                 df,
                 vector,
                 k=k,
                 radius=radius,
-                # typed collections pass the compiled codegen predicate;
-                # untyped keep the string so knn.search applies the
-                # variant path's sub-variant hoisting (where_filter)
-                filter=(
-                    self._filter_pred(filter)
-                    if filter and self.metadata_type is not None
-                    else filter
-                ),
+                filter=filter,
                 method=self.options.distance_method,
                 offset=offset,
                 limit=limit,
                 id_order=id_order,
             )
-        cols = ["id", "metadata"] + (["distance"] if "distance" in res.columns else [])
-        return res.select(*cols)
+        # knn.search ranks (adds `distance`) unless it lists
+        ranked = use_ann or (vector is not None and (k > 0 or radius > 0.0))
+        return res.selectExpr("id", "metadata", *(["distance"] if ranked else []))
 
     def search_many(
         self,
@@ -1759,7 +1748,7 @@ class Collection:
                 "query_id LONG, query_vector ARRAY<DOUBLE>",
             )
         base = self.df()
-        df = base.where(self._filter_pred(filter)) if filter else base
+        df = base.where(self._filter_sql(filter)) if filter else base
         # tiers that scan every (filtered) row — including 'medium'
         # falling back to exact when no LSH index is configured; a
         # caller-created Observation must always end up attached to SOME
@@ -1813,28 +1802,32 @@ class Collection:
         )
         return res.select(*cols).orderBy("query_id", "distance", "id")
 
-    def _filter_pred(self, filter: str):
-        """Row-keeping predicate for a filter-language string. On a
+    def _filter_pred(self, filter: str) -> Column:
+        """:meth:`_filter_sql` as a Column."""
+        return F.expr(self._filter_sql(filter))
+
+    def _filter_sql(self, filter: str) -> str:
+        """Row-keeping SQL predicate for a filter-language string. On a
         schema'd collection (CollectionOptions.metadata_schema) this is
         the typed fast path: a plain codegen boolean over the struct/map
         column, with the conservative pushdown hint ANDed alongside so
         pushable conjuncts reach the parquet scan. Otherwise the
         reference-faithful variant path."""
-        if self.metadata_type is not None:
-            from syzgydb_spark.query.parser import parse
-            from syzgydb_spark.query.typed import compile_filter_typed, pushdown_hint
+        from syzgydb_spark.query.parser import parse
 
-            pred = compile_filter_typed(filter, "metadata", self.metadata_type)
-            if isinstance(self.metadata_type, T.StructType):
-                hint = pushdown_hint(
-                    parse(filter), F.col("metadata"), self.metadata_type
-                )
-                if hint is not None:
-                    pred = hint & pred
-            return pred
-        pred = F.coalesce(compile_filter(filter, "metadata"), F.lit(False))
-        hint = self._promoted_hint(filter)
-        return hint & pred if hint is not None else pred
+        if self.metadata_type is not None:
+            from syzgydb_spark.query.typed import pushdown_hint, typed_filter_sql
+
+            pred = typed_filter_sql(filter, "metadata", self.metadata_type)
+            hint = (
+                pushdown_hint(parse(filter), "metadata", self.metadata_type)
+                if isinstance(self.metadata_type, T.StructType)
+                else None
+            )
+        else:
+            pred = filter_sql(filter, "metadata")
+            hint = self._promoted_hint(filter)
+        return f"({hint} AND {pred})" if hint is not None else pred
 
     def percent_searched(self, vector) -> float:
         """candidates examined / total × 100 (collection.go:700-709)."""
@@ -1843,5 +1836,5 @@ class Collection:
         total = self.count()
         if total == 0:
             return 100.0
-        cand = self._raw().where(self.index.candidate_predicate(vector)).count()
+        cand = self._raw().where(self.index.candidate_sql(vector)).count()
         return 100.0 * cand / total

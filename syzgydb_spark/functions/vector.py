@@ -1,9 +1,12 @@
 """Vector scalar functions as Catalyst higher-order-function expressions.
 
 Semantics mirror the reference (/root/reference/collection.go:812-832,
-lshtree.go:10-44,136-156); execution is pure JVM expressions —
-``zip_with``/``aggregate``/``transform`` run inside whole-stage codegen,
-no Python per row, so these scale to arbitrarily wide scans.
+lshtree.go:10-44,136-156); execution is pure JVM expressions, no Python
+per row. ``zip_with``/``aggregate``/``transform`` are CodegenFallback:
+the operator holding them runs interpreted (a search's distance
+Project carries no ``*(n)`` codegen marker, while the scan-side Filter
+under it does), and each array fold in the expression tree is one
+interpreted pass over the vector per row.
 
 * Euclidean: sqrt(Σ (a-b)²)                        (collection.go:812-819)
 * Cosine / angular: acos(dot/(‖a‖·‖b‖))/π ∈ [0,1];
@@ -16,6 +19,10 @@ no Python per row, so these scale to arbitrarily wide scans.
 All functions cast inputs to ARRAY<DOUBLE> first so float32-stored
 embeddings (the 32-bit quantization tier) compare in double precision,
 matching the reference's float64 math.
+
+:func:`query_distance_sql` is the single-query form: the distance from
+a stored vector column to one query vector known on the driver, as SQL
+text with the query as one array literal.
 """
 
 from __future__ import annotations
@@ -24,6 +31,8 @@ import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from syzgydb_spark import sqltext as S
 
 
 def _dbl(v: Column | str) -> Column:
@@ -92,10 +101,10 @@ def cosine_distance_prenormed(
     vector → 1.0 — so the values are bit-identical to
     ``cosine_distance``; the difference is evaluation shape. In a
     candidate-pair re-rank the inlined form folds each norm TWICE per
-    pair (the zero test and the denominator both re-fold the array —
-    HOF aggregates are interpreted, no codegen subexpression
-    elimination applies): five interpreted array folds per candidate
-    pair. Computing the norms once per input ROW before the pair join
+    pair (the zero test and the denominator both re-fold the array:
+    the HOF folds are CodegenFallback, so the Project holding them is
+    interpreted and no subexpression elimination shares them): five
+    interpreted array folds per candidate pair. Computing the norms once per input ROW before the pair join
     leaves ONE fold (the dot product) per pair — the §1.2 "per-task
     work" reduction for every ANN re-rank. Catalyst cannot re-inline
     the norm columns through the join, so the shape is stable."""
@@ -183,6 +192,48 @@ def prenormed_pair_distance(data, queries, data_vec, query_vec, method):
         )
         return data, queries, dist, [_PAIR_NORM_D, _PAIR_NORM_Q]
     return data, queries, distance(F.col(data_vec), F.col(query_vec), method), []
+
+
+def _fold_sum_sql(arr: str) -> str:
+    """Σ over an ARRAY<DOUBLE>, left to right from 0.0 (the fold order
+    of :func:`dot_product` / :func:`l2_norm`)."""
+    return f"aggregate({arr}, 0.0D, (acc, x) -> acc + x)"
+
+
+def query_distance_sql(vector_col: str, query, method: str = "euclidean") -> str:
+    """SQL text of ``distance(vector_col, query, method)`` for ONE
+    driver-side query vector, values bit-identical to the Column form.
+
+    The query goes in as one ``array(…D)`` literal, not one Column
+    literal per component. For cosine the query's norm is a
+    driver-computed double, summed in the fold's own left-to-right
+    order (``acc + x*x`` from 0.0, then sqrt: the same IEEE operations
+    the JVM runs), so each row pays three array folds (the dot product
+    and its own norm twice: the zero test and the denominator) instead
+    of five."""
+    q = [float(x) for x in query]
+    vec = f"CAST({S.column(vector_col)} AS ARRAY<DOUBLE>)"
+    qarr = S.double_array(q)
+    method = method.lower()
+    if method in ("euclidean", "l2"):
+        return "sqrt({})".format(
+            _fold_sum_sql(f"zip_with({vec}, {qarr}, (x, y) -> (x - y) * (x - y))")
+        )
+    if method not in ("cosine", "angular"):
+        raise ValueError(f"unknown distance method {method!r}")
+    acc = 0.0
+    for x in q:
+        acc = acc + x * x
+    nq = math.sqrt(acc)
+    if nq == 0.0:
+        return S.double(1.0)  # a zero query is at distance 1.0 from every row
+    dot = _fold_sum_sql(f"zip_with({vec}, {qarr}, (x, y) -> x * y)")
+    nv = "sqrt({})".format(_fold_sum_sql(f"transform({vec}, x -> x * x)"))
+    clamped = f"least(greatest({dot} / ({nv} * {S.double(nq)}), -1.0D), 1.0D)"
+    return (
+        f"CASE WHEN ({nv} = 0.0D) THEN 1.0D "
+        f"ELSE (acos({clamped}) / {S.double(math.pi)}) END"
+    )
 
 
 def distance(a: Column | str, b: Column | str, method: str = "euclidean") -> Column:

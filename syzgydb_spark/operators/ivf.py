@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from syzgydb_spark.functions.vector import distance as dist_fn
+from syzgydb_spark.functions.vector import query_distance_sql
+from syzgydb_spark.operators.knn import observe_searched, rank_by_distance
 
 
 def _make_nearest_fn(centers: np.ndarray, method: str):
@@ -334,23 +335,19 @@ class IvfIndex:
         ``observation`` reports points_total / points_searched in the
         same pass (reference percent_searched, collection.go:700-709) —
         at the cost of scanning the ivf_cell column fully."""
-        cells = self.probe_cells(vector, n_probes)
-        pred = F.col("ivf_cell").isin(cells)
+        pred = self.cell_sql(vector, n_probes)
         if observation is not None:
-            df = df.observe(
-                observation,
-                F.count(F.lit(1)).alias("points_total"),
-                F.coalesce(F.sum(pred.cast("long")), F.lit(0)).alias("points_searched"),
-            )
+            df = observe_searched(df, observation, pred)
         cand = df.where(pred)
         if filter is not None:
             cand = cand.where(filter)
-        q = F.lit(list(vector)).cast("array<double>")
-        return (
-            cand.withColumn("distance", dist_fn(F.col(vec_col), q, self.method))
-            .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-            .limit(k)
-        )
+        dist = query_distance_sql(vec_col, vector, self.method)
+        return rank_by_distance(cand, dist, id_col, k)
+
+    def cell_sql(self, vector: Sequence[float], n_probes: int) -> str:
+        """``ivf_cell IN (the n_probes nearest cells)`` as SQL text."""
+        cells = self.probe_cells(vector, n_probes)
+        return f"ivf_cell IN ({', '.join(map(str, cells))})" if cells else "false"
 
     def knn_join(
         self,

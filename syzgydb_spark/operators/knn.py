@@ -30,7 +30,8 @@ from typing import Iterator, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from syzgydb_spark.functions.vector import distance as dist_fn
+from syzgydb_spark import sqltext as S
+from syzgydb_spark.functions.vector import query_distance_sql
 from syzgydb_spark.query.compiler import where_filter
 
 #: Largest query relation the Arrow-closure KNN paths will ship to the
@@ -154,14 +155,37 @@ def search(
             out = out.limit(limit)
         return out
 
-    q = F.lit(vector).cast("array<double>")
-    out = out.withColumn("distance", dist_fn(F.col(vector_col), q, method))
+    return rank_by_distance(
+        out, query_distance_sql(vector_col, vector, method), id_col, k, radius
+    )
+
+
+def observe_searched(df: DataFrame, observation, pred_sql: str) -> DataFrame:
+    """Attach ``observation`` to ``df``: ``points_total`` counts every
+    row, ``points_searched`` the rows the candidate predicate
+    ``pred_sql`` (SQL text) keeps — the reference's percent_searched
+    (collection.go:700-709) in the query's own pass."""
+    return df.observe(
+        observation,
+        F.expr("count(1) AS points_total"),
+        F.expr(f"coalesce(sum(CAST({pred_sql} AS BIGINT)), 0) AS points_searched"),
+    )
+
+
+def rank_by_distance(
+    df: DataFrame, dist_sql: str, id_col: str, k: int, radius: float = 0.0
+) -> DataFrame:
+    """``df`` with a ``distance`` column (SQL text ``dist_sql``), within
+    ``radius`` when it is > 0, ascending by (distance, id), the first
+    ``k`` rows when ``k`` > 0: the tail every single-query search
+    shares. Built from strings, a handful of py4j calls."""
+    out = df.withColumn("distance", F.expr(dist_sql))
     if radius > 0.0:
-        out = out.where(F.col("distance") <= radius)
-    out = out.orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    if k > 0:
-        out = out.limit(k)
-    return out
+        out = out.where(f"distance <= {S.double(radius)}")
+    # ascending is the default order; F.col(...).asc() would cost a
+    # dozen more round trips per key
+    out = out.sort(F.expr("distance"), F.expr(S.column(id_col)))
+    return out.limit(k) if k > 0 else out
 
 
 def knn_join(

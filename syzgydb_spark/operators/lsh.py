@@ -49,7 +49,8 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from syzgydb_spark.functions.vector import distance as dist_fn
+from syzgydb_spark.functions.vector import query_distance_sql
+from syzgydb_spark.operators.knn import observe_searched, rank_by_distance
 
 _FNV = np.int64(1099511628211)
 
@@ -215,14 +216,24 @@ class LshIndex:
         """OR of per-table signature memberships — pushdown-friendly
         (Parquet row-group stats can prune on the sig columns). With
         ``n_probes`` > 0, each table also matches its probe buckets."""
-        pred = F.lit(False)
+        return F.expr(self.candidate_sql(vector, n_probes))
+
+    def candidate_sql(self, vector: Sequence[float], n_probes: int = 0) -> str:
+        """:meth:`candidate_predicate` as SQL text (BIGINT literals, the
+        signature columns' type)."""
         if n_probes > 0:
-            for name, sigs in zip(self.sig_cols(), self.query_probe_signatures(vector, n_probes)):
-                pred = pred | F.col(name).isin(sigs)
+            terms = [
+                f"{name} IN ({', '.join(f'{s}L' for s in sigs)})"
+                for name, sigs in zip(
+                    self.sig_cols(), self.query_probe_signatures(vector, n_probes)
+                )
+            ]
         else:
-            for name, s in zip(self.sig_cols(), self.query_signatures(vector)):
-                pred = pred | (F.col(name) == F.lit(s))
-        return pred
+            terms = [
+                f"{name} = {s}L"
+                for name, s in zip(self.sig_cols(), self.query_signatures(vector))
+            ]
+        return f"({' OR '.join(terms)})" if terms else "false"
 
     def search(
         self,
@@ -231,7 +242,7 @@ class LshIndex:
         k: int,
         *,
         radius: float = 0.0,
-        filter: Column | None = None,
+        filter: Column | str | None = None,
         vec_col: str = "vector",
         id_col: str = "id",
         observation: Observation | None = None,
@@ -240,7 +251,8 @@ class LshIndex:
         """Single-query ANN: bucket-candidate filter → pre-filter →
         exact re-rank → top-k. ``n_probes`` > 0 additionally probes
         Hamming-adjacent buckets per table (multi-probe: the recall of
-        more tables without storing more signature columns).
+        more tables without storing more signature columns). ``filter``
+        is a boolean Column or SQL text.
 
         Pass an ``Observation`` to get the reference's per-search
         ``percent_searched`` metric (collection.go:700-709) in the SAME
@@ -249,21 +261,14 @@ class LshIndex:
         Note the metric requires counting all rows, so the scan can't
         skip row groups while it's on — same trade the reference makes
         by visiting points to count them."""
-        pred = self.candidate_predicate(vector, n_probes)
+        pred = self.candidate_sql(vector, n_probes)
         if observation is not None:
-            df = df.observe(
-                observation,
-                F.count(F.lit(1)).alias("points_total"),
-                F.coalesce(F.sum(pred.cast("long")), F.lit(0)).alias("points_searched"),
-            )
+            df = observe_searched(df, observation, pred)
         cand = df.where(pred)
         if filter is not None:
             cand = cand.where(filter)  # pre-filter before distance
-        q = F.lit(list(vector)).cast("array<double>")
-        out = cand.withColumn("distance", dist_fn(F.col(vec_col), q, self.method))
-        if radius > 0.0:
-            out = out.where(F.col("distance") <= radius)
-        return out.orderBy(F.col("distance").asc(), F.col(id_col).asc()).limit(k)
+        dist = query_distance_sql(vec_col, vector, self.method)
+        return rank_by_distance(cand, dist, id_col, k, radius)
 
     def knn_join(
         self,

@@ -31,10 +31,17 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
+from syzgydb_spark import sqltext as S
 from syzgydb_spark.query import parser as P
-from syzgydb_spark.query.compiler import CompileError, _ident_te
+from syzgydb_spark.query.compiler import (
+    CompileError,
+    _case,
+    _ident_te,
+    _not,
+    bind_root,
+)
+from syzgydb_spark.query.typed import HINT_OPS, combine_hints
 
 PROMOTABLE_TYPES = ("double", "string", "boolean")
 
@@ -54,7 +61,7 @@ def parse_path(path: str) -> list[str]:
     return names
 
 
-def promoted_col(metadata: Column, path: str, dtype: str) -> Column:
+def promoted_col(metadata: Column | str, path: str, dtype: str) -> Column:
     """The stored expression for a promoted path: the value AS THE
     FILTER LANGUAGE READS IT — typed when the stored JSON type
     matches, NULL on absent / type-mismatch / mid-path error — so a
@@ -64,12 +71,15 @@ def promoted_col(metadata: Column, path: str, dtype: str) -> Column:
         raise CompileError(
             f"unpromotable type {dtype!r}: expected one of {PROMOTABLE_TYPES}"
         )
-    te = _ident_te(
-        F.try_parse_json(metadata), [("field", n) for n in parse_path(path)]
-    )
-    val = {"double": te.dbl, "string": te.str_, "boolean": te.bool_}[dtype]()
-    # error rows (unparseable metadata, non-object mid-path) read NULL
-    return F.when(~F.coalesce(te.err(), F.lit(True)), val)
+    segments = [("field", n) for n in parse_path(path)]
+
+    def body(ref: str) -> str:
+        te = _ident_te(f"try_parse_json({ref})", segments)
+        val = {"double": te.dbl, "string": te.str_, "boolean": te.bool_}[dtype]()
+        # error rows (unparseable metadata, non-object mid-path) read NULL
+        return _case((_not(f"coalesce({te.err()}, true)"), val))
+
+    return bind_root(metadata, body)
 
 
 def _promoted_ref(node, mapping: dict):
@@ -82,77 +92,55 @@ def _promoted_ref(node, mapping: dict):
     return mapping.get(".".join(s[1] for s in node.segments))
 
 
-def _lit_for(value, dtype: str) -> Column | None:
+def _lit_for(value, dtype: str) -> str | None:
     """Literal as a native operand when its type category matches the
     promoted type (type-strict Go semantics: a cross-type comparison
     is never true, so no hint operand is needed)."""
     if isinstance(value, bool):
-        return F.lit(value) if dtype == "boolean" else None
+        return S.literal(value) if dtype == "boolean" else None
     if isinstance(value, (int, float)):
-        return F.lit(float(value)) if dtype == "double" else None
+        return S.double(value) if dtype == "double" else None
     if isinstance(value, str):
-        return F.lit(value) if dtype == "string" else None
+        return S.string(value) if dtype == "string" else None
     return None
 
 
-def promoted_hint(node, mapping: dict) -> Column | None:
+def promoted_hint(node, mapping: dict) -> str | None:
     """Conservative pushable shadow of the filter AST over promoted
-    physical columns. ``mapping``: dotted path → (column name, type).
-    Same contract as ``typed.pushdown_hint``: AND the result next to
-    the exact predicate; ``!=``/NOT/EXISTS contribute nothing (their
-    Go-truth covers nil rows the columns read as NULL)."""
-    if isinstance(node, P.BinOp):
-        if node.op == "AND":
-            l = promoted_hint(node.left, mapping)
-            r = promoted_hint(node.right, mapping)
-            if l is not None and r is not None:
-                return l & r
-            return l if l is not None else r
-        if node.op == "OR":
-            l = promoted_hint(node.left, mapping)
-            r = promoted_hint(node.right, mapping)
-            return (l | r) if l is not None and r is not None else None
-        if node.op in ("==", "<", "<=", ">", ">=",
-                       "CONTAINS", "STARTS_WITH", "ENDS_WITH"):
-            ref = _promoted_ref(node.left, mapping)
-            if ref is None or not isinstance(node.right, P.Lit):
+    physical columns, as SQL text. ``mapping``: dotted path → (column
+    name, type). Same contract as ``typed.pushdown_hint``: AND the
+    result next to the exact predicate; ``!=``/NOT/EXISTS contribute
+    nothing (their Go-truth covers nil rows the columns read as NULL)."""
+
+    def leaf(n) -> str | None:
+        if isinstance(n, P.BinOp) and n.op in HINT_OPS:
+            ref = _promoted_ref(n.left, mapping)
+            if ref is None or not isinstance(n.right, P.Lit):
                 return None
             colname, dtype = ref
-            if node.op in ("CONTAINS", "STARTS_WITH", "ENDS_WITH") and dtype != "string":
+            if n.op in ("CONTAINS", "STARTS_WITH", "ENDS_WITH") and dtype != "string":
                 return None
-            lit = _lit_for(node.right.value, dtype)
+            lit = _lit_for(n.right.value, dtype)
             if lit is None:
                 return None
-            fcol = F.col(colname)
-            return {
-                "==": lambda: fcol == lit,
-                "<": lambda: fcol < lit,
-                "<=": lambda: fcol <= lit,
-                ">": lambda: fcol > lit,
-                ">=": lambda: fcol >= lit,
-                "CONTAINS": lambda: fcol.contains(lit),
-                "STARTS_WITH": lambda: fcol.startswith(lit),
-                "ENDS_WITH": lambda: fcol.endswith(lit),
-            }[node.op]()
-    if isinstance(node, P.In) and not node.negated:
-        ref = _promoted_ref(node.expr, mapping)
-        if ref is None or not isinstance(node.array, P.ArrayLit):
-            return None
-        colname, dtype = ref
-        lits = []
-        for item in node.array.items:
-            if not isinstance(item, P.Lit):
+            return HINT_OPS[n.op].format(f=S.column(colname), v=lit)
+        if isinstance(n, P.In) and not n.negated:
+            ref = _promoted_ref(n.expr, mapping)
+            if ref is None or not isinstance(n.array, P.ArrayLit):
                 return None
-            if item.value is None:
-                # tri-state nil==nil can be TRUE; isin() never says
-                # true for NULL → no sound narrowing (typed.py parity)
-                return None
-            nl = _lit_for(item.value, dtype)
-            if nl is not None:
-                lits.append(
-                    float(item.value)
-                    if dtype == "double" and not isinstance(item.value, bool)
-                    else item.value
-                )
-        return F.col(colname).isin(lits) if lits else F.lit(False)
-    return None
+            colname, dtype = ref
+            lits = []
+            for item in n.array.items:
+                if not isinstance(item, P.Lit):
+                    return None
+                if item.value is None:
+                    # tri-state nil==nil can be TRUE; IN never says
+                    # true for NULL → no sound narrowing (typed.py parity)
+                    return None
+                nl = _lit_for(item.value, dtype)
+                if nl is not None:
+                    lits.append(nl)
+            return f"({S.column(colname)} IN ({', '.join(lits)}))" if lits else "false"
+        return None
+
+    return combine_hints(node, leaf)

@@ -36,17 +36,27 @@ cases excluded (tests/test_filter_typed.py).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from syzgydb_spark import sqltext as S
 from syzgydb_spark.query import parser as P
 from syzgydb_spark.query.compiler import (
+    NULL_BOOL,
     ArrayLitTE,
+    BoolTE,
     Compiler,
     CompileError,
     TE,
-    _null_bool,
+    _and,
+    _as_double,
+    _case,
+    _false_if_null,
+    _is_null,
+    _not,
+    _not_null,
+    _or,
     _strict_eq,
+    bind_root,
 )
 from syzgydb_spark.query.parser import parse
 
@@ -60,6 +70,14 @@ def _is_obj_type(dt) -> bool:
     return isinstance(dt, (T.StructType, T.MapType))
 
 
+def _struct_field(cur: str, name: str) -> str:
+    """``cur[name]`` (``Column.__getitem__``) on a struct. The analyzer
+    needs the key as a literal, so it is written the way Spark renders
+    a string literal: quote and backslash backslash-escaped."""
+    key = name.replace("\\", "\\\\").replace("'", "\\'")
+    return f"{cur}['{key}']"
+
+
 class TypedTE(TE):
     """A value with a statically-known Spark type.
 
@@ -68,53 +86,53 @@ class TypedTE(TE):
     typed accessors are constants or plain column casts — all codegen.
     """
 
-    def __init__(self, col: Column | None, dtype, err: Column | None = None):
+    def __init__(self, col: str | None, dtype, err: str | None = None):
         self.col = col          # None ⇔ statically nil (absent top-level key)
         self.dtype = dtype
-        self._err = err if err is not None else F.lit(False)
+        self._err = err if err is not None else "false"
 
-    def dbl(self) -> Column:
+    def dbl(self) -> str:
         if self.col is not None and isinstance(self.dtype, _NUMERIC):
-            return self.col.cast("double")
+            return _as_double(self.col)
         return super().dbl()
 
-    def str_(self) -> Column:
+    def str_(self) -> str:
         if self.col is not None and isinstance(self.dtype, T.StringType):
             return self.col
         return super().str_()
 
-    def bool_(self) -> Column:
+    def bool_(self) -> str:
         if self.col is not None and isinstance(self.dtype, T.BooleanType):
             return self.col
         return super().bool_()
 
-    def arr(self) -> Column | None:
+    def arr(self) -> str | None:
         return self.col if isinstance(self.dtype, T.ArrayType) else None
 
-    def is_arr(self) -> Column:
+    def is_arr(self) -> str:
         if self.col is None or not isinstance(self.dtype, T.ArrayType):
-            return F.lit(False)
-        return self.col.isNotNull()
+            return "false"
+        return _not_null(self.col)
 
-    def is_obj(self) -> Column:
+    def is_obj(self) -> str:
         if self.col is None or not _is_obj_type(self.dtype):
-            return F.lit(False)
-        return self.col.isNotNull()
+            return "false"
+        return _not_null(self.col)
 
-    def is_nil(self) -> Column:
+    def is_nil(self) -> str:
         if self.col is None:
-            return ~self._err
-        return self.col.isNull() & ~self._err
+            return _not(self._err)
+        return _and(_is_null(self.col), _not(self._err))
 
-    def err(self) -> Column:
+    def err(self) -> str:
         return self._err
 
-    def exists_(self) -> Column:
+    def exists_(self) -> str:
         """Path evaluates without error (compiler.go:335-340)."""
-        return ~self._err
+        return _not(self._err)
 
     # -- hooks consumed by compiler._array_eq / _length --
-    def native_eq(self, other: "TypedTE") -> Column | None:
+    def native_eq(self, other: "TypedTE") -> str | None:
         """DeepEqual on typed arrays/structs/maps: Spark native
         equality when the static types are compatible; statically
         false otherwise (type-strict, like reflect.DeepEqual)."""
@@ -126,9 +144,9 @@ class TypedTE(TE):
             return None
         # compare on type SHAPE: DataType.__eq__ includes nullability /
         # containsNull metadata, so structurally identical arrays with
-        # different inferred nullability would wrongly report lit(False)
+        # different inferred nullability would wrongly report false
         if self.dtype.simpleString() == other.dtype.simpleString():
-            return self.col == other.col
+            return f"({self.col} = {other.col})"
         # numeric arrays of different widths compare numerically
         # (Go decodes every number to float64)
         if (
@@ -137,33 +155,32 @@ class TypedTE(TE):
             and isinstance(self.dtype.elementType, _NUMERIC)
             and isinstance(other.dtype.elementType, _NUMERIC)
         ):
-            return self.col.cast("array<double>") == other.col.cast("array<double>")
-        return F.lit(False)
+            return f"(CAST({self.col} AS ARRAY<DOUBLE>) = CAST({other.col} AS ARRAY<DOUBLE>))"
+        return "false"
 
-    def eq_array_lit(self, lit: ArrayLitTE) -> Column:
+    def eq_array_lit(self, lit: ArrayLitTE) -> str:
         if self.col is None or not isinstance(self.dtype, T.ArrayType):
-            return F.lit(False)
+            return "false"
         et = self.dtype.elementType
-        cond = self.col.isNotNull() & (F.size(self.col) == len(lit.items))
+        conds = [_not_null(self.col), f"(size({self.col}) = {len(lit.items)})"]
         for i, item in enumerate(lit.items):
-            elem = TypedTE(F.get(self.col, i), et)
-            cond = cond & _strict_eq(elem, item)
-        return cond
+            conds.append(_strict_eq(TypedTE(f"get({self.col}, {i})", et), item))
+        return _and(*conds)
 
-    def obj_length_col(self) -> Column | None:
+    def obj_length_col(self) -> str | None:
         """LENGTH() of a map/struct (key count)."""
         if self.col is None:
             return None
         if isinstance(self.dtype, T.MapType):
-            return F.size(F.map_keys(self.col)).cast("double")
+            return _as_double(f"size(map_keys({self.col}))")
         if isinstance(self.dtype, T.StructType):
-            return F.lit(float(len(self.dtype.fields)))
+            return S.double(len(self.dtype.fields))
         return None
 
 
-def _resolve(col: Column, dtype, segments) -> TypedTE:
+def _resolve(col: str, dtype, segments) -> TypedTE:
     """Static schema walk tracking where Go would error per row."""
-    err = F.lit(False)
+    err = "false"
     cur, cur_t = col, dtype
     for i, seg in enumerate(segments):
         if seg[0] == "field":
@@ -176,36 +193,38 @@ def _resolve(col: Column, dtype, segments) -> TypedTE:
                 # `.length` of an array (compiler.go:238-241); arrays
                 # can't be stepped into further
                 if i != len(segments) - 1:
-                    return TypedTE(None, T.NullType(), F.lit(True))
-                return TypedTE(F.size(cur).cast("double"), T.DoubleType(), err | cur.isNull())
+                    return TypedTE(None, T.NullType(), "true")
+                return TypedTE(
+                    _as_double(f"size({cur})"), T.DoubleType(), _or(err, _is_null(cur))
+                )
             if isinstance(cur_t, T.StructType):
                 if name in cur_t.fieldNames():
                     if i > 0:
-                        err = err | cur.isNull()  # "." on nil → error
-                    cur = cur[name]
+                        err = _or(err, _is_null(cur))  # "." on nil → error
+                    cur = _struct_field(cur, name)
                     cur_t = cur_t[name].dataType
                 elif i == 0:
                     # top-level missing key: nil, no error
-                    return TypedTE(None, T.NullType(), F.lit(False))
+                    return TypedTE(None, T.NullType(), "false")
                 else:
-                    return TypedTE(None, T.NullType(), F.lit(True))
+                    return TypedTE(None, T.NullType(), "true")
             elif isinstance(cur_t, T.MapType) and isinstance(cur_t.keyType, T.StringType):
-                present = F.coalesce(F.map_contains_key(cur, name), F.lit(False))
+                present = _false_if_null(f"map_contains_key({cur}, {S.string(name)})")
                 if i > 0:
-                    err = err | cur.isNull() | ~present
-                cur = F.try_element_at(cur, F.lit(name))
+                    err = _or(err, _is_null(cur), _not(present))
+                cur = f"try_element_at({cur}, {S.string(name)})"
                 cur_t = cur_t.valueType
             else:
                 # "." on a non-object: top level never errors (nil),
                 # nested errors (compiler.go:222-245, 433-449)
-                return TypedTE(None, T.NullType(), F.lit(i > 0))
+                return TypedTE(None, T.NullType(), S.literal(i > 0))
         elif seg[0] == "index":
             if isinstance(cur_t, T.ArrayType):
-                err = err | cur.isNull()
-                cur = F.get(cur, int(seg[1]))  # OOB → nil, no error
+                err = _or(err, _is_null(cur))
+                cur = f"get({cur}, {int(seg[1])})"  # OOB → nil, no error
                 cur_t = cur_t.elementType
             else:
-                return TypedTE(None, T.NullType(), F.lit(True))
+                return TypedTE(None, T.NullType(), "true")
         else:
             raise CompileError("[*] only allowed as the ANY/ALL array expression")
     return TypedTE(cur, cur_t, err)
@@ -213,15 +232,13 @@ def _resolve(col: Column, dtype, segments) -> TypedTE:
 
 class TypedCompiler(Compiler):
     """Compiles against a (column, static-DataType) root instead of a
-    variant column — roots are passed as ``(col, dtype)`` tuples."""
+    variant column — roots are passed as ``(text, dtype)`` tuples."""
 
     def _ident(self, root, segments) -> TE:
         col, dtype = root
         return _resolve(col, dtype, segments)
 
     def _exists(self, node: P.Exists, root) -> TE:
-        from syzgydb_spark.query.compiler import BoolTE
-
         expr = self.compile(node.expr, root)
         if not hasattr(expr, "exists_"):
             raise CompileError("EXISTS requires a field path")
@@ -229,20 +246,18 @@ class TypedCompiler(Compiler):
             return BoolTE(expr.exists_())
         # DOES NOT EXIST: top-level key membership (compiler.go:60-76)
         if not isinstance(node.expr, P.Ident) or len(node.expr.segments) != 1:
-            return BoolTE(_null_bool())
+            return BoolTE(NULL_BOOL)
         name = node.expr.segments[0][1]
         col, dtype = root
         if isinstance(dtype, T.StructType):
             # schema-complete rows: membership is static (see module
             # docstring for the absent-vs-null caveat)
-            return BoolTE(F.lit(name not in dtype.fieldNames()))
+            return BoolTE(S.literal(name not in dtype.fieldNames()))
         if isinstance(dtype, T.MapType):
-            return BoolTE(~F.coalesce(F.map_contains_key(col, name), F.lit(False)))
-        return BoolTE(F.lit(False))
+            return BoolTE(_not(_false_if_null(f"map_contains_key({col}, {S.string(name)})")))
+        return BoolTE("false")
 
     def _any_all(self, node: P.AnyAll, root) -> TE:
-        from syzgydb_spark.query.compiler import BoolTE
-
         if not isinstance(node.array, P.Ident):
             raise CompileError("ANY/ALL require a field path array expression")
         segs = node.array.segments
@@ -251,14 +266,25 @@ class TypedCompiler(Compiler):
         arr_te = self._ident(root, segs)
         arr = arr_te.arr()
         if arr is None:
-            return BoolTE(_null_bool())
-        elem_t = arr_te.dtype.elementType
+            return BoolTE(NULL_BOOL)
+        el = self._lambda_var()
+        cond = self.compile(node.cond, (el, arr_te.dtype.elementType)).bool_()
+        fn = "exists" if node.kind == "ANY" else "forall"
+        return BoolTE(_case(
+            (_and(arr_te.is_arr(), _not(arr_te.err())), f"{fn}({arr}, {el} -> {cond})"),
+            otherwise=NULL_BOOL,
+        ))
 
-        def cond(el: Column) -> Column:
-            return self.compile(node.cond, (el, elem_t)).bool_()
 
-        col = F.exists(arr, cond) if node.kind == "ANY" else F.forall(arr, cond)
-        return BoolTE(F.when(arr_te.is_arr() & ~arr_te.err(), col).otherwise(_null_bool()))
+def typed_filter_sql(query: str, root: str, dtype, *, params: dict | None = None) -> str:
+    """Row-keeping SQL predicate of a filter string over the typed
+    metadata expression ``root`` (SQL text): rows whose evaluation
+    would error in the reference are excluded (NULL→false). A NULL
+    metadata root is a per-row error like the variant path's
+    unparsable JSON (the reference drops such rows) — without the
+    guard a NULL map/struct root would evaluate as an empty document."""
+    pred = TypedCompiler(params).compile(parse(query), (root, dtype)).bool_()
+    return _and(_false_if_null(pred), _not_null(root))
 
 
 def compile_to_column_typed(
@@ -270,9 +296,10 @@ def compile_to_column_typed(
 ) -> Column:
     """Compile a filter string against a statically-typed metadata
     column to a tri-state boolean Column (NULL = Go error)."""
-    col = F.col(metadata) if isinstance(metadata, str) else metadata
     node = parse(query)
-    return TypedCompiler(params).compile(node, (col, dtype)).bool_()
+    return bind_root(
+        metadata, lambda ref: TypedCompiler(params).compile(node, (ref, dtype)).bool_()
+    )
 
 
 def compile_filter_typed(
@@ -282,25 +309,15 @@ def compile_filter_typed(
     *,
     params: dict | None = None,
 ) -> Column:
-    """Row-keeping predicate over a typed metadata column: rows whose
-    evaluation would error in the reference are excluded (NULL→false).
-    The result is a plain codegen-friendly boolean expression —
-    pushdown-eligible, no variant machinery. A NULL metadata root is a
-    per-row error like the variant path's unparsable JSON (the
-    reference drops such rows) — without the guard a NULL map/struct
-    root would evaluate as an empty document."""
-    col = F.col(metadata) if isinstance(metadata, str) else metadata
-    return (
-        F.coalesce(
-            compile_to_column_typed(query, metadata, dtype, params=params),
-            F.lit(False),
-        )
-        & col.isNotNull()
-    )
+    """Row-keeping predicate over a typed metadata column
+    (:func:`typed_filter_sql` as a Column). The result is a plain
+    codegen-friendly boolean expression — pushdown-eligible, no variant
+    machinery."""
+    return bind_root(metadata, lambda ref: typed_filter_sql(query, ref, dtype, params=params))
 
 
-def _field_path(node, col: Column, dtype):
-    """(column, leaf type) for a pure struct-field path, else None."""
+def _field_path(node, col: str, dtype):
+    """(text, leaf type) for a pure struct-field path, else None."""
     if not isinstance(node, P.Ident):
         return None
     cur, cur_t = col, dtype
@@ -309,84 +326,91 @@ def _field_path(node, col: Column, dtype):
             return None
         if seg[1] not in cur_t.fieldNames():
             return None
-        cur = cur[seg[1]]
+        cur = _struct_field(cur, seg[1])
         cur_t = cur_t[seg[1]].dataType
     return cur, cur_t
 
 
-def _native_lit(value, ftype) -> Column | None:
+def _native_lit(value, ftype) -> str | None:
     """Literal as a native comparison operand when its type category
     matches the field's (Go's type-strict semantics make cross-type
     comparisons false/error → no shadow needed)."""
     if isinstance(value, bool):
-        return F.lit(value) if isinstance(ftype, T.BooleanType) else None
+        return S.literal(value) if isinstance(ftype, T.BooleanType) else None
     if isinstance(value, (int, float)):
-        return F.lit(value) if isinstance(ftype, _NUMERIC) else None
+        return S.literal(value) if isinstance(ftype, _NUMERIC) else None
     if isinstance(value, str):
-        return F.lit(value) if isinstance(ftype, T.StringType) else None
+        return S.literal(value) if isinstance(ftype, T.StringType) else None
     return None
 
 
-def pushdown_hint(node, col: Column, dtype) -> Column | None:
-    """A CONSERVATIVE pushable approximation of the filter: a plain
-    Catalyst predicate implied by "the Go evaluation returns true".
-    ANDed next to the exact tri-state predicate it lets simple
-    comparisons reach the parquet scan (row-group pruning), which the
-    CASE-WHEN error-tracking form cannot. Soundness: every emitted
-    conjunct is true whenever the Go result is true (type-strict ops
-    are only true on matching non-nil operands). ``!=``/NOT/EXISTS
-    contribute nothing (their Go-truth covers nil/mismatch rows)."""
-    if isinstance(node, P.BinOp):
-        if node.op == "AND":
-            l = pushdown_hint(node.left, col, dtype)
-            r = pushdown_hint(node.right, col, dtype)
-            if l is not None and r is not None:
-                return l & r
-            return l if l is not None else r
-        if node.op == "OR":
-            l = pushdown_hint(node.left, col, dtype)
-            r = pushdown_hint(node.right, col, dtype)
-            return (l | r) if l is not None and r is not None else None
-        if node.op in ("==", "<", "<=", ">", ">=",
-                       "CONTAINS", "STARTS_WITH", "ENDS_WITH"):
-            f = _field_path(node.left, col, dtype)
-            if f is None or not isinstance(node.right, P.Lit):
+#: filter-language comparison → SQL template over (field, literal)
+HINT_OPS = {
+    "==": "({f} = {v})",
+    "<": "({f} < {v})",
+    "<=": "({f} <= {v})",
+    ">": "({f} > {v})",
+    ">=": "({f} >= {v})",
+    "CONTAINS": "contains({f}, {v})",
+    "STARTS_WITH": "startswith({f}, {v})",
+    "ENDS_WITH": "endswith({f}, {v})",
+}
+
+
+def combine_hints(node, hint_of) -> str | None:
+    """The AND/OR skeleton every pushdown shadow shares: an AND keeps
+    whichever sides have a hint, an OR needs both; ``hint_of`` supplies
+    the leaves."""
+    if isinstance(node, P.BinOp) and node.op in ("AND", "OR"):
+        l = combine_hints(node.left, hint_of)
+        r = combine_hints(node.right, hint_of)
+        if l is not None and r is not None:
+            return _and(l, r) if node.op == "AND" else _or(l, r)
+        return (l if l is not None else r) if node.op == "AND" else None
+    return hint_of(node)
+
+
+def pushdown_hint(node, col: str, dtype) -> str | None:
+    """A CONSERVATIVE pushable approximation of the filter, as SQL text
+    over the struct expression ``col``: a plain Catalyst predicate
+    implied by "the Go evaluation returns true". ANDed next to the
+    exact tri-state predicate it lets simple comparisons reach the
+    parquet scan (row-group pruning), which the CASE-WHEN
+    error-tracking form cannot. Soundness: every emitted conjunct is
+    true whenever the Go result is true (type-strict ops are only true
+    on matching non-nil operands). ``!=``/NOT/EXISTS contribute
+    nothing (their Go-truth covers nil/mismatch rows)."""
+
+    def leaf(n) -> str | None:
+        if isinstance(n, P.BinOp) and n.op in HINT_OPS:
+            f = _field_path(n.left, col, dtype)
+            if f is None or not isinstance(n.right, P.Lit):
+                return None
+            lit = _native_lit(n.right.value, f[1])
+            return None if lit is None else HINT_OPS[n.op].format(f=f[0], v=lit)
+        if isinstance(n, P.In) and not n.negated:
+            f = _field_path(n.expr, col, dtype)
+            if f is None or not isinstance(n.array, P.ArrayLit):
                 return None
             fcol, ftype = f
-            lit = _native_lit(node.right.value, ftype)
-            if lit is None:
-                return None
-            return {
-                "==": lambda: fcol == lit,
-                "<": lambda: fcol < lit,
-                "<=": lambda: fcol <= lit,
-                ">": lambda: fcol > lit,
-                ">=": lambda: fcol >= lit,
-                "CONTAINS": lambda: fcol.contains(lit),
-                "STARTS_WITH": lambda: fcol.startswith(lit),
-                "ENDS_WITH": lambda: fcol.endswith(lit),
-            }[node.op]()
-    if isinstance(node, P.In) and not node.negated:
-        f = _field_path(node.expr, col, dtype)
-        if f is None or not isinstance(node.array, P.ArrayLit):
-            return None
-        fcol, ftype = f
-        lits = []
-        for item in node.array.items:
-            if not isinstance(item, P.Lit):
-                return None
-            if item.value is None:
-                # a null in the list can match a nil/absent field
-                # (tri-state nil==nil is TRUE); isin() can never say
-                # true for NULL, so no sound narrowing exists — emit
-                # no hint rather than an unsound lit(False)/isin
-                return None
-            nl = _native_lit(item.value, ftype)
-            if nl is not None:
-                lits.append(item.value)
-        # no same-type non-null literal in the list ⇒ Go can never say true
-        return fcol.isin(lits) if lits else F.lit(False)
-    return None
+            lits = []
+            for item in n.array.items:
+                if not isinstance(item, P.Lit):
+                    return None
+                if item.value is None:
+                    # a null in the list can match a nil/absent field
+                    # (tri-state nil==nil is TRUE); IN can never say
+                    # true for NULL, so no sound narrowing exists — emit
+                    # no hint rather than an unsound false/IN
+                    return None
+                nl = _native_lit(item.value, ftype)
+                if nl is not None:
+                    lits.append(nl)
+            # no same-type non-null literal in the list ⇒ Go can never say true
+            return f"({fcol} IN ({', '.join(lits)}))" if lits else "false"
+        return None
+
+    return combine_hints(node, leaf)
 
 
 def where_filter_typed(
@@ -404,10 +428,12 @@ def where_filter_typed(
             f"column {metadata!r} is {dtype.simpleString()}, not struct/map — "
             "use query.compiler.where_filter for JSON-string/variant metadata"
         )
-    node = parse(query)
-    pred = compile_filter_typed(query, metadata, dtype, params=params)
-    hint = pushdown_hint(node, F.col(metadata), dtype) if isinstance(
-        dtype, T.StructType
-    ) else None
+    root = S.column(metadata)
+    pred = typed_filter_sql(query, root, dtype, params=params)
+    hint = (
+        pushdown_hint(parse(query), root, dtype)
+        if isinstance(dtype, T.StructType)
+        else None
+    )
     out = df.where(hint) if hint is not None else df
     return out.where(pred)

@@ -103,7 +103,7 @@ def _parse_bytes(s: str) -> int:
         return 128 * 1024 * 1024
 
 
-def scan_splits_estimate(df) -> int | None:
+def scan_splits_estimate(df, enough: int | None = None) -> int | None:
     """Estimate how many scan splits the DataFrame's file sources
     yield, from the *plan only* — ``df.inputFiles()`` resolves the
     logical plan's relations without converting to an RDD or running
@@ -122,17 +122,24 @@ def scan_splits_estimate(df) -> int | None:
     planning reads.
 
     Returns None for in-memory / non-file plans (no files): callers
-    should treat those as small.
+    should treat those as small. With ``enough``, a listing of at
+    least ``enough`` files returns its file count, a lower bound that
+    already meets the caller's threshold, without fetching one path
+    per py4j round trip or reading any size.
     """
     import math
     import os as _os
 
     try:
-        files = df.inputFiles()
+        jfiles = df._jdf.inputFiles()
     except Exception:
         return None
-    if not files:
+    n_files = len(jfiles)
+    if not n_files:
         return None
+    if enough is not None and n_files >= enough:
+        return n_files  # every file is at least one split
+    files = list(jfiles)
     max_bytes = _parse_bytes(
         df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )

@@ -16,6 +16,37 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def py4j_calls(spark):
+    """``py4j_calls(fn)`` runs ``fn`` and returns ``(its result, the
+    py4j round trips it made)``, counted at the gateway client's
+    ``send_command``. Only the calling thread's commands count: py4j's
+    finalizer thread releases dropped proxies on its own schedule."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def run(fn):
+        calls = 0
+        caller = threading.get_ident()
+
+        def counting(*args, **kwargs):
+            nonlocal calls
+            if threading.get_ident() == caller:
+                calls += 1
+            return real(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            client.send_command = real
+        return out, calls
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
